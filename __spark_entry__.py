@@ -82,31 +82,31 @@ def entry(spark: SparkSession) -> DataFrame:
 #:    round: with obligations spilling, no slot may hold an
 #:    already-proven query (guard rule 3).
 FRONT_50 = [
-    "stream_click_purchases_outer", "fuzzy_customer_pairs",
-    "ann_eval_metrics", "basket_pairs",
+    "events_hourly", "fk_orphan_orders",
+    "incremental_scan", "lang_median_tokens",
+    "large_orders", "order_priority_counts",
+    "promo_revenue", "returned_revenue_by_customer",
+    "scd2_user_history", "small_quantity_revenue",
+    "stream_click_purchases", "stream_click_purchases_outer",
+    "stream_events_hourly", "stream_user_sessions",
+    "top_customers", "top_suppliers",
+    "user_value_interpolation", "whole_row_dups_lineitem",
+    "customer_rfm", "customer_running_spend",
+    "event_transitions", "events_cube",
+    "events_hourly_dense", "fuzzy_customer_pairs",
+    "idle_customer_balance", "join_key_skew",
+    "market_share", "segment_year_pivot",
+    "supplier_diversity", "volume_shipping",
+    "zonemap_pruned_orders", "ann_eval_metrics",
+    "approx_profile_orders", "basket_pairs",
     "boilerplate_ngrams", "ccnet_buckets",
-    "cms_heavy_tokens", "cms_merged_heavy_tokens",
-    "cohort_retention", "contaminated_docs",
-    "copurchase_triangles", "corpus_filter",
+    "chunk_dedup_docs", "cms_heavy_tokens",
+    "cms_merged_heavy_tokens", "cohort_retention",
+    "contaminated_docs", "copurchase_triangles",
+    "corpus_filter", "curve_locality",
     "dedup_clusters", "dedup_eval_metrics",
-    "dsir_selected", "exact_dedup_docs",
-    "hard_negatives", "ivfpq_topk",
-    "language_id", "minhash_lsh_dupes",
-    "ngram_jaccard_pairs", "part_pagerank_weighted",
-    "pmi_collocations", "pq_topk_adc",
-    "pq_words", "quality_score",
-    "repetition_ratio", "simhash_pairs",
-    "stream_cms_heavy_tokens", "ann_ivf",
-    "ann_multiprobe", "ann_multitable",
-    "ann_sign_lsh", "benford_profile",
-    "bm25_search", "boilerplate_removed_docs",
-    "chunked_docs", "cleaned_docs",
-    "cluster_safe_splits", "containment_dup_pairs",
-    "cosine_topk", "curation_funnel",
-    "dedup_survivors", "doc_fingerprints",
-    "dup_cluster_sizes", "dup_rate_by_source",
-    "embedding_clusters", "embedding_clusters_2level",
-    "embedding_near_dup", "hybrid_search",
+    "discounted_revenue", "dsir_selected",
+    "events_daily_drift", "events_value_drift",
 ]
 
 

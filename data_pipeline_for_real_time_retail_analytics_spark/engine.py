@@ -10,6 +10,24 @@ semantics: every detect probe and extract IS a distributed Spark plan, so
 the reference's ThreadPoolExecutor disappears; validation compiles to one
 aggregate scan; loads land in catalog-managed tables.
 
+One scan per step:
+
+* validation profiles with sketches (``ValidationEngine(exact=False)``:
+  HLL++ ``unique_count``, ``percentile_approx`` ``median``), so the
+  aggregate needs no Expand or extra exchange. Everything the quality
+  gate reads — row count, rule counts, schema uniqueness/PK counts, the
+  number of profiled columns — stays exact. Build a ``ValidationEngine``
+  directly for exact profile contents;
+* ``load`` counts its rows with an ``Observation`` on the write instead
+  of a separate ``count()``;
+* ``FileSource`` reuses the schema its first read inferred.
+
+A detector advances its stored watermark when it reports a change.
+``run_once`` calls each event's ``undo`` hook when the extract,
+validation or quality gate raises or the load reports failure, so the
+next cycle sees the same rows again. A process that dies between detect
+and load still leaves the watermark advanced.
+
 Thin by design — each method delegates to the operator modules, which
 remain independently usable.
 """
@@ -18,7 +36,8 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.detection import ChangeEvent, MultiSourceChangeDetector
 from .plans.validation import (
@@ -51,7 +70,9 @@ class Engine:
         self.spark = spark
         self._sources: dict[str, Any] = {}
         self._detector = MultiSourceChangeDetector()
-        self._validator = ValidationEngine(schemas=schemas or {}, rules=rules or [])
+        self._validator = ValidationEngine(
+            schemas=schemas or {}, rules=rules or [], exact=False
+        )
         self._sink = WarehouseSink(spark, database=database)
         self.max_retries = max_retries
         self.retry_delay = retry_delay
@@ -104,7 +125,16 @@ class Engine:
     def load(
         self, df: DataFrame, target_table: str, mode: str = "append"
     ) -> LoadResult:
-        return self._sink.load(df, target_table, mode=mode)
+        """Write ``df``; ``rows_loaded`` is counted by an ``Observation``
+        riding the write, so the input is scanned once."""
+        obs = Observation()
+        result = self._sink.load(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            target_table, mode=mode, count_rows=False,
+        )
+        if result.success:
+            result.rows_loaded = obs.get["rows"]
+        return result
 
     # -- end-to-end -------------------------------------------------------
     def run_once(
@@ -118,19 +148,36 @@ class Engine:
     ) -> tuple[ValidationReport, LoadResult | None]:
         """One detect-gated ingestion pass for a single source: skip if the
         probe reports no changes (reference skip-if-no-changes,
-        operators.py:74-80), else extract → validate → gate → load."""
+        operators.py:74-80), else extract → validate → gate → load.
+
+        If a step raises or the load reports failure, the detected events'
+        watermark advances are undone before returning or re-raising."""
+        events: list[ChangeEvent] = []
         if source_id in self._detector._sources:
             events = self.detect().get(source_id, [])
             if not events:  # skip-if-no-changes: empty report, no load
                 return ValidationReport(table_name=table_name, data_quality_score=1.0), None
-        df = self.extract(source_id, **extract_kwargs)
-        report = self.validate(df, table_name)
-        if not self.quality_gate(report):
-            if fail_on_gate:
-                raise ValueError(
-                    f"quality gate failed for {table_name}: "
-                    f"score={report.data_quality_score}"
-                )
-            df = self._validator.invalid_row_filter(df)
-        result = self.load(df, target_table or table_name, mode=mode)
+        try:
+            df = self.extract(source_id, **extract_kwargs)
+            report = self.validate(df, table_name)
+            if not self.quality_gate(report):
+                if fail_on_gate:
+                    raise ValueError(
+                        f"quality gate failed for {table_name}: "
+                        f"score={report.data_quality_score}"
+                    )
+                df = self._validator.invalid_row_filter(df)
+            result = self.load(df, target_table or table_name, mode=mode)
+        except BaseException:
+            _undo(events)
+            raise
+        if not result.success:
+            _undo(events)
         return report, result
+
+
+def _undo(events: list[ChangeEvent]) -> None:
+    """Revert the events' watermark advances, newest first."""
+    for e in reversed(events):
+        if e.undo is not None:
+            e.undo()

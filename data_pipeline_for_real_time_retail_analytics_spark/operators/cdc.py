@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import threading
 from datetime import datetime, timezone
 from enum import Enum
@@ -48,6 +49,12 @@ class WatermarkStore:
     timestamps; ``min_watermark`` gives the min-across-tables rollup
     (change_detection.py:200-227). This is control-plane metadata — the
     streaming path replaces it with Spark's checkpointLocation.
+
+    A write goes to a temp file in the same directory and is renamed over
+    the old one (``os.replace`` is atomic on POSIX and Windows), so a
+    crash mid-write leaves the previous watermark readable instead of a
+    torn JSON file that ``get`` would read as "no watermark" — which
+    would replay all history into an append-only sink.
     """
 
     def __init__(self, root: str) -> None:
@@ -75,8 +82,26 @@ class WatermarkStore:
             "metadata": {},
         }
         with self._lock:
-            with open(self._path(source_id, table), "w") as fh:
-                json.dump(record, fh)
+            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
+            try:
+                with os.fdopen(fd, "w") as fh:
+                    json.dump(record, fh)
+                os.replace(tmp, self._path(source_id, table))
+            except BaseException:
+                os.unlink(tmp)
+                raise
+
+    def reset(self, source_id: str, table: str, ts: datetime | None) -> None:
+        """Put back a watermark read earlier with ``get``: ``None`` removes
+        the file, so the store reads as never having had one."""
+        if ts is not None:
+            self.update(source_id, table, ts)
+            return
+        with self._lock:
+            try:
+                os.remove(self._path(source_id, table))
+            except FileNotFoundError:
+                pass
 
     def min_watermark(self, source_id: str, tables: list[str]) -> datetime | None:
         marks = [self.get(source_id, t) for t in tables]

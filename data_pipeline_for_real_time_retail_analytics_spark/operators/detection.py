@@ -28,7 +28,13 @@ from .cdc import ChangeType, WatermarkStore, log_cdc_probe, timestamp_cdc_probe
 
 @dataclass
 class ChangeEvent:
-    """One detected change (reference: src/interfaces/base.py:30-38)."""
+    """One detected change (reference: src/interfaces/base.py:30-38).
+
+    ``undo`` (set by detectors that advance a stored watermark) puts that
+    watermark back. A consumer whose extract or load fails calls it, so
+    the next detection reports the same rows again instead of skipping
+    past a batch that never landed.
+    """
 
     source_id: str
     table_name: str
@@ -36,12 +42,23 @@ class ChangeEvent:
     timestamp: datetime
     affected_rows: int
     metadata: dict[str, Any] = field(default_factory=dict)
+    undo: Callable[[], None] | None = field(default=None, repr=False, compare=False)
+
+
+def _advance(store: WatermarkStore, source_id: str, table: str,
+             ts: datetime) -> Callable[[], None]:
+    """Advance the stored watermark to ``ts``; return the hook that
+    restores the one it replaced (none at all if there was none)."""
+    prev = store.get(source_id, table)
+    store.update(source_id, table, ts)
+    return lambda: store.reset(source_id, table, prev)
 
 
 class TimestampChangeDetector:
     """C6: rows with ts strictly after the stored watermark → one event;
     watermark advances to max(ts) (reference:
-    change_detection.py:145-198)."""
+    change_detection.py:145-198). The advance happens at detection, as in
+    the reference; the event's ``undo`` reverts it."""
 
     def __init__(self, store: WatermarkStore, ts_col: str = "ts") -> None:
         self.store = store
@@ -55,7 +72,7 @@ class TimestampChangeDetector:
         if not row or not row["change_count"]:
             return []
         max_ts = row["max_ts"]
-        self.store.update(source_id, table, max_ts)
+        undo = _advance(self.store, source_id, table, max_ts)
         return [
             ChangeEvent(
                 source_id,
@@ -64,13 +81,15 @@ class TimestampChangeDetector:
                 max_ts,
                 row["change_count"],
                 {"detection_method": "timestamp"},
+                undo,
             )
         ]
 
 
 class LogChangeDetector:
     """C7: changelog probe grouped by op code → one event per operation
-    (reference: change_detection.py:238-268)."""
+    (reference: change_detection.py:238-268). The watermark advances to
+    the newest event at detection; every event carries the same ``undo``."""
 
     def __init__(self, store: WatermarkStore, op_col: str = "operation",
                  ts_col: str = "change_timestamp") -> None:
@@ -93,7 +112,10 @@ class LogChangeDetector:
                 )
             )
         if events:
-            self.store.update(source_id, table, max(e.timestamp for e in events))
+            undo = _advance(self.store, source_id, table,
+                            max(e.timestamp for e in events))
+            for e in events:
+                e.undo = undo
         return events
 
 

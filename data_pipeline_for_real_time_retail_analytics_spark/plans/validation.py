@@ -27,9 +27,13 @@ Semantics parity notes (each deliberate, each cited):
   weights error=1.0 / warning=0.5 / info=0.1, rounded to 3dp
   (validators.py:392-412).
 
-Scale switch: ``exact=False`` swaps ``count_distinct`` →
-``approx_count_distinct`` and ``median`` → ``percentile_approx`` for the
-100 TB path (SURVEY.md §4).
+Scale switch: ``exact=False`` swaps the profile's ``unique_count`` to
+``approx_count_distinct`` (HLL++) and its ``median`` to
+``percentile_approx`` for the 100 TB path (SURVEY.md §4). Both are plain
+partial aggregates, so the plan loses the Expand (one projection per
+exact distinct column) and its extra exchange. Schema uniqueness/PK
+constraint counts stay exact ``count_distinct`` either way: they are
+violation counts, and the quality score and gate read them.
 """
 
 from __future__ import annotations
@@ -238,6 +242,8 @@ class ValidationEngine:
     # -- expression assembly -------------------------------------------------
 
     def _distinct(self, c: Column) -> Column:
+        """Profile ``unique_count``; constraint counts use exact
+        ``count_distinct`` regardless of ``exact``."""
         return F.count_distinct(c) if self.exact else F.approx_count_distinct(c)
 
     def _median(self, c: Column) -> Column:
@@ -248,7 +254,8 @@ class ValidationEngine:
     ) -> dict[str, Column]:
         """Constraint counts (reference: validators.py:154-216). All are
         plain aggregates — uniqueness/PK use count-minus-distinct so the
-        whole check rides the same single scan."""
+        whole check rides the same single scan. They are exact whatever
+        ``exact`` says: a sketch could report a phantom violation."""
         present = set(df.columns)
         exprs: dict[str, Column] = {}
         for col, expected in schema.columns.items():
@@ -263,12 +270,12 @@ class ValidationEngine:
                 exprs[f"null_violation__{col}"] = _count_if(F.col(col).isNull())
         for col in schema.unique_columns:
             if col in present:
-                exprs[f"dup_violation__{col}"] = F.count(F.col(col)) - self._distinct(
+                exprs[f"dup_violation__{col}"] = F.count(F.col(col)) - F.count_distinct(
                     F.col(col)
                 )
         pk = [c for c in schema.primary_key if c in present]
         if pk and len(pk) == len(schema.primary_key):
-            exprs["pk_violation"] = F.count(F.lit(1)) - self._distinct(
+            exprs["pk_violation"] = F.count(F.lit(1)) - F.count_distinct(
                 F.struct(*[F.col(c) for c in pk])
             )
         return exprs

@@ -45,6 +45,15 @@ class FileSource:
     The reference's ``ORDER BY timestamp`` on incremental extracts
     (data_sources.py:227) is deliberately dropped: a global sort is a
     needless shuffle at scale; ordering belongs at the sink if anywhere.
+
+    Without an explicit ``schema``, a parquet source stores the schema
+    its first ``read`` infers and hands it to every later read, so a
+    repeated probe/extract starts no schema-inference job. Without
+    ``mergeSchema`` Spark infers from a single footer anyway, so the
+    stored schema is the one each read would have found; files that later
+    add columns are read with the stored columns, as they would be by
+    that inference. With ``mergeSchema`` (read option or session conf)
+    every read infers afresh, since new files can widen the union.
     """
 
     source_id: str
@@ -52,12 +61,26 @@ class FileSource:
     fmt: str = "parquet"
     options: dict[str, str] = field(default_factory=dict)
     schema: Any = None  # StructType; None = parquet self-describing
+    _inferred: Any = field(default=None, init=False, repr=False, compare=False)
+
+    def _keeps_inferred(self, spark: SparkSession) -> bool:
+        if self.fmt != "parquet":
+            return False
+        opts = {k.lower(): v for k, v in self.options.items()}
+        merge = opts.get(
+            "mergeschema", spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+        )
+        return str(merge).lower() != "true"
 
     def read(self, spark: SparkSession) -> DataFrame:
         reader = spark.read.format(self.fmt).options(**self.options)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.load(self.path)
+        schema = self.schema if self.schema is not None else self._inferred
+        if schema is not None:
+            return reader.schema(schema).load(self.path)
+        df = reader.load(self.path)
+        if self._keeps_inferred(spark):
+            self._inferred = df.schema
+        return df
 
     def extract(
         self,

@@ -1,9 +1,11 @@
 """CDC operator tests — semantics mirror the reference's change-detection
 suite (reference: tests/unit/test_change_detection.py)."""
 
+import os
 import threading
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_for_real_time_retail_analytics_spark.operators.cdc import (
@@ -45,6 +47,37 @@ def test_watermark_concurrent_writes(tmp_path):
     for t in threads:
         t.join()
     assert all(store.get("s", f"t{i}") is not None for i in range(5))
+
+
+def test_watermark_torn_write_keeps_previous(tmp_path, monkeypatch):
+    """A write that dies partway leaves the old watermark readable."""
+    from data_pipeline_for_real_time_retail_analytics_spark.operators import cdc
+
+    store = WatermarkStore(str(tmp_path))
+    before = datetime(2024, 1, 5, 12, 30, 0)
+    store.update("s", "t", before)
+
+    def torn(obj, fh):
+        fh.write('{"last_processed_timestamp": "2024-')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(cdc.json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        store.update("s", "t", datetime(2024, 2, 1))
+    monkeypatch.undo()
+    assert store.get("s", "t") == before
+    assert os.listdir(tmp_path) == ["s__t.json"]  # no temp file left behind
+
+
+def test_watermark_reset(tmp_path):
+    store = WatermarkStore(str(tmp_path))
+    store.update("s", "t", datetime(2024, 1, 2))
+    store.reset("s", "t", datetime(2024, 1, 1))
+    assert store.get("s", "t") == datetime(2024, 1, 1)
+    store.reset("s", "t", None)
+    assert store.get("s", "t") is None
+    assert os.listdir(tmp_path) == []
+    store.reset("s", "t", None)  # already absent: no error
 
 
 def test_incremental_read_strictly_greater(spark, sf_dir):

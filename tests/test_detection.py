@@ -57,6 +57,39 @@ def test_log_detector_groups_by_op(spark, tmp_path):
     assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 5)
 
 
+def test_timestamp_detector_undo_restores_watermark(spark, tmp_path):
+    store = WatermarkStore(str(tmp_path))
+    det = TimestampChangeDetector(store, ts_col="ts")
+    first = _events(spark, [(dt.datetime(2024, 1, 1, 10, 0), 1)])
+    [event] = det.detect("s1", "t1", first)
+    event.undo()  # there was no watermark before: no file at all
+    assert store.get("s1", "t1") is None
+    assert list(tmp_path.iterdir()) == []
+
+    det.detect("s1", "t1", first)
+    more = _events(spark, [(dt.datetime(2024, 1, 1, 10, 0), 1),
+                           (dt.datetime(2024, 1, 1, 12, 0), 2)])
+    [event] = det.detect("s1", "t1", more)
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 12, 0)
+    event.undo()
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 0)
+    # the undone batch is reported again
+    assert [e.affected_rows for e in det.detect("s1", "t1", more)] == [1]
+
+
+def test_log_detector_undo_shared_by_events(spark, tmp_path):
+    store = WatermarkStore(str(tmp_path))
+    store.update("s1", "t1", dt.datetime(2024, 1, 1, 9, 0))
+    changelog = spark.createDataFrame(
+        [("I", dt.datetime(2024, 1, 1, 10, 0)), ("D", dt.datetime(2024, 1, 1, 10, 2))],
+        "operation string, change_timestamp timestamp",
+    )
+    events = LogChangeDetector(store).detect("s1", "t1", changelog)
+    assert len(events) == 2 and events[0].undo is events[1].undo
+    events[0].undo()
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 9, 0)
+
+
 def test_polling_detector_respects_interval():
     clock = {"t": 0.0}
     polls = {"n": 0}

@@ -3,6 +3,8 @@ dispatch + retry/backoff, factory registry, incremental pushdown.
 Mirrors the reference's test strategy (SURVEY.md §5: test_data_sources /
 test_extractors semantics) on Spark."""
 
+import uuid
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -255,6 +257,41 @@ def test_file_source_incremental_pushdown(spark, sf_dir):
     assert "PushedFilters" in plan and "o_orderdate" in plan
     full = src.read(spark).where(F.col("o_orderdate") > F.lit("1998-01-01")).count()
     assert df.count() == full
+
+
+def _jobs_started(spark, read):
+    """Spark jobs started while ``read()`` builds its DataFrame."""
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "FileSource.read")
+    try:
+        read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_file_source_reuses_inferred_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(10).selectExpr("id", "id * 2 AS v").write.parquet(path)
+    src = FileSource(source_id="t", path=path)
+    assert _jobs_started(spark, lambda: src.read(spark)) >= 1  # inference
+    stored = src._inferred
+    assert stored is not None and stored.fieldNames() == ["id", "v"]
+    assert _jobs_started(spark, lambda: src.read(spark)) == 0
+    assert src._inferred is stored
+    assert src.extract(spark, timestamp_column="v", watermark=10).count() == 4
+
+
+def test_file_source_merge_schema_infers_every_read(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(f"{path}/part=1")
+    src = FileSource(source_id="t", path=path, options={"mergeSchema": "true"})
+    src.read(spark)
+    assert src._inferred is None
+    spark.range(3).selectExpr("id", "'x' AS extra").write.parquet(f"{path}/part=2")
+    assert "extra" in src.read(spark).columns  # the union widened
+    assert src._inferred is None
 
 
 def test_jdbc_reader_options_watermark_and_partitioning():

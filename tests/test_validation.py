@@ -205,3 +205,81 @@ def test_single_pass_plan(spark, engine):
     plan = eng.compile_plan(df, "customer")
     physical = plan._jdf.queryExecution().executedPlan().toString()
     assert physical.count("FileScan") == 1
+
+
+# -- exact=False: sketches in the profile, exact counts everywhere else ------
+
+_EXACT_KEYS = ("total_rows", "rule__", "dup_violation__", "pk_violation",
+               "null_violation__", "type_invalid__")
+
+
+def test_approx_mode_keeps_gate_inputs_exact(spark, engine):
+    df = spark.createDataFrame(PROBLEM_ROWS, COLUMNS)
+    approx = ValidationEngine(schemas={"test_table": SCHEMA}, rules=RULES, exact=False)
+    want, got = _counts(engine, df), _counts(approx, df)
+    assert set(got) == set(want)
+    for key, value in want.items():
+        if key.startswith(_EXACT_KEYS):
+            assert got[key] == value, key
+    r_exact = engine.validate(df, "test_table")
+    r_approx = approx.validate(df, "test_table")
+    assert r_approx.total_rows == r_exact.total_rows == 5
+    assert (r_approx.errors, r_approx.warnings, r_approx.info) == (
+        r_exact.errors, r_exact.warnings, r_exact.info)
+    assert set(r_approx.column_stats) == set(r_exact.column_stats)
+    assert r_approx.data_quality_score == r_exact.data_quality_score
+    assert approx.quality_gate(r_approx) == engine.quality_gate(r_exact)
+
+
+def test_approx_mode_profile_within_sketch_error(spark, engine):
+    n = 100_001
+    df = spark.range(n).select(
+        F.col("id").cast("double").alias("x"),
+        (F.col("id") % 7919).alias("k"),
+    )
+    keyed = {"t": SchemaDefinition("t", unique_columns=["x"], primary_key=["x"])}
+    exact = ValidationEngine(schemas=keyed).validate(df, "t").column_stats
+    approx_report = ValidationEngine(schemas=keyed, exact=False).validate(df, "t")
+    approx = approx_report.column_stats
+    # x is a key: the constraint counts stay exact even where a sketch of
+    # 100k distinct values is not
+    assert approx_report.errors == [] and approx_report.data_quality_score == 1.0
+    # approx_count_distinct: HLL++ with relative standard deviation 0.05;
+    # allow three of them
+    for col in ("x", "k"):
+        want = exact[col]["unique_count"]
+        assert abs(approx[col]["unique_count"] - want) <= 0.15 * want, col
+    # percentile_approx (accuracy 10000) returns a value whose rank is
+    # within n / 10000 of the true median's; x equals its rank here
+    assert exact["x"]["median"] == 50_000.0
+    assert abs(approx["x"]["median"] - exact["x"]["median"]) <= n / 10_000
+    for stat in ("mean", "min", "max", "null_count", "zero_count"):
+        assert approx["x"][stat] == exact["x"][stat], stat
+    # the fixture is small enough for both sketches to be exact
+    fixture = spark.createDataFrame(CLEAN_ROWS, COLUMNS)
+    approx_fixture = ValidationEngine(
+        schemas={"test_table": SCHEMA}, rules=RULES, exact=False
+    ).validate(fixture, "test_table").column_stats
+    exact_fixture = engine.validate(fixture, "test_table").column_stats
+    for col, stats in exact_fixture.items():
+        assert approx_fixture[col]["unique_count"] == stats["unique_count"], col
+        if "median" in stats:
+            assert approx_fixture[col]["median"] == stats["median"], col
+
+
+def test_approx_mode_plan_has_no_expand(spark, sf_dir):
+    """Exact count_distinct over several columns plans an Expand (one
+    projection per distinct column) plus an extra exchange; the sketch
+    profile is plain partial aggregation."""
+    df = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    rules = [ValidationRule("bal", "range", "c_acctbal", Severity.WARNING,
+                            {"min": -1000, "max": 11000})]
+
+    def physical(exact):
+        plan = ValidationEngine(rules=rules, exact=exact).compile_plan(df, "customer")
+        return plan._jdf.queryExecution().executedPlan().toString()
+
+    assert "Expand" in physical(True)
+    approx = physical(False)
+    assert "Expand" not in approx
+    assert approx.count("FileScan") == 1
