@@ -1,57 +1,49 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract: the query registry and its DuckDB oracles.
 
 ``entry(spark)`` smoke-runs the flagship query at sf0.001.
-``queries()`` maps operator name → (spark, sf_dir) → DataFrame.
+``queries()`` maps query name → (spark, sf_dir) → DataFrame.
 ``oracle_sql()`` maps the same names → equivalent DuckDB SQL.
 Column names/aliases match between both sides (the driver hashes values
 after sorting columns by name).
+
+Every plan module in ``_MODULES`` exports a ``QUERIES`` dict and an
+``ORACLES`` dict over the same names; both registries are the union of
+those dicts, and a name defined by two modules is an error. Registering
+a query means adding both dict entries in its plan module (and the
+module here if it is new). The dicts are unordered as far as the
+contract goes: callers select by name.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from importlib import import_module
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
 from data_pipeline_for_real_time_retail_analytics_spark.plans import analytics as A
-from data_pipeline_for_real_time_retail_analytics_spark.plans import analytics2 as A2
-from data_pipeline_for_real_time_retail_analytics_spark.plans import analytics3 as A3
-from data_pipeline_for_real_time_retail_analytics_spark.plans import analytics4 as A4
-from data_pipeline_for_real_time_retail_analytics_spark.plans import behavior as BH
-from data_pipeline_for_real_time_retail_analytics_spark.plans import curation as CU
-from data_pipeline_for_real_time_retail_analytics_spark.plans import llm as L
-from data_pipeline_for_real_time_retail_analytics_spark.plans import llm_oracles as LO
-from data_pipeline_for_real_time_retail_analytics_spark.plans import profiling as PF
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_registry import (
-    PENDING_ORACLES,
-    PENDING_QUERIES,
+
+_PLANS = "data_pipeline_for_real_time_retail_analytics_spark.plans"
+
+_MODULES: tuple[ModuleType, ...] = tuple(
+    import_module(f"{_PLANS}.{name}")
+    for name in (
+        "analytics", "analytics2", "analytics3", "analytics4", "annevalq",
+        "approxq", "asofq", "audienceq", "behavior", "bloomdedupq", "bpeq",
+        "ccnetq", "chunkdedupq", "cleanq", "clusterstatq", "cmsq",
+        "containmentq", "contamq", "crossdupq", "curation", "cusumq",
+        "dedupevalq", "driftq", "dsirq", "embdriftq", "exportq", "funnelq",
+        "fuzzyq", "hardnegq", "hilbertq", "incannq", "ivfpqq", "kmvq",
+        "langquotaq", "lenbucketq", "llm", "markovq", "outlierq", "pagerankq",
+        "pairsimq", "phraseq", "pmiq", "pqq", "prioritysampleq", "profiling",
+        "rangejoinq", "resampleq", "scaleops", "searchq", "semdedupq",
+        "sessionattrq", "showcase", "sketchq", "skewq", "snapshotq", "splitsq",
+        "sqq", "streamattrq", "streamcmsq", "streamdriftq", "streamkmvq",
+        "streamq", "streamq2", "streamq3", "temporal", "training", "training2",
+        "trendq", "trianglesq", "udxq", "wpagerankq", "zonemapq", "zorderq",
+    )
 )
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r7 import (
-    PENDING_ORACLES as PENDING_ORACLES_R7,
-    PENDING_QUERIES as PENDING_QUERIES_R7,
-)
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r8 import (
-    PENDING_ORACLES as PENDING_ORACLES_R8,
-    PENDING_QUERIES as PENDING_QUERIES_R8,
-)
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r9 import (
-    PENDING_ORACLES as PENDING_ORACLES_R9,
-    PENDING_QUERIES as PENDING_QUERIES_R9,
-)
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r10 import (
-    PENDING_ORACLES as PENDING_ORACLES_R10,
-    PENDING_QUERIES as PENDING_QUERIES_R10,
-)
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r11 import (
-    PENDING_ORACLES as PENDING_ORACLES_R11,
-    PENDING_QUERIES as PENDING_QUERIES_R11,
-)
-from data_pipeline_for_real_time_retail_analytics_spark.plans import scaleops as SOP
-from data_pipeline_for_real_time_retail_analytics_spark.plans import showcase as S
-from data_pipeline_for_real_time_retail_analytics_spark.plans import streamq as SQ
-from data_pipeline_for_real_time_retail_analytics_spark.plans import temporal as TP
-from data_pipeline_for_real_time_retail_analytics_spark.plans import training as TR
-from data_pipeline_for_real_time_retail_analytics_spark.plans import training2 as TR2
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -59,753 +51,26 @@ def entry(spark: SparkSession) -> DataFrame:
     return A.revenue_by_segment(spark, "/root/testdata/sf0.001")
 
 
-#: The driver checks the FIRST 50 entries of queries() in insertion
-#: order; this list IS that window. Rotation rule (mechanized in
-#: tests/test_rotation_guard.py against ROTATION.json, amended r7):
-#: never-green queries MUST be front; stale queries (any closure file
-#: changed since their last green commit) fill the rest OLDEST-FIRST,
-#: and the overflow is recorded explicitly in ROTATION.json["deferred"]
-#: (every deferred query stays value-proven on the current tree by
-#: tests/test_oracle_parity.py). Composition this round (r13 — the
-#: first OPTIMIZATION round), recomputed mechanically with
-#: ``python rotation_front.py --write`` after the round's operator
-#: edits (dedup.py / pagerank.py / annevalq.py / streamcmsq.py /
-#: bpe.py and their closures) re-staled 77 queries:
-#:  * slots 1-27: every re-staled @94592b3 (r10) green — the oldest
-#:    obligations;
-#:  * slots 28-50: the 23 alphabetically-first re-staled @d31d35e
-#:    (r11) greens;
-#:  * deferred (ROTATION.json): the remaining 27 obligations (8
-#:    @d31d35e + 19 @f7f3c89 — youngest-first deferral holds; each
-#:    stays value-proven by the 174-pair parity suite on this tree).
-#:    The non-stale @52353f3/@6c9daba cohorts lose their slots this
-#:    round: with obligations spilling, no slot may hold an
-#:    already-proven query (guard rule 3).
-FRONT_50 = [
-    "events_hourly", "fk_orphan_orders",
-    "incremental_scan", "lang_median_tokens",
-    "large_orders", "order_priority_counts",
-    "promo_revenue", "returned_revenue_by_customer",
-    "scd2_user_history", "small_quantity_revenue",
-    "stream_click_purchases", "stream_click_purchases_outer",
-    "stream_events_hourly", "stream_user_sessions",
-    "top_customers", "top_suppliers",
-    "user_value_interpolation", "whole_row_dups_lineitem",
-    "customer_rfm", "customer_running_spend",
-    "event_transitions", "events_cube",
-    "events_hourly_dense", "fuzzy_customer_pairs",
-    "idle_customer_balance", "join_key_skew",
-    "market_share", "segment_year_pivot",
-    "supplier_diversity", "volume_shipping",
-    "zonemap_pruned_orders", "ann_eval_metrics",
-    "approx_profile_orders", "basket_pairs",
-    "boilerplate_ngrams", "ccnet_buckets",
-    "chunk_dedup_docs", "cms_heavy_tokens",
-    "cms_merged_heavy_tokens", "cohort_retention",
-    "contaminated_docs", "copurchase_triangles",
-    "corpus_filter", "curve_locality",
-    "dedup_clusters", "dedup_eval_metrics",
-    "discounted_revenue", "dsir_selected",
-    "events_daily_drift", "events_value_drift",
-]
+def merge_registry(modules: Iterable[ModuleType], attr: str) -> dict:
+    """Union of ``module.<attr>`` over ``modules``; raises ValueError
+    when two modules define the same name."""
+    merged: dict = {}
+    owner: dict[str, str] = {}
+    for mod in modules:
+        for name, value in getattr(mod, attr).items():
+            if name in merged:
+                raise ValueError(
+                    f"{attr} name {name!r} is defined by both "
+                    f"{owner[name]} and {mod.__name__}"
+                )
+            merged[name] = value
+            owner[name] = mod.__name__
+    return merged
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _registry()
-    front = {n: q[n] for n in FRONT_50}
-    # re-assigning an existing key does NOT move its position, so the
-    # merge keeps FRONT_50 as slots 1-50 and the registry's grouping
-    # (below) as the stable tail order
-    return {**front, **q}
-
-
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # grouped by family/registration round; driver order is imposed
-        # by FRONT_50 in queries() above
-        **PENDING_QUERIES_R11,
-        **PENDING_QUERIES_R10,
-        **PENDING_QUERIES_R9,
-        **PENDING_QUERIES_R8,
-        **PENDING_QUERIES_R7,
-        # pure-aggregation analytics.py family
-        "top_customers": A.top_customers,
-        "order_priority_counts": A.order_priority_counts,
-        "promo_revenue": A.promo_revenue,
-        "top_suppliers": A.top_suppliers,
-        "brand_stats": A.brand_stats,
-        "returned_revenue_by_customer": A.returned_revenue_by_customer,
-        "small_quantity_revenue": A.small_quantity_revenue,
-        "large_orders": A.large_orders,
-        "events_hourly": A.events_hourly,
-        "customer_order_distribution": A.customer_order_distribution,
-        # dedup family (operators/dedup.py)
-        "minhash_lsh_dupes": L.q_minhash_lsh_dupes,
-        "ngram_jaccard_pairs": L.q_ngram_jaccard_pairs,
-        "contaminated_docs": L.q_contaminated_docs,
-        "simhash_pairs": L.q_simhash_pairs,
-        "simhash_values": L.q_simhash_values,
-        "exact_dedup_docs": L.q_exact_dedup_docs,
-        "dedup_clusters": L.q_dedup_clusters,
-        "boilerplate_ngrams": CU.q_boilerplate_ngrams,
-        # textstats family (operators/textstats.py)
-        "token_entropy": L.q_token_entropy,
-        "token_stats": L.q_token_stats,
-        "language_id": L.q_language_id,
-        "quality_score": L.q_quality_score,
-        "tfidf_top_terms": L.q_tfidf_top_terms,
-        "repetition_ratio": L.q_repetition_ratio,
-        "corpus_filter": L.q_corpus_filter,
-        # streaming executions (plans/streamq.py)
-        "stream_events_hourly": SQ.q_stream_events_hourly,
-        "stream_user_sessions": SQ.q_stream_user_sessions,
-        "stream_click_purchases": SQ.q_stream_click_purchases,
-        # CDC / join shapes (plans/showcase.py)
-        "scd2_user_history": S.q_scd2_user_history,
-        "event_dedup": S.q_event_dedup,
-        "incremental_scan": S.q_incremental_scan,
-        "fk_orphan_orders": S.q_fk_orphan_orders,
-        "customers_without_orders": S.q_customers_without_orders,
-        "whole_row_dups_lineitem": S.q_whole_row_dups_lineitem,
-        # profiling / window (plans/profiling.py)
-        "price_quantiles": PF.q_price_quantiles,
-        "event_funnel": PF.q_event_funnel,
-        # profiling / training / trade analytics
-        "customer_running_spend": PF.q_customer_running_spend,
-        "segment_year_pivot": PF.q_segment_year_pivot,
-        "events_cube": PF.q_events_cube,
-        "events_hourly_dense": PF.q_events_hourly_dense,
-        "lm_perplexity": TR.q_lm_perplexity,
-        "packed_sequences": TR.q_packed_sequences,
-        "embedding_clusters": TR.q_embedding_clusters,
-        "volume_shipping": A2.q_volume_shipping,
-        "market_share": A2.q_market_share,
-        "idle_customer_balance": A2.q_idle_customer_balance,
-        # similarity / multimodal / sampling families
-        "ann_sign_lsh": L.q_ann_sign_lsh,
-        "ann_multiprobe": L.q_ann_multiprobe,
-        "ann_multitable": L.q_ann_multitable,
-        "ann_ivf": L.q_ann_ivf,
-        "embedding_near_dup": L.q_embedding_near_dup,
-        "cosine_topk": L.q_cosine_topk,
-        "multimodal_features": L.q_multimodal_features,
-        "mixture_sample_docs": CU.q_mixture_sample_docs,
-        "chunked_docs": L.q_chunked_docs,
-        "cleaned_docs": L.q_cleaned_docs,
-        "doc_fingerprints": L.q_doc_fingerprints,
-        "benford_profile": L.q_benford_profile,
-        "train_split_counts": L.q_train_split_counts,
-        "stratified_sample_docs": L.q_stratified_sample_docs,
-        # shards / incremental dedup / procurement / RFM / corpus
-        # composition / behavioral families
-        "shuffled_shards": TR.q_shuffled_shards,
-        "incremental_dedup_new_docs": L.q_incremental_dedup_new_docs,
-        "dedup_survivors": L.q_dedup_survivors,
-        "min_cost_supplier": A3.q_min_cost_supplier,
-        "important_parts": A3.q_important_parts,
-        "supplier_diversity": A3.q_supplier_diversity,
-        "promo_excess_suppliers": A3.q_promo_excess_suppliers,
-        "customer_rfm": A3.q_customer_rfm,
-        "lang_temperature_sample": TR2.q_lang_temperature_sample,
-        "quality_quota_prune": TR2.q_quality_quota_prune,
-        "dup_rate_by_source": TR2.q_dup_rate_by_source,
-        "cohort_retention": BH.q_cohort_retention,
-        "basket_pairs": BH.q_basket_pairs,
-        # r6 curation/maintenance registrations (plans/pending_registry)
-        **PENDING_QUERIES,
-        # r6 order-fulfilment analytics (plans/analytics4.py)
-        "shipping_priority": A4.q_shipping_priority,
-        "forecast_revenue_delta": A4.q_forecast_revenue_delta,
-        "late_shipment_priority": A4.q_late_shipment_priority,
-        "discounted_revenue": A4.q_discounted_revenue,
-        "waiting_suppliers": A4.q_waiting_suppliers,
-        # r6 scale maintenance (plans/scaleops.py)
-        "bloom_pruned_fetch": SOP.q_bloom_pruned_fetch,
-        "compacted_corpus": SOP.q_compacted_corpus,
-        # r≤4 cohort re-proved in r6
-        "pricing_summary": A.pricing_summary,
-        "revenue_by_segment": A.revenue_by_segment,
-        "validation_orders": S.q_validation_orders,
-        "profile_customer": S.q_profile_customer,
-        "fact_orders": S.q_fact_orders,
-        "user_sessions": TP.q_user_sessions,
-        "revenue_rollup": A.revenue_rollup,
-        "nation_revenue": A.nation_revenue,
-        "events_props_stats": A.events_props_stats,
-        "event_anomalies": A.event_anomalies,
-        "supplier_nation_profit": A.supplier_nation_profit,
-        "events_sliding": TP.q_events_sliding,
-        "click_attribution": TP.q_click_attribution,
-        "salted_event_rollup": TP.q_salted_event_rollup,
-        "cdc_timestamp_probe": S.q_cdc_timestamp_probe,
-        "cdc_log_probe": S.q_cdc_log_probe,
-        "staging_orders": S.q_staging_orders,
-        "dim_customers": S.q_dim_customers,
-        "merge_upsert": S.q_merge_upsert,
-        "cdc_apply_changes": S.q_cdc_apply_changes,
-    }
+    return merge_registry(_MODULES, "QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        # r11 registrations: the twenty r10-staged pairs (plans/pending_r11)
-        **PENDING_ORACLES_R11,
-        # r10 registrations: the 21 r9-staged pairs (plans/pending_r10)
-        **PENDING_ORACLES_R10,
-        # r9 registrations: the nine r8-staged pairs (plans/pending_r9)
-        **PENDING_ORACLES_R9,
-        # r8 registrations: the ten r7-staged pairs (plans/pending_r8)
-        **PENDING_ORACLES_R8,
-        # r7 registrations: z-order pair + search pair (plans/pending_r7)
-        **PENDING_ORACLES_R7,
-        # r6 curation/maintenance registrations (plans/pending_registry)
-        **PENDING_ORACLES,
-        "pricing_summary": """
-            WITH t AS (
-                SELECT l_returnflag, l_linestatus,
-                       CAST(l_quantity AS DECIMAL(12,2)) AS qty,
-                       CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
-                       CAST(l_discount AS DECIMAL(4,2)) AS disc,
-                       CAST(l_tax AS DECIMAL(4,2)) AS tax
-                FROM lineitem
-                WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            )
-            SELECT l_returnflag, l_linestatus,
-                   CAST(ROUND(SUM(qty), 2) AS DOUBLE) AS sum_qty,
-                   CAST(ROUND(SUM(price), 2) AS DOUBLE) AS sum_base_price,
-                   CAST(ROUND(SUM(price * (1 - disc)), 2) AS DOUBLE) AS sum_disc_price,
-                   CAST(ROUND(SUM(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE) AS sum_charge,
-                   ROUND(CAST(SUM(qty) AS DOUBLE) / COUNT(qty), 2) AS avg_qty,
-                   ROUND(CAST(SUM(price) AS DOUBLE) / COUNT(price), 2) AS avg_price,
-                   ROUND(CAST(SUM(disc) AS DOUBLE) / COUNT(disc), 4) AS avg_disc,
-                   COUNT(*) AS count_order
-            FROM t
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_segment": """
-            SELECT c.c_mktsegment,
-                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                  * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
-                        AS DOUBLE) AS revenue,
-                   COUNT(DISTINCT o.o_orderkey) AS n_orders,
-                   COUNT(DISTINCT c.c_custkey) AS n_customers
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-            GROUP BY c.c_mktsegment
-            ORDER BY c.c_mktsegment
-        """,
-        "top_customers": """
-            SELECT c.c_custkey, c.c_name,
-                   CAST(ROUND(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))), 2)
-                        AS DOUBLE) AS total_spent,
-                   COUNT(*) AS n_orders
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY c.c_custkey, c.c_name
-            ORDER BY total_spent DESC, c.c_custkey
-            LIMIT 10
-        """,
-        "order_priority_counts": """
-            SELECT o_orderpriority, COUNT(*) AS order_count
-            FROM orders o
-            WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate < TIMESTAMP '1997-01-01'
-              AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-            GROUP BY o_orderpriority
-            ORDER BY o_orderpriority
-        """,
-        "nation_revenue": """
-            SELECT r.r_name, n.n_name,
-                   CAST(ROUND(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))), 2)
-                        AS DOUBLE) AS revenue,
-                   COUNT(*) AS n_orders
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
-            GROUP BY r.r_name, n.n_name
-            ORDER BY r.r_name, n.n_name
-        """,
-        "promo_revenue": """
-            SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                           THEN CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))
-                           ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-                       / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE),
-                       4) AS promo_revenue_pct,
-                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
-                        AS DOUBLE) AS total_revenue
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
-              AND l.l_shipdate < TIMESTAMP '1997-10-01'
-        """,
-        "top_suppliers": """
-            WITH by_supp AS (
-                SELECT l_suppkey,
-                       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                                    * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2)
-                            AS DOUBLE) AS total_revenue
-                FROM lineitem
-                WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-                  AND l_shipdate < TIMESTAMP '1997-04-01'
-                GROUP BY l_suppkey
-            ),
-            ranked AS (
-                SELECT l_suppkey, total_revenue,
-                       CAST(row_number() OVER (ORDER BY total_revenue DESC,
-                                               l_suppkey) AS INT) AS rk
-                FROM by_supp
-            )
-            SELECT s.s_suppkey, s.s_name, r.total_revenue, r.rk
-            FROM ranked r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-            WHERE r.rk <= 10
-            ORDER BY r.rk
-        """,
-        "brand_stats": """
-            WITH per_brand AS (
-                SELECT p_brand, COUNT(*) AS n_parts,
-                       COUNT(DISTINCT p_type) AS n_types,
-                       COUNT(DISTINCT p_size) AS n_sizes,
-                       ROUND(AVG(CAST(CAST(p_retailprice AS DECIMAL(12,2))
-                                      AS DOUBLE)), 4) AS avg_retail_price
-                FROM part GROUP BY p_brand
-            ),
-            supp_per_brand AS (
-                SELECT p.p_brand,
-                       COUNT(DISTINCT l.l_suppkey) AS n_suppliers
-                FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-                GROUP BY p.p_brand
-            )
-            SELECT b.p_brand, b.n_parts, b.n_types, b.n_sizes,
-                   b.avg_retail_price, s.n_suppliers
-            FROM per_brand b LEFT JOIN supp_per_brand s
-              ON b.p_brand = s.p_brand
-            ORDER BY b.p_brand
-        """,
-        "events_props_stats": """
-            -- CAST(SUM(...) AS BIGINT): DuckDB SUM(BIGINT) yields HUGEINT,
-            -- which pandas renders as float64 and the driver's value hash
-            -- would then see 99111.0 vs Spark's 99111 (the r01 red cell).
-            -- "invalid JSON" is defined on BOTH sides as "not parseable as
-            -- a JSON object": Spark from_json(props, struct) is NULL exactly
-            -- for non-object / malformed input, mirrored here via
-            -- json_valid + json_type = 'OBJECT'.
-            SELECT event_type, COUNT(*) AS n_events,
-                   CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                        AS BIGINT) AS sum_k,
-                   ROUND(AVG(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4)
-                       AS avg_k,
-                   MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-                   MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
-                   COUNT(CASE WHEN props IS NOT NULL AND
-                              (NOT json_valid(props)
-                               OR json_type(props) <> 'OBJECT')
-                         THEN 1 END) AS n_invalid_json
-            FROM events
-            GROUP BY event_type
-            ORDER BY event_type
-        """,
-        "event_anomalies": """
-            WITH hourly AS (
-                SELECT date_trunc('hour', ts) AS hour_start, event_type,
-                       COUNT(*) AS n_events
-                FROM events
-                GROUP BY 1, 2
-            ),
-            stats AS (
-                SELECT hour_start, event_type, n_events,
-                       CAST(SUM(n_events) OVER w AS DOUBLE) AS s1,
-                       CAST(SUM(n_events * n_events) OVER w AS DOUBLE) AS s2,
-                       CAST(COUNT(*) OVER w AS DOUBLE) AS k
-                FROM hourly
-                WINDOW w AS (PARTITION BY event_type)
-            )
-            , scored AS (
-                SELECT CAST(hour_start AS TIMESTAMP) AS hour_start, event_type,
-                       n_events,
-                       ROUND((CAST(n_events AS DOUBLE) - s1 / k)
-                             / sqrt((s2 - s1 * s1 / k) / (k - 1.0)), 4) AS z_score
-                FROM stats
-            )
-            SELECT * FROM scored
-            WHERE abs(z_score) >= 1.5
-            ORDER BY event_type, hour_start
-        """,
-        "customer_order_distribution": """
-            WITH per_cust AS (
-                SELECT c.c_custkey, COUNT(o.o_custkey) AS n_orders
-                FROM customer c
-                LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-                GROUP BY c.c_custkey
-            )
-            SELECT n_orders, COUNT(*) AS n_customers
-            FROM per_cust
-            GROUP BY n_orders
-            ORDER BY n_customers DESC, n_orders DESC
-        """,
-        "supplier_nation_profit": """
-            SELECT n.n_name AS nation,
-                   CAST(year(o.o_orderdate) AS INT) AS o_year,
-                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
-                        AS DOUBLE) AS profit,
-                   COUNT(*) AS n_lineitems
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            GROUP BY n.n_name, year(o.o_orderdate)
-            ORDER BY nation, o_year DESC
-        """,
-        "events_sliding": TP.ORACLES["events_sliding"],
-        "user_sessions": TP.ORACLES["user_sessions"],
-        "click_attribution": TP.ORACLES["click_attribution"],
-        "salted_event_rollup": TP.ORACLES["salted_event_rollup"],
-        "revenue_rollup": """
-            WITH j AS (
-                SELECT r.r_name, n.n_name, o.o_totalprice
-                FROM orders o
-                JOIN customer c ON o.o_custkey = c.c_custkey
-                JOIN nation n ON c.c_nationkey = n.n_nationkey
-                JOIN region r ON n.n_regionkey = r.r_regionkey
-            )
-            SELECT r_name, n_name,
-                   CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(12,2))), 2)
-                        AS DOUBLE) AS revenue,
-                   COUNT(*) AS n_orders,
-                   CAST(GROUPING(r_name) AS INT) AS is_region_total,
-                   CAST(GROUPING(n_name) AS INT) AS is_nation_total
-            FROM j
-            GROUP BY ROLLUP (r_name, n_name)
-            ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
-        """,
-        "returned_revenue_by_customer": """
-            WITH by_cust AS (
-                SELECT o.o_custkey,
-                       CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
-                            AS DOUBLE) AS returned_revenue
-                FROM lineitem l
-                JOIN orders o ON l.l_orderkey = o.o_orderkey
-                WHERE l.l_returnflag = 'R'
-                GROUP BY o.o_custkey
-            )
-            SELECT c.c_custkey, c.c_name, c.c_mktsegment, b.returned_revenue
-            FROM by_cust b JOIN customer c ON b.o_custkey = c.c_custkey
-            ORDER BY b.returned_revenue DESC, c.c_custkey
-            LIMIT 20
-        """,
-        "small_quantity_revenue": """
-            WITH avg_qty AS (
-                SELECT l_partkey,
-                       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
-                           / COUNT(l_quantity) AS avg_qty
-                FROM lineitem GROUP BY l_partkey
-            )
-            SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)))
-                              AS DOUBLE) / 7, 2) AS avg_yearly,
-                   COUNT(*) AS n_small_lineitems
-            FROM lineitem l
-            JOIN avg_qty a ON l.l_partkey = a.l_partkey
-            WHERE l.l_quantity < 0.2 * a.avg_qty
-        """,
-        "large_orders": """
-            WITH big AS (
-                SELECT l_orderkey,
-                       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(12,2))), 2)
-                            AS DOUBLE) AS total_qty
-                FROM lineitem
-                GROUP BY l_orderkey
-                HAVING CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(12,2))), 2)
-                            AS DOUBLE) > 150.0
-            )
-            SELECT c.c_custkey, c.c_name, o.o_orderkey,
-                   CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate,
-                   ROUND(o.o_totalprice, 2) AS total_price,
-                   b.total_qty
-            FROM big b
-            JOIN orders o ON b.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            ORDER BY b.total_qty DESC, o.o_orderkey
-            LIMIT 20
-        """,
-        "events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour_start, event_type,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_value,
-                   COUNT(DISTINCT user_id) AS n_users
-            FROM events
-            GROUP BY date_trunc('hour', ts), event_type
-            ORDER BY hour_start, event_type
-        """,
-        "incremental_scan": """
-            SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
-            FROM events
-            WHERE ts > TIMESTAMP '2024-01-04 00:00:00'
-            ORDER BY event_id
-        """,
-        "cdc_timestamp_probe": """
-            SELECT COUNT(*) AS change_count,
-                   CAST(MAX(ts) AS TIMESTAMP) AS max_ts
-            FROM events
-            WHERE ts > TIMESTAMP '2024-01-04 00:00:00'
-        """,
-        "cdc_log_probe": """
-            SELECT event_type AS op_code,
-                   event_type AS change_type,
-                   COUNT(*) AS change_count,
-                   CAST(MAX(ts) AS TIMESTAMP) AS max_ts
-            FROM events
-            GROUP BY event_type
-            ORDER BY op_code
-        """,
-        "event_dedup": """
-            SELECT arg_min(event_id, ts) AS event_id, user_id, event_type,
-                   CAST(MIN(ts) AS TIMESTAMP) AS ts
-            FROM events
-            GROUP BY user_id, event_type,
-                     time_bucket(INTERVAL 60 MINUTES, CAST(ts AS TIMESTAMP),
-                                 TIMESTAMP '1970-01-01 00:00:00')
-            ORDER BY event_id
-        """,
-        "fk_orphan_orders": """
-            SELECT o_orderkey, o_custkey FROM orders o
-            WHERE NOT EXISTS (
-                SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-            ORDER BY o_orderkey
-        """,
-        "customers_without_orders": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (
-                SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            ORDER BY c_custkey
-        """,
-        "whole_row_dups_lineitem": """
-            SELECT (SELECT COUNT(*) FROM lineitem)
-                 - (SELECT COUNT(*) FROM (SELECT DISTINCT * FROM lineitem))
-                 AS duplicate_rows
-        """,
-        "validation_orders": """
-            SELECT COUNT(*) AS total_rows,
-                   COUNT(*) - COUNT(DISTINCT o_orderkey) AS dup_violation__o_orderkey,
-                   COUNT(*) - COUNT(DISTINCT o_orderkey) AS pk_violation,
-                   COUNT(CASE WHEN o_orderkey IS NULL THEN 1 END) AS null_violation__o_orderkey,
-                   COUNT(CASE WHEN o_custkey IS NULL THEN 1 END) AS null_violation__o_custkey,
-                   COUNT(CASE WHEN o_totalprice IS NOT NULL
-                              AND (o_totalprice < 0 OR o_totalprice > 500000)
-                         THEN 1 END) AS rule__price_range,
-                   COUNT(CASE WHEN o_orderstatus IS NOT NULL
-                              AND o_orderstatus NOT IN ('F', 'O', 'P')
-                         THEN 1 END) AS rule__status_allowed,
-                   COUNT(CASE WHEN o_orderpriority IS NOT NULL
-                              AND NOT regexp_matches(o_orderpriority, '^(?:[1-5]-[A-Z ]+)')
-                         THEN 1 END) AS rule__priority_pattern,
-                   COUNT(CASE WHEN o_custkey IS NULL THEN 1 END) AS rule__custkey_not_null,
-                   COUNT(CASE WHEN o_orderdate IS NOT NULL
-                              AND CAST(o_orderdate AS DATE) > DATE '2001-01-01'
-                         THEN 1 END) AS rule__no_future_orders,
-                   COUNT(CASE WHEN o_orderkey IS NOT NULL
-                              AND TRY_CAST(CAST(o_orderkey AS VARCHAR) AS DOUBLE) IS NULL
-                         THEN 1 END) AS type_invalid__o_orderkey,
-                   COUNT(CASE WHEN o_totalprice IS NOT NULL
-                              AND TRY_CAST(CAST(o_totalprice AS VARCHAR) AS DOUBLE) IS NULL
-                         THEN 1 END) AS type_invalid__o_totalprice
-            FROM orders
-        """,
-        "profile_customer": """
-            SELECT COUNT(*) AS total_rows,
-                   COUNT(CASE WHEN c_acctbal IS NULL THEN 1 END) AS bal_null_count,
-                   COUNT(DISTINCT c_acctbal) AS bal_unique_count,
-                   ROUND(AVG(c_acctbal), 4) AS bal_mean,
-                   ROUND(MEDIAN(c_acctbal), 4) AS bal_median,
-                   ROUND(STDDEV_SAMP(c_acctbal), 4) AS bal_std,
-                   ROUND(MIN(c_acctbal), 2) AS bal_min,
-                   ROUND(MAX(c_acctbal), 2) AS bal_max,
-                   COUNT(CASE WHEN c_acctbal = 0 THEN 1 END) AS bal_zero_count,
-                   COUNT(CASE WHEN c_acctbal < 0 THEN 1 END) AS bal_negative_count,
-                   ROUND(AVG(LENGTH(c_name)), 4) AS name_avg_length,
-                   MIN(LENGTH(c_name)) AS name_min_length,
-                   MAX(LENGTH(c_name)) AS name_max_length,
-                   COUNT(CASE WHEN c_name = '' THEN 1 END) AS name_empty_count
-            FROM customer
-        """,
-        "staging_orders": """
-            SELECT o_orderkey AS order_id, o_custkey AS customer_id,
-                   o_orderstatus AS order_status,
-                   ROUND(o_totalprice, 2) AS total_amount,
-                   CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP) AS order_date,
-                   o_orderpriority AS order_priority
-            FROM orders WHERE o_totalprice >= 0
-            ORDER BY order_id
-        """,
-        "dim_customers": """
-            SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
-                   c.c_mktsegment AS market_segment,
-                   ROUND(c.c_acctbal, 2) AS account_balance,
-                   n.n_name AS nation, r.r_name AS region
-            FROM customer c
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
-            ORDER BY customer_id
-        """,
-        "fact_orders": """
-            SELECT o.o_orderkey AS order_id, o.o_custkey AS customer_id,
-                   o.o_orderstatus AS order_status,
-                   ROUND(o.o_totalprice, 2) AS total_amount,
-                   CAST(o.o_orderdate AS DATE) AS order_date,
-                   o.o_orderpriority AS order_priority,
-                   li.net_revenue, li.n_lineitems,
-                   c.c_mktsegment AS market_segment,
-                   n.n_name AS nation, r.r_name AS region
-            FROM orders o
-            LEFT JOIN (
-                SELECT l_orderkey,
-                       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                                      * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2)
-                            AS DOUBLE) AS net_revenue,
-                       COUNT(*) AS n_lineitems
-                FROM lineitem GROUP BY l_orderkey
-            ) li ON li.l_orderkey = o.o_orderkey
-            LEFT JOIN customer c ON c.c_custkey = o.o_custkey
-            LEFT JOIN nation n ON n.n_nationkey = c.c_nationkey
-            LEFT JOIN region r ON r.r_regionkey = n.n_regionkey
-            WHERE o.o_totalprice >= 0
-            ORDER BY order_id
-        """,
-        "merge_upsert": """
-            SELECT o_orderkey AS order_id,
-                   CASE WHEN o_orderkey % 10 = 0
-                        THEN ROUND(o_totalprice + 100, 2)
-                        ELSE ROUND(o_totalprice, 2) END AS total_amount
-            FROM orders
-            ORDER BY order_id
-        """,
-        "cdc_apply_changes": """
-            WITH base AS (
-                SELECT c_custkey AS user_id,
-                       CAST(ROUND(CAST(c_acctbal AS DECIMAL(12,2)), 2) AS DOUBLE)
-                           AS balance
-                FROM customer
-            ),
-            changes AS (
-                SELECT user_id, ts, event_id,
-                       CASE event_type WHEN 'signup' THEN 'insert'
-                                       WHEN 'purchase' THEN 'update'
-                                       ELSE 'delete' END AS op,
-                       CAST(ROUND(CAST(value AS DECIMAL(12,2)), 2) AS DOUBLE)
-                           AS balance
-                FROM events
-                WHERE event_type IN ('signup', 'purchase', 'error')
-            ),
-            latest AS (
-                SELECT * FROM changes
-                QUALIFY row_number() OVER (PARTITION BY user_id
-                                           ORDER BY ts DESC, event_id DESC) = 1
-            )
-            SELECT user_id, balance FROM base
-            WHERE user_id NOT IN (SELECT user_id FROM latest)
-            UNION ALL
-            SELECT user_id, balance FROM latest WHERE op <> 'delete'
-            ORDER BY user_id
-        """,
-        "scd2_user_history": """
-            WITH ch AS (
-                SELECT user_id, ts, event_id,
-                       CAST(ROUND(CAST(value AS DECIMAL(12,2)), 2) AS DOUBLE)
-                           AS balance
-                FROM events WHERE event_type = 'purchase'
-            )
-            SELECT user_id,
-                   CAST(ts AS TIMESTAMP) AS valid_from,
-                   CAST(COALESCE(LEAD(ts) OVER w,
-                                 TIMESTAMP '2200-01-01 00:00:00') AS TIMESTAMP)
-                       AS valid_to,
-                   LEAD(ts) OVER w IS NULL AS is_current,
-                   balance
-            FROM ch
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ORDER BY user_id, valid_from
-        """,
-        # LLM training-data operators — oracles generated in llm_oracles.py
-        # (md5/bit-arithmetic based, so even MinHash/SimHash/cosine are
-        # value-checked, not rows-only)
-        "exact_dedup_docs": LO.exact_dedup_docs(),
-        "minhash_lsh_dupes": LO.minhash_lsh_dupes(),
-        "contaminated_docs": LO.contaminated_docs(),
-        "dedup_clusters": LO.dedup_clusters(),
-        "ngram_jaccard_pairs": LO.ngram_jaccard_pairs(),
-        "simhash_pairs": LO.simhash_pairs(),
-        "simhash_values": LO.simhash_values(),
-        "token_stats": LO.token_stats(),
-        "language_id": LO.language_id(),
-        "quality_score": LO.quality_score(),
-        "doc_fingerprints": LO.doc_fingerprints(),
-        "cosine_topk": LO.cosine_topk(),
-        "ann_sign_lsh": LO.ann_sign_lsh(),
-        "ann_multiprobe": LO.ann_multiprobe(),
-        "ann_multitable": LO.ann_multitable(),
-        "ann_ivf": LO.ann_ivf(),
-        "embedding_near_dup": LO.embedding_near_dup(),
-        "multimodal_features": LO.multimodal_features(),
-        "cleaned_docs": LO.cleaned_docs(),
-        "train_split_counts": LO.train_split_counts(),
-        "stratified_sample_docs": LO.stratified_sample_docs(),
-        "token_entropy": LO.token_entropy(),
-        "benford_profile": LO.benford_profile(),
-        "repetition_ratio": LO.repetition_ratio(),
-        "corpus_filter": LO.corpus_filter(),
-        "tfidf_top_terms": LO.tfidf_top_terms(),
-        "chunked_docs": LO.chunked_docs(),
-        "stream_events_hourly": SQ.ORACLES["stream_events_hourly"],
-        "stream_user_sessions": SQ.ORACLES["stream_user_sessions"],
-        "stream_click_purchases": SQ.ORACLES["stream_click_purchases"],
-        # corpus curation (plans/curation.py)
-        "boilerplate_ngrams": CU.ORACLES["boilerplate_ngrams"],
-        "mixture_sample_docs": CU.ORACLES["mixture_sample_docs"],
-        # profiling / funnel / window frame / reshape (plans/profiling.py)
-        "price_quantiles": PF.ORACLES["price_quantiles"],
-        "event_funnel": PF.ORACLES["event_funnel"],
-        "customer_running_spend": PF.ORACLES["customer_running_spend"],
-        "segment_year_pivot": PF.ORACLES["segment_year_pivot"],
-        "events_cube": PF.ORACLES["events_cube"],
-        "events_hourly_dense": PF.ORACLES["events_hourly_dense"],
-        # training-data export (plans/training.py)
-        "lm_perplexity": TR.ORACLES["lm_perplexity"],
-        "packed_sequences": TR.ORACLES["packed_sequences"],
-        "embedding_clusters": TR.ORACLES["embedding_clusters"],
-        "shuffled_shards": TR.ORACLES["shuffled_shards"],
-        "incremental_dedup_new_docs": LO.incremental_near_dups(split_at=10_000_000),
-        "dedup_survivors": LO.dedup_survivors(),
-        # cross-nation trade analytics (plans/analytics2.py)
-        "volume_shipping": A2.ORACLES["volume_shipping"],
-        "market_share": A2.ORACLES["market_share"],
-        "idle_customer_balance": A2.ORACLES["idle_customer_balance"],
-        # procurement / RFM analytics (plans/analytics3.py)
-        "min_cost_supplier": A3.ORACLES["min_cost_supplier"],
-        "important_parts": A3.ORACLES["important_parts"],
-        "supplier_diversity": A3.ORACLES["supplier_diversity"],
-        "promo_excess_suppliers": A3.ORACLES["promo_excess_suppliers"],
-        "customer_rfm": A3.ORACLES["customer_rfm"],
-        # training-corpus composition, batch 2 (plans/training2.py)
-        "lang_temperature_sample": TR2.ORACLES["lang_temperature_sample"],
-        "quality_quota_prune": TR2.ORACLES["quality_quota_prune"],
-        "dup_rate_by_source": TR2.ORACLES["dup_rate_by_source"],
-        # behavioral retail analytics (plans/behavior.py)
-        "cohort_retention": BH.ORACLES["cohort_retention"],
-        "basket_pairs": BH.ORACLES["basket_pairs"],
-        # order-fulfilment analytics (plans/analytics4.py)
-        "shipping_priority": A4.ORACLES["shipping_priority"],
-        "forecast_revenue_delta": A4.ORACLES["forecast_revenue_delta"],
-        "late_shipment_priority": A4.ORACLES["late_shipment_priority"],
-        "discounted_revenue": A4.ORACLES["discounted_revenue"],
-        "waiting_suppliers": A4.ORACLES["waiting_suppliers"],
-        # scale maintenance (plans/scaleops.py)
-        "bloom_pruned_fetch": SOP.ORACLES["bloom_pruned_fetch"],
-        "compacted_corpus": SOP.ORACLES["compacted_corpus"],
-    }
+    return merge_registry(_MODULES, "ORACLES")

@@ -44,8 +44,7 @@ def _clear_shared_caches() -> None:
     bench deliberately forgoes it.
 
     DELIBERATELY NOT cleared: the streaming cells' staged input dirs
-    (plans/streamq._STAGED, streamcmsq._STAGED,
-    streamkmvq._STAGED_MULTI). Staging exists only because the raw
+    (plans/streamq._STAGED). Staging exists only because the raw
     testdata is TIMESTAMP(NANOS)/single-file parquet the streaming file
     source cannot ingest as-is — a test-harness input-format shim, not
     part of any query's computation (production input is already
@@ -250,7 +249,7 @@ def _warmup(spark: SparkSession) -> None:
         # warmup above does not touch the memory-sink table path
         # (per-batch collect into a LocalTableScan), so whichever
         # stream cell ran FIRST paid that init inside its timed window
-        # (r13: the rotation made stream_cms_heavy_tokens slot 1 and
+        # (r13: the registry order made stream_cms_heavy_tokens slot 1 and
         # its cell absorbed the cost the r12-order run had hidden in
         # stream_kmv's cell).
         ckpt2 = tempfile.mkdtemp(prefix="bench_warm_ckpt2_")
@@ -319,8 +318,7 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     # FIXED alphabetical execution order, decoupled from queries()'s
     # registration order (r14, VERDICT r13 ask #7): registration order
-    # is the rotation ledger's correctness-window order and ROLLS every
-    # round, which moved different cells into the early JIT/GC ramp and
+    # used to change every round, which moved different cells into the early JIT/GC ramp and
     # position-confounded cross-round per-cell history (r13:
     # boilerplate_ngrams 5.1 → 9.2 s with NO code change, proven an
     # order effect by interleaved A/B). Same cells, same per-cell

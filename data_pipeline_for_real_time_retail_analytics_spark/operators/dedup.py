@@ -502,7 +502,7 @@ def minhash_lsh_pairs(
     a broadcast choice serializes the banded build side through the
     driver AND defeats ReuseExchange on the identical self-join subtree,
     re-computing shingling+signatures twice — measured 2.7x wall at 10x
-    input (bench_minhash_shapes.py --no-broadcast). SMJ is also the only
+    input (NOTES.md, MinHash shuffle shapes). SMJ is also the only
     shape that survives a corpus-scale build side.
 
     Two shuffle shapes, identical output (asserted in tests):
@@ -519,7 +519,7 @@ def minhash_lsh_pairs(
       Shuffles are id-sized; the price is a second (candidate-bounded)
       shingling pass plus two fetch joins. The production shape for
       high-band parameterizations: at num_perm=64/bands=16 the carry
-      shape shuffles 620 MB vs 56 MB here (bench_minhash_shapes.py).
+      shape shuffles 620 MB vs 56 MB here (NOTES.md).
     """
     banded = _banded_signatures(df, num_perm, bands, n, text_col, id_col)
     if fetch_shingles:

@@ -4,7 +4,7 @@ cluster assignment when the codebook itself grows with the corpus.
 Flat argmax assignment (``embcluster.assign_embedding_clusters``) costs
 n·k cosines. The SemDeDup / IVF sizing rule keeps cluster occupancy
 constant by growing k with n, which makes flat assignment O(n²) — the
-exact cost curve ``bench_semdedup_scale.py`` measures. The standard
+exact cost curve the SemDeDup scale probe in NOTES.md measures. The standard
 fix (FAISS IVF's quantizer, coarse-quantized k-means): group the fine
 codebook under √k-ish coarse seeds, route each vector through its best
 coarse seed, then argmax only over that seed's fine centroids —

@@ -30,10 +30,8 @@ Everything is exact BIGINT bit arithmetic on both engines — the DuckDB
 oracle (plans/hilbertq.py) renders the SAME per-iteration update rules
 as chained CTEs, one rendering per engine of one formula (the
 unrolled-PageRank oracle discipline). The input rescale to the
-2^bits × 2^bits grid is the identical guarded bucket-width expression
-as ``zorder.with_z_value`` (kept inline rather than imported so the
-registered z-order family's implementation closure stays untouched —
-the rotation-guard stability rule).
+2^bits × 2^bits grid is the guarded bucket-width rescale shared with
+``zorder.with_z_value``.
 
 Scale shape: one single-row min/max aggregate broadcast back, then
 per-row map-side bit arithmetic — ``bits`` chained projections, no
@@ -45,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .zorder import _guarded_rescale
 
 __all__ = ["hilbert_steps", "with_hilbert_value"]
 
@@ -98,37 +98,16 @@ def with_hilbert_value(
     if out_col in df.columns:
         raise ValueError(f"output column {out_col!r} already exists")
     # the working columns below are written with withColumns/select('*')
-    # and would silently CLOBBER same-named input columns — refuse
-    # loudly instead (same contract as the out_col guard above)
-    reserved = {"__hx_0", "__hx_1", "__hd", "__hmin_0", "__hmax_0",
-                "__hmin_1", "__hmax_1"}
-    clashes = sorted(reserved & set(df.columns))
-    if clashes:
-        raise ValueError(
-            f"input columns {clashes} collide with with_hilbert_value's "
-            "reserved working names — rename them before clustering"
-        )
-    aggs = []
-    for j, c in enumerate(cols):
-        as_long = F.col(c).cast("long")
-        aggs.append(F.min(as_long).alias(f"__hmin_{j}"))
-        aggs.append(F.max(as_long).alias(f"__hmax_{j}"))
-    stats = df.agg(*aggs)
-    joined = df.crossJoin(F.broadcast(stats))
-    scaled = [
-        F.expr(
-            f"(CAST(`{c}` AS BIGINT) - __hmin_{j}) div ("
-            f"CASE WHEN __hmax_{j} IS NULL THEN CAST(NULL AS BIGINT) "
-            f"WHEN try_subtract(__hmax_{j}, __hmin_{j}) IS NULL "
-            f"THEN CAST(raise_error('hilbert: span of column {c} "
-            f"exceeds 2**63 and overflows BIGINT rescale; reduce the "
-            f"value range (e.g. dictionary-code the column) first') "
-            f"AS BIGINT) "
-            f"ELSE (__hmax_{j} - __hmin_{j}) div {1 << bits} + 1 END)"
-        ).alias(f"__hx_{j}")
-        for j, c in enumerate(cols)
-    ]
-    cur = joined.select("*", *scaled)
+    # and would silently CLOBBER same-named input columns — the shared
+    # rescale refuses them loudly instead (same contract as the out_col
+    # guard above)
+    joined, scaled, _ = _guarded_rescale(
+        df, cols, bits, prefix="__h", label="hilbert",
+        caller="with_hilbert_value", extra_reserved=("__hx_0", "__hx_1", "__hd"),
+    )
+    cur = joined.select(
+        "*", *(col.alias(f"__hx_{j}") for j, col in enumerate(scaled))
+    )
     # unroll the planes, re-anchoring x/y/d as real columns each step so
     # the tree depth stays O(1) per step instead of O(bits) nested CASEs
     cur = cur.withColumn("__hd", F.lit(0).cast("long"))

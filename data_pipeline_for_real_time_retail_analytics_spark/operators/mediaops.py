@@ -4,10 +4,7 @@ codec-free AUDIO window energy — the two mapInPandas shapes the
 mandate's decode / feature-extract / resize / frame-sample list still
 lacked a standalone stage for.
 
-Lives in its own leaf module (not multimodal.py) deliberately:
-multimodal.py backs the REGISTERED ``multimodal_features`` query, and
-its rotation closure must not churn for additive siblings (the
-round-6 dedup.py precedent).
+Lives in its own leaf module, next to multimodal.py's featurizer.
 
 * ``resize_media``: nearest-neighbor resampling over the payload
   treated as a ``meta.width × meta.height`` byte grid — REAL index

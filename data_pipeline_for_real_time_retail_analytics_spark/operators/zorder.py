@@ -54,6 +54,61 @@ def _interleave(scaled: list[Column], bits: int) -> Column:
     return out
 
 
+def _guarded_rescale(
+    df: DataFrame,
+    cols: list[str],
+    bits: int,
+    prefix: str,
+    label: str,
+    caller: str,
+    extra_reserved: tuple[str, ...] = (),
+) -> tuple[DataFrame, list[Column], list[str]]:
+    """The shared min/max bucket-width rescale of ``with_z_value`` and
+    ``hilbert.with_hilbert_value``: returns ``df`` with one broadcast
+    single-row min/max aggregate joined on, the per-column rescaled
+    BIGINT expressions in ``[0, 2**bits)``, and the joined stat column
+    names (``{prefix}min_{j}`` / ``{prefix}max_{j}``) for the caller to
+    drop.
+
+    The stat columns, plus the caller's own ``extra_reserved`` working
+    columns, would silently clobber same-named input columns, so a clash
+    raises instead. ``label`` prefixes the runtime overflow error."""
+    # quoted source column, index-derived stat aliases: arbitrary
+    # column names (spaces, dashes) survive the expr round-trip.
+    # The bucket width is guarded at runtime: a span wider than 2**63
+    # (huge negative min against huge positive max) would make
+    # ``max - min`` wrap silently and mis-cluster every row, so
+    # try_subtract detects the overflow and raise_error fails the job
+    # instead. An all-NULL column keeps a NULL rescaled value,
+    # distinguished from overflow by the max-IS-NULL arm.
+    stat_cols, aggs, scaled = [], [], []
+    for j, c in enumerate(cols):
+        lo, hi = f"{prefix}min_{j}", f"{prefix}max_{j}"
+        stat_cols += [lo, hi]
+        as_long = F.col(c).cast("long")
+        aggs += [F.min(as_long).alias(lo), F.max(as_long).alias(hi)]
+        scaled.append(
+            F.expr(
+                f"(CAST(`{c}` AS BIGINT) - {lo}) div ("
+                f"CASE WHEN {hi} IS NULL THEN CAST(NULL AS BIGINT) "
+                f"WHEN try_subtract({hi}, {lo}) IS NULL "
+                f"THEN CAST(raise_error('{label}: span of column {c} "
+                f"exceeds 2**63 and overflows BIGINT rescale; reduce the "
+                f"value range (e.g. dictionary-code the column) first') "
+                f"AS BIGINT) "
+                f"ELSE ({hi} - {lo}) div {1 << bits} + 1 END)"
+            )
+        )
+    clashes = sorted((set(stat_cols) | set(extra_reserved)) & set(df.columns))
+    if clashes:
+        raise ValueError(
+            f"input columns {clashes} collide with {caller}'s "
+            "reserved working names — rename them before clustering"
+        )
+    joined = df.crossJoin(F.broadcast(df.agg(*aggs)))
+    return joined, scaled, stat_cols
+
+
 def with_z_value(
     df: DataFrame,
     cols: list[str],
@@ -91,53 +146,10 @@ def with_z_value(
         )
     if out_col in df.columns:
         raise ValueError(f"output column {out_col!r} already exists")
-    # working columns are joined in with select('*') and would silently
-    # clobber same-named input columns — refuse loudly (same contract
-    # as hilbert.with_hilbert_value)
-    reserved = {
-        name
-        for j in range(len(cols))
-        for name in (f"__zmin_{j}", f"__zmax_{j}")
-    }
-    clashes = sorted(reserved & set(df.columns))
-    if clashes:
-        raise ValueError(
-            f"input columns {clashes} collide with with_z_value's "
-            "reserved working names — rename them before clustering"
-        )
-    aggs = []
-    for j, c in enumerate(cols):
-        as_long = F.col(c).cast("long")
-        aggs.append(F.min(as_long).alias(f"__zmin_{j}"))
-        aggs.append(F.max(as_long).alias(f"__zmax_{j}"))
-    stats = df.agg(*aggs)
-    joined = df.crossJoin(F.broadcast(stats))
-    # quoted source column, index-derived stat aliases: arbitrary
-    # column names (spaces, dashes) survive the expr round-trip.
-    # The bucket width is guarded at runtime: a span wider than 2**63
-    # (huge negative min against huge positive max) would make
-    # ``max - min`` wrap silently and mis-cluster every row, so
-    # try_subtract detects the overflow and raise_error fails the job
-    # instead. An all-NULL column keeps its pre-guard behavior (NULL
-    # z-contribution), distinguished from overflow by the max-IS-NULL
-    # arm.
-    scaled = [
-        F.expr(
-            f"(CAST(`{c}` AS BIGINT) - __zmin_{j}) div ("
-            f"CASE WHEN __zmax_{j} IS NULL THEN CAST(NULL AS BIGINT) "
-            f"WHEN try_subtract(__zmax_{j}, __zmin_{j}) IS NULL "
-            f"THEN CAST(raise_error('z-order: span of column {c} "
-            f"exceeds 2**63 and overflows BIGINT rescale; reduce the "
-            f"value range (e.g. dictionary-code the column) first') "
-            f"AS BIGINT) "
-            f"ELSE (__zmax_{j} - __zmin_{j}) div {1 << bits} + 1 END)"
-        )
-        for j, c in enumerate(cols)
-    ]
-    return joined.withColumn(out_col, _interleave(scaled, bits)).drop(
-        *[f"__zmin_{j}" for j in range(len(cols))],
-        *[f"__zmax_{j}" for j in range(len(cols))],
+    joined, scaled, stat_cols = _guarded_rescale(
+        df, cols, bits, prefix="__z", label="z-order", caller="with_z_value"
     )
+    return joined.withColumn(out_col, _interleave(scaled, bits)).drop(*stat_cols)
 
 
 def zorder_compact(
@@ -164,8 +176,8 @@ def zorder_compact(
     clustering plus a bounded constant-factor overhead: one narrow
     min/max stats scan, the Morton projection evaluated in both the
     sampling pass and the shuffle, and ~8 extra shuffle bytes/row for
-    the carried key (bench_zorder_scale.py, independent uniform
-    dimensions, fresh-process median protocol: z/single wall ratio
+    the carried key (NOTES.md, z-order write-cost points; independent
+    uniform dimensions, fresh-process median protocol: z/single wall ratio
     1.53x at 1.5M rows, 1.46x at 15M, 1.19x at 45M — the ratio FALLS
     as the shuffle+write volume dominates both paths). Row content is
     invariant (pure layout), which is the DuckDB-checked contract of

@@ -459,3 +459,309 @@ def supplier_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("nation", F.desc("o_year"))
     )
+
+
+QUERIES = {
+    "pricing_summary": pricing_summary,
+    "revenue_by_segment": revenue_by_segment,
+    "top_customers": top_customers,
+    "order_priority_counts": order_priority_counts,
+    "nation_revenue": nation_revenue,
+    "promo_revenue": promo_revenue,
+    "top_suppliers": top_suppliers,
+    "brand_stats": brand_stats,
+    "events_props_stats": events_props_stats,
+    "event_anomalies": event_anomalies,
+    "customer_order_distribution": customer_order_distribution,
+    "supplier_nation_profit": supplier_nation_profit,
+    "revenue_rollup": revenue_rollup,
+    "returned_revenue_by_customer": returned_revenue_by_customer,
+    "small_quantity_revenue": small_quantity_revenue,
+    "large_orders": large_orders,
+    "events_hourly": events_hourly,
+}
+
+#: DuckDB twins, same names; float aggregates are ROUNDed exactly as
+#: the Spark side rounds them
+ORACLES: dict[str, str] = {
+    "pricing_summary": """
+            WITH t AS (
+                SELECT l_returnflag, l_linestatus,
+                       CAST(l_quantity AS DECIMAL(12,2)) AS qty,
+                       CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
+                       CAST(l_discount AS DECIMAL(4,2)) AS disc,
+                       CAST(l_tax AS DECIMAL(4,2)) AS tax
+                FROM lineitem
+                WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+            )
+            SELECT l_returnflag, l_linestatus,
+                   CAST(ROUND(SUM(qty), 2) AS DOUBLE) AS sum_qty,
+                   CAST(ROUND(SUM(price), 2) AS DOUBLE) AS sum_base_price,
+                   CAST(ROUND(SUM(price * (1 - disc)), 2) AS DOUBLE) AS sum_disc_price,
+                   CAST(ROUND(SUM(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE) AS sum_charge,
+                   ROUND(CAST(SUM(qty) AS DOUBLE) / COUNT(qty), 2) AS avg_qty,
+                   ROUND(CAST(SUM(price) AS DOUBLE) / COUNT(price), 2) AS avg_price,
+                   ROUND(CAST(SUM(disc) AS DOUBLE) / COUNT(disc), 4) AS avg_disc,
+                   COUNT(*) AS count_order
+            FROM t
+            GROUP BY l_returnflag, l_linestatus
+            ORDER BY l_returnflag, l_linestatus
+        """,
+    "revenue_by_segment": """
+            SELECT c.c_mktsegment,
+                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                  * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
+                        AS DOUBLE) AS revenue,
+                   COUNT(DISTINCT o.o_orderkey) AS n_orders,
+                   COUNT(DISTINCT c.c_custkey) AS n_customers
+            FROM lineitem l
+            JOIN orders o ON l.l_orderkey = o.o_orderkey
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+            GROUP BY c.c_mktsegment
+            ORDER BY c.c_mktsegment
+        """,
+    "top_customers": """
+            SELECT c.c_custkey, c.c_name,
+                   CAST(ROUND(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))), 2)
+                        AS DOUBLE) AS total_spent,
+                   COUNT(*) AS n_orders
+            FROM orders o
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            GROUP BY c.c_custkey, c.c_name
+            ORDER BY total_spent DESC, c.c_custkey
+            LIMIT 10
+        """,
+    "order_priority_counts": """
+            SELECT o_orderpriority, COUNT(*) AS order_count
+            FROM orders o
+            WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+              AND o_orderdate < TIMESTAMP '1997-01-01'
+              AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
+            GROUP BY o_orderpriority
+            ORDER BY o_orderpriority
+        """,
+    "nation_revenue": """
+            SELECT r.r_name, n.n_name,
+                   CAST(ROUND(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))), 2)
+                        AS DOUBLE) AS revenue,
+                   COUNT(*) AS n_orders
+            FROM orders o
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            JOIN nation n ON c.c_nationkey = n.n_nationkey
+            JOIN region r ON n.n_regionkey = r.r_regionkey
+            GROUP BY r.r_name, n.n_name
+            ORDER BY r.r_name, n.n_name
+        """,
+    "promo_revenue": """
+            SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
+                           THEN CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))
+                           ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
+                       / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS DOUBLE),
+                       4) AS promo_revenue_pct,
+                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
+                        AS DOUBLE) AS total_revenue
+            FROM lineitem l
+            JOIN part p ON l.l_partkey = p.p_partkey
+            WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
+              AND l.l_shipdate < TIMESTAMP '1997-10-01'
+        """,
+    "top_suppliers": """
+            WITH by_supp AS (
+                SELECT l_suppkey,
+                       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+                                    * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2)
+                            AS DOUBLE) AS total_revenue
+                FROM lineitem
+                WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+                  AND l_shipdate < TIMESTAMP '1997-04-01'
+                GROUP BY l_suppkey
+            ),
+            ranked AS (
+                SELECT l_suppkey, total_revenue,
+                       CAST(row_number() OVER (ORDER BY total_revenue DESC,
+                                               l_suppkey) AS INT) AS rk
+                FROM by_supp
+            )
+            SELECT s.s_suppkey, s.s_name, r.total_revenue, r.rk
+            FROM ranked r JOIN supplier s ON r.l_suppkey = s.s_suppkey
+            WHERE r.rk <= 10
+            ORDER BY r.rk
+        """,
+    "brand_stats": """
+            WITH per_brand AS (
+                SELECT p_brand, COUNT(*) AS n_parts,
+                       COUNT(DISTINCT p_type) AS n_types,
+                       COUNT(DISTINCT p_size) AS n_sizes,
+                       ROUND(AVG(CAST(CAST(p_retailprice AS DECIMAL(12,2))
+                                      AS DOUBLE)), 4) AS avg_retail_price
+                FROM part GROUP BY p_brand
+            ),
+            supp_per_brand AS (
+                SELECT p.p_brand,
+                       COUNT(DISTINCT l.l_suppkey) AS n_suppliers
+                FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+                GROUP BY p.p_brand
+            )
+            SELECT b.p_brand, b.n_parts, b.n_types, b.n_sizes,
+                   b.avg_retail_price, s.n_suppliers
+            FROM per_brand b LEFT JOIN supp_per_brand s
+              ON b.p_brand = s.p_brand
+            ORDER BY b.p_brand
+        """,
+    "events_props_stats": """
+            -- CAST(SUM(...) AS BIGINT): DuckDB SUM(BIGINT) yields HUGEINT,
+            -- which pandas renders as float64 and the driver's value hash
+            -- would then see 99111.0 vs Spark's 99111 (the r01 red cell).
+            -- "invalid JSON" is defined on BOTH sides as "not parseable as
+            -- a JSON object": Spark from_json(props, struct) is NULL exactly
+            -- for non-object / malformed input, mirrored here via
+            -- json_valid + json_type = 'OBJECT'.
+            SELECT event_type, COUNT(*) AS n_events,
+                   CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
+                        AS BIGINT) AS sum_k,
+                   ROUND(AVG(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4)
+                       AS avg_k,
+                   MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
+                   MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
+                   COUNT(CASE WHEN props IS NOT NULL AND
+                              (NOT json_valid(props)
+                               OR json_type(props) <> 'OBJECT')
+                         THEN 1 END) AS n_invalid_json
+            FROM events
+            GROUP BY event_type
+            ORDER BY event_type
+        """,
+    "event_anomalies": """
+            WITH hourly AS (
+                SELECT date_trunc('hour', ts) AS hour_start, event_type,
+                       COUNT(*) AS n_events
+                FROM events
+                GROUP BY 1, 2
+            ),
+            stats AS (
+                SELECT hour_start, event_type, n_events,
+                       CAST(SUM(n_events) OVER w AS DOUBLE) AS s1,
+                       CAST(SUM(n_events * n_events) OVER w AS DOUBLE) AS s2,
+                       CAST(COUNT(*) OVER w AS DOUBLE) AS k
+                FROM hourly
+                WINDOW w AS (PARTITION BY event_type)
+            )
+            , scored AS (
+                SELECT CAST(hour_start AS TIMESTAMP) AS hour_start, event_type,
+                       n_events,
+                       ROUND((CAST(n_events AS DOUBLE) - s1 / k)
+                             / sqrt((s2 - s1 * s1 / k) / (k - 1.0)), 4) AS z_score
+                FROM stats
+            )
+            SELECT * FROM scored
+            WHERE abs(z_score) >= 1.5
+            ORDER BY event_type, hour_start
+        """,
+    "customer_order_distribution": """
+            WITH per_cust AS (
+                SELECT c.c_custkey, COUNT(o.o_custkey) AS n_orders
+                FROM customer c
+                LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+                GROUP BY c.c_custkey
+            )
+            SELECT n_orders, COUNT(*) AS n_customers
+            FROM per_cust
+            GROUP BY n_orders
+            ORDER BY n_customers DESC, n_orders DESC
+        """,
+    "supplier_nation_profit": """
+            SELECT n.n_name AS nation,
+                   CAST(year(o.o_orderdate) AS INT) AS o_year,
+                   CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
+                        AS DOUBLE) AS profit,
+                   COUNT(*) AS n_lineitems
+            FROM lineitem l
+            JOIN orders o ON l.l_orderkey = o.o_orderkey
+            JOIN supplier s ON l.l_suppkey = s.s_suppkey
+            JOIN nation n ON s.s_nationkey = n.n_nationkey
+            GROUP BY n.n_name, year(o.o_orderdate)
+            ORDER BY nation, o_year DESC
+        """,
+    "revenue_rollup": """
+            WITH j AS (
+                SELECT r.r_name, n.n_name, o.o_totalprice
+                FROM orders o
+                JOIN customer c ON o.o_custkey = c.c_custkey
+                JOIN nation n ON c.c_nationkey = n.n_nationkey
+                JOIN region r ON n.n_regionkey = r.r_regionkey
+            )
+            SELECT r_name, n_name,
+                   CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(12,2))), 2)
+                        AS DOUBLE) AS revenue,
+                   COUNT(*) AS n_orders,
+                   CAST(GROUPING(r_name) AS INT) AS is_region_total,
+                   CAST(GROUPING(n_name) AS INT) AS is_nation_total
+            FROM j
+            GROUP BY ROLLUP (r_name, n_name)
+            ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
+        """,
+    "returned_revenue_by_customer": """
+            WITH by_cust AS (
+                SELECT o.o_custkey,
+                       CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                                    * (1 - CAST(l.l_discount AS DECIMAL(4,2)))), 2)
+                            AS DOUBLE) AS returned_revenue
+                FROM lineitem l
+                JOIN orders o ON l.l_orderkey = o.o_orderkey
+                WHERE l.l_returnflag = 'R'
+                GROUP BY o.o_custkey
+            )
+            SELECT c.c_custkey, c.c_name, c.c_mktsegment, b.returned_revenue
+            FROM by_cust b JOIN customer c ON b.o_custkey = c.c_custkey
+            ORDER BY b.returned_revenue DESC, c.c_custkey
+            LIMIT 20
+        """,
+    "small_quantity_revenue": """
+            WITH avg_qty AS (
+                SELECT l_partkey,
+                       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
+                           / COUNT(l_quantity) AS avg_qty
+                FROM lineitem GROUP BY l_partkey
+            )
+            SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)))
+                              AS DOUBLE) / 7, 2) AS avg_yearly,
+                   COUNT(*) AS n_small_lineitems
+            FROM lineitem l
+            JOIN avg_qty a ON l.l_partkey = a.l_partkey
+            WHERE l.l_quantity < 0.2 * a.avg_qty
+        """,
+    "large_orders": """
+            WITH big AS (
+                SELECT l_orderkey,
+                       CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(12,2))), 2)
+                            AS DOUBLE) AS total_qty
+                FROM lineitem
+                GROUP BY l_orderkey
+                HAVING CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(12,2))), 2)
+                            AS DOUBLE) > 150.0
+            )
+            SELECT c.c_custkey, c.c_name, o.o_orderkey,
+                   CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate,
+                   ROUND(o.o_totalprice, 2) AS total_price,
+                   b.total_qty
+            FROM big b
+            JOIN orders o ON b.l_orderkey = o.o_orderkey
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            ORDER BY b.total_qty DESC, o.o_orderkey
+            LIMIT 20
+        """,
+    "events_hourly": """
+            SELECT date_trunc('hour', ts) AS hour_start, event_type,
+                   COUNT(*) AS n_events,
+                   CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_value,
+                   COUNT(DISTINCT user_id) AS n_users
+            FROM events
+            GROUP BY date_trunc('hour', ts), event_type
+            ORDER BY hour_start, event_type
+        """,
+}

@@ -1,9 +1,7 @@
 """Cross-nation trade analytics — TPC-H Q7/Q8/Q22-shaped queries over
 the star schema (driver correctness gate).
 
-Kept separate from plans/analytics.py by the rotation rule (that file
-backs r04-proven tail queries and must stay bit-identical). Reference
-parity: these extend the reference's declared report layer
+Reference parity: these extend the reference's declared report layer
 (the dbt staging/mart models in
 config/pipelines/sample_pipeline.yaml:55-99; the model SQL itself is
 empty scaffolding) with the classic
@@ -168,6 +166,12 @@ def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("nation")
     )
 
+
+QUERIES = {
+    "volume_shipping": q_volume_shipping,
+    "market_share": q_market_share,
+    "idle_customer_balance": q_idle_customer_balance,
+}
 
 ORACLES: dict[str, str] = {
     "volume_shipping": """

@@ -1,9 +1,7 @@
 """Procurement & customer-segmentation analytics — TPC-H Q2/Q11/Q16/Q20
 shapes plus the classic retail RFM report (driver correctness gate).
 
-Kept separate from plans/analytics.py and plans/analytics2.py by the
-rotation rule (those files back already-proven queries and must stay
-bit-identical). Reference parity: extends the reference's declared report layer
+Reference parity: extends the reference's declared report layer
 (the dbt staging/mart models in
 config/pipelines/sample_pipeline.yaml:55-99; the model SQL itself is
 empty scaffolding) with the remaining
@@ -239,6 +237,14 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("c_custkey")
     )
 
+
+QUERIES = {
+    "min_cost_supplier": q_min_cost_supplier,
+    "important_parts": q_important_parts,
+    "supplier_diversity": q_supplier_diversity,
+    "promo_excess_suppliers": q_promo_excess_suppliers,
+    "customer_rfm": q_customer_rfm,
+}
 
 ORACLES: dict[str, str] = {
     "min_cost_supplier": f"""

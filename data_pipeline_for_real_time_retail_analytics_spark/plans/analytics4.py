@@ -2,8 +2,6 @@
 (Q3/Q6/Q12/Q19/Q21 analogs) re-expressed on this schema's columns
 (driver correctness gate).
 
-Kept separate from plans/analytics{,2,3}.py by the rotation rule (those
-files back already-proven queries and must stay bit-identical).
 Reference parity: extends the reference's declared report layer
 (the dbt staging/mart models in
 config/pipelines/sample_pipeline.yaml:55-99; the model SQL itself is
@@ -216,6 +214,14 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", "s_name", "nation", "numwait")
     )
 
+
+QUERIES = {
+    "shipping_priority": q_shipping_priority,
+    "forecast_revenue_delta": q_forecast_revenue_delta,
+    "late_shipment_priority": q_late_shipment_priority,
+    "discounted_revenue": q_discounted_revenue,
+    "waiting_suppliers": q_waiting_suppliers,
+}
 
 ORACLES: dict[str, str] = {
     "shipping_priority": f"""

@@ -1,5 +1,4 @@
-"""ANN quality-evaluation harness — staged for a round-10+ driver slot
-via plans/pending_r10.py.
+"""ANN quality-evaluation harness.
 
 ``ann_eval_metrics``: the QA table a retrieval deployment reads before
 trusting an ANN parameterization (the dedup_eval_metrics discipline

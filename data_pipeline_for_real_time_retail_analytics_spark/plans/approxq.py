@@ -1,5 +1,4 @@
-"""Sketch-accuracy profile — staged for a round-10 driver slot via
-plans/pending_r10.py.
+"""Sketch-accuracy profile.
 
 ``approx_profile_orders`` drives the approx tier of
 operators/quality.py (HyperLogLog++ ``approx_count_distinct``,

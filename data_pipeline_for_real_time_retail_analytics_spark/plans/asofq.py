@@ -1,5 +1,4 @@
-"""Tolerance-bounded as-of join query (operators/asof.py) — staged for
-a round-11 driver slot via plans/pending_r11.py.
+"""Tolerance-bounded as-of join query (operators/asof.py).
 
 ``purchase_click_asof``: every purchase attributed to the same user's
 most recent click at-or-before it, but only when the click is at most

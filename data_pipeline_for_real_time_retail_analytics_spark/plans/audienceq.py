@@ -1,5 +1,4 @@
-"""Daily audience decomposition — staged for a round-11 driver slot
-via plans/pending_r11.py.
+"""Daily audience decomposition.
 
 ``daily_new_vs_returning``: per activity day, how many distinct users
 were active, how many were NEW (their first-ever event day is that

@@ -1,9 +1,8 @@
 """Behavioral retail analytics — cohort retention and market-basket
 affinity (driver correctness gate).
 
-Beyond the reference's mart layer but standard retail-analytics surface;
-kept in their own module by the rotation rule (files backing proven
-queries stay bit-identical).
+Beyond the reference's mart layer but standard retail-analytics
+surface.
 
 Cross-engine determinism: counts and integer month arithmetic
 throughout; the two ratio outputs (retention_rate, lift) are each ONE
@@ -135,6 +134,11 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(TOP_PAIRS)
     )
 
+
+QUERIES = {
+    "cohort_retention": q_cohort_retention,
+    "basket_pairs": q_basket_pairs,
+}
 
 ORACLES: dict[str, str] = {
     "cohort_retention": """

@@ -1,6 +1,5 @@
-"""Bloom-prefiltered incremental chunk dedup — staged for a round-11
-driver slot via plans/pending_r11.py (r9 verdict surface-growth ask
-#8a: "Bloom-filter dedup pre-filter composed with the chunk-grain
+"""Bloom-prefiltered incremental chunk dedup (r9 verdict surface-growth
+ask #8a: "Bloom-filter dedup pre-filter composed with the chunk-grain
 tier").
 
 ``bloom_chunk_prefilter``: the standing corpus's 32-token chunk hashes
@@ -17,8 +16,8 @@ Falsifiability: n_verified is ground truth (exact join) and the
 no-false-negative law of Bloom filters demands n_hit ≥ n_verified row
 by row; at this sizing (load k·n/m ≈ 0.04 at sf0.01) false positives
 are ~0, and the FP-accounting path itself is pinned by a unit test
-with a deliberately tiny m (tests/test_pending_r11.py) where FPs are
-forced.
+with a deliberately tiny m (test_bloom_fp_accounting_under_saturation)
+where FPs are forced.
 
 Sizing at scale: m is a per-deployment constant tied to corpus epoch
 size (FP ≈ (1-e^(-k·n/m))^k); production rebuilds the k·m-bounded bit

@@ -1,5 +1,4 @@
-"""BPE merge-candidate mining over the documents corpus — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""BPE merge-candidate mining over the documents corpus.
 
 ``bpe_merge_candidates``: the top-20 adjacent-character pairs by
 word-frequency-weighted count — byte-pair-encoding iteration 1 over

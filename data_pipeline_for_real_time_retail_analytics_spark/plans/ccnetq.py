@@ -1,5 +1,4 @@
-"""CCNet-style per-language perplexity bucketing — staged for a
-round-8/9 driver slot via plans/pending_r8.py.
+"""CCNet-style per-language perplexity bucketing.
 
 The canonical web-corpus quality split (CCNet, Wenzek et al. 2020):
 score every document with a corpus-level language model, then cut each

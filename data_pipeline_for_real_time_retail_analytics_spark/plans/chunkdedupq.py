@@ -1,5 +1,4 @@
-"""Chunk-grain exact dedup query (operators/chunkdedup.py) — staged
-for a round-10 driver slot via plans/pending_r10.py.
+"""Chunk-grain exact dedup query (operators/chunkdedup.py).
 
 ``chunk_dedup_docs``: plant boundary-aligned quote documents (every
 50th doc contributes a copy of its first 64 tokens under a new id),

@@ -1,5 +1,4 @@
-"""Boilerplate-removal query (operators/boilerplate.py) — staged for a
-round-8 driver slot via plans/pending_r8.py.
+"""Boilerplate-removal query (operators/boilerplate.py).
 
 ``boilerplate_removed_docs`` runs the span-removal cleaner over the
 same planted corpus the detector query (``boilerplate_ngrams``,

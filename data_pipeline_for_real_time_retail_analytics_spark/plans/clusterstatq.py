@@ -1,5 +1,4 @@
-"""Near-dup cluster-size histogram — staged for a round-11 driver slot
-via plans/pending_r11.py.
+"""Near-dup cluster-size histogram.
 
 ``dup_cluster_sizes``: (cluster_size, n_clusters) over the MinHash
 near-dup connected components — the one-glance duplication profile a

@@ -1,5 +1,4 @@
-"""Count-min sketch frequency queries (operators/cms.py) — staged for a
-round-10+ driver slot via plans/pending_r10.py.
+"""Count-min sketch frequency queries (operators/cms.py).
 
 ``cms_heavy_tokens``: the classic "sample for candidates, sketch for
 counts" heavy-hitter pattern — candidate tokens come from a

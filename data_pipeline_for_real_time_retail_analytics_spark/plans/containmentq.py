@@ -1,5 +1,4 @@
-"""Containment-duplicate query (operators/containment.py) — staged for
-a round-9 driver slot via plans/pending_r9.py.
+"""Containment-duplicate query (operators/containment.py).
 
 ``containment_dup_pairs``: ordered (contained, container) pairs over
 the PLANTED corpus (plans/llm.py conventions: originals ∪ every-25th

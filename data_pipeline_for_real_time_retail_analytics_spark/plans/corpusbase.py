@@ -1,23 +1,15 @@
 """Shared corpus-pipeline builders for the LLM-curation plan family.
 
-Split out of ``plans/llm.py`` (r10, judge ask #3): twenty plan modules
-consume the planted-corpus conventions (``_docs``/``_embs`` loaders,
-plant parameters, the shared MinHash pair materialization), but
-``plans/llm.py`` also hosts the ANN showcase queries and therefore
-imports ``operators/similarity.py`` — so any ANN experiment edit used
-to re-stale the ENTIRE dedup/text/quantization family through this one
-closure edge (24 queries re-staled by one similarity.py touch in r8).
+Twenty plan modules consume the planted-corpus conventions
+(``_docs``/``_embs`` loaders, plant parameters, the shared MinHash pair
+materialization). ``plans/llm.py`` also hosts the ANN showcase queries
+and imports ``operators/similarity.py``; keeping the shared builders
+here lets those modules load without it.
 
-This module is deliberately a LEAF: its only package imports are
+This module is a LEAF: its only package imports are
 ``operators/dedup.py`` (planting + MinHash pairs) and ``sources``
 (load_table). Consumers of the shared builders import from HERE;
-``plans/llm.py`` re-exports for backward compatibility but is no longer
-in their closure. ``tests/test_rotation_guard.py::
-test_similarity_edit_stales_only_ann_family`` pins the resulting
-closure shape.
-
-Everything below is byte-identical in behavior to the pre-split
-``plans/llm.py`` definitions (same cache objects, same parameters).
+``plans/llm.py`` re-exports them for backward compatibility.
 """
 
 from __future__ import annotations

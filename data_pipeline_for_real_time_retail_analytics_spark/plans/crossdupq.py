@@ -1,5 +1,4 @@
-"""Cross-source n-gram overlap matrix — staged for a round-11 driver
-slot via plans/pending_r11.py.
+"""Cross-source n-gram overlap matrix.
 
 ``source_overlap_matrix``: for every pair of sources sharing at least
 one distinct word 8-gram, the count of shared grams and a floor-ppm

@@ -52,6 +52,11 @@ def _mixture_targets_case() -> str:
     return f"CASE lang {arms} END"
 
 
+QUERIES = {
+    "boilerplate_ngrams": q_boilerplate_ngrams,
+    "mixture_sample_docs": q_mixture_sample_docs,
+}
+
 ORACLES: dict[str, str] = {
     "boilerplate_ngrams": rf"""
         WITH {PLANTED},

@@ -1,5 +1,4 @@
-"""CUSUM changepoint detection over daily event volumes — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""CUSUM changepoint detection over daily event volumes.
 
 ``event_count_cusum``: per event type, the one-sided CUSUM statistic
 over the DENSIFIED daily count series (zero-count days are exactly the

@@ -1,5 +1,4 @@
-"""Dedup quality-evaluation harness — staged for a round-10 driver
-slot via plans/pending_r10.py.
+"""Dedup quality-evaluation harness.
 
 ``dedup_eval_metrics``: score the MinHash-LSH near-dup detector against
 the corpus's PLANTED ground truth — (n_truth, n_found, tp, fp, fn,

@@ -1,5 +1,4 @@
-"""Distribution-drift queries (operators/drift.py) — staged for a
-round-10+ driver slot via plans/pending_r10.py.
+"""Distribution-drift queries (operators/drift.py).
 
 ``events_value_drift``: per event-type PSI of the ``value``
 distribution between the first half of the event window (reference,

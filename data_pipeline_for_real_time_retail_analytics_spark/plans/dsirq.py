@@ -1,5 +1,4 @@
-"""DSIR importance-selection query (operators/dsir.py) — staged for a
-round-8 driver slot via plans/pending_r8.py.
+"""DSIR importance-selection query (operators/dsir.py).
 
 ``dsir_selected``: the 100 corpus documents whose hashed-unigram
 feature mix best matches the TARGET domain (here: the ``lang = 'en'``

@@ -1,5 +1,4 @@
-"""Embedding-space drift: per-label centroid alignment — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""Embedding-space drift: per-label centroid alignment.
 
 ``label_centroid_shift``: for every label (a source, a day, a shard —
 any slice of an embedded corpus), the cosine between its centroid

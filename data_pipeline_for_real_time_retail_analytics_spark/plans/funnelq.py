@@ -1,5 +1,4 @@
-"""End-to-end curation funnel — staged for a round-11 driver slot via
-plans/pending_r11.py.
+"""End-to-end curation funnel.
 
 ``curation_funnel``: the one-table summary a production curation run
 prints — document and token counts after each pipeline stage, on a

@@ -1,5 +1,4 @@
-"""Blocked fuzzy-matching query (operators/fuzzy.py) — staged for a
-round-9 driver slot via plans/pending_r9.py.
+"""Blocked fuzzy-matching query (operators/fuzzy.py).
 
 ``fuzzy_customer_pairs``: customer records one typo apart
 (levenshtein ≤ 1 on c_name), blocked by nation — the record-linkage /

@@ -1,5 +1,4 @@
-"""Hard-negative mining for contrastive training — staged for a
-round-10+ driver slot via plans/pending_r10.py.
+"""Hard-negative mining for contrastive training.
 
 ``hard_negatives``: the training-data prep step for contrastive /
 retrieval models (in-batch negatives are easy; the gradient signal

@@ -1,5 +1,4 @@
-"""Hilbert-curve layout queries (operators/hilbert.py) — staged for a
-round-10+ driver slot via plans/pending_r10.py.
+"""Hilbert-curve layout queries (operators/hilbert.py).
 
 ``hilbert_values``: the Hilbert index for every order over
 (o_custkey, epoch-day) — the exact twin of the registered

@@ -1,12 +1,11 @@
-"""Incremental ANN index maintenance — staged for a round-11 driver
-slot via plans/pending_r11.py.
+"""Incremental ANN index maintenance.
 
 ``incremental_ann_new_vecs``: a new embedding ingest batch probed
 against the STANDING corpus index — the vector-store twin of
 incremental_dedup_new_docs (text tier). Only the batch is hashed
 fresh; the corpus side is the persisted sign-LSH bucket table a
 deployment maintains across epochs (the recompute-vs-index economics
-are measured in bench_incremental_index.py for the text twin; the
+are measured for the text twin in NOTES.md; the
 shape here is identical — batch bucket probe, candidates = the batch's
 bucket collisions, exact cosine rerank on candidates only).
 
@@ -85,19 +84,6 @@ QUERIES = {
     "incremental_ann_new_vecs": q_incremental_ann_new_vecs,
 }
 
-# DuckDB mirror of similarity.sign_lsh_bucket over an ALIASED column —
-# llm_oracles._bucket_expr is the same definition with the column name
-# hardcoded to `embedding`; parameterizing it there would edit a module
-# inside every registered ANN oracle closure (a mass re-stale), so the
-# column-parameterized twin lives here until a rotation round adopts it
-def _bucket(col: str) -> str:
-    return " + ".join(
-        f"CASE WHEN {col}[{i + 1}] > 0 THEN CAST({1 << i} AS BIGINT) "
-        f"ELSE CAST(0 AS BIGINT) END"
-        for i in range(8)
-    )
-
-
 _COSINE = LO._cosine("qv", "cv")
 
 ORACLES: dict[str, str] = {
@@ -110,9 +96,9 @@ ORACLES: dict[str, str] = {
                    list_reverse(embedding) AS qv
             FROM embeddings WHERE vec_id % {NOVEL_EVERY} = 0
         ),
-        q AS (SELECT query_id, qv, {_bucket('qv')} AS bucket FROM batch),
+        q AS (SELECT query_id, qv, {LO._bucket_expr(col='qv')} AS bucket FROM batch),
         c AS (SELECT vec_id AS match_id, embedding AS cv,
-                     {_bucket('embedding')} AS bucket
+                     {LO._bucket_expr()} AS bucket
               FROM embeddings),
         sims AS (
             SELECT query_id, match_id, bucket, {_COSINE} AS sim

@@ -1,5 +1,4 @@
-"""IVF-PQ composed ANN (Jégou et al. 2011's full architecture) —
-staged for a round-10 driver slot via plans/pending_r10.py.
+"""IVF-PQ composed ANN (Jégou et al. 2011's full architecture).
 
 ``ivfpq_topk`` composes the engine's two ANN substrates into the shape
 production vector stores (FAISS IVFPQ, SCANN) actually deploy at

@@ -1,5 +1,4 @@
-"""KMV distinct-count sketch queries (operators/kmv.py) — staged for a
-round-9 driver slot via plans/pending_r9.py.
+"""KMV distinct-count sketch queries (operators/kmv.py).
 
 ``kmv_distinct_tokens``: per-source bottom-256 sketch of the token
 vocabulary — (source, n_kept, kth_hash, est_distinct, exact_distinct).

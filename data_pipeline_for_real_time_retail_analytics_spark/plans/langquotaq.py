@@ -1,5 +1,4 @@
-"""Per-language quality-quota corpus composition — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""Per-language quality-quota corpus composition.
 
 ``lang_quality_mix``: the mixture × quota composition the r9 verdict
 lists as surface-growth ask #8c. Two registered tiers compose:
@@ -28,7 +27,7 @@ so it runs in DECIMAL(38,0) ↔ HUGEINT (the plans/skewq.py idiom).
 Scale shape: scoring is per-row expressions; the per-language
 row_number window shuffles once on lang — language is low-cardinality
 and head-heavy, but the window's sort is bounded by the language's own
-row count (the bench_skew_probe.py argument), and the quota targets
+row count (the hot-key probe argument in NOTES.md), and the quota targets
 come from a language-count frame that is KB-sized at any corpus scale
 (broadcast join back).
 """

@@ -1,5 +1,4 @@
-"""Sequence-length bucketing audit — staged for a round-11 driver slot
-via plans/pending_r11.py.
+"""Sequence-length bucketing audit.
 
 ``length_bucket_stats``: assign every document to a power-of-two
 token-length bucket (32, 64, …, 8192 — the length-grouped-batching

@@ -7,7 +7,7 @@ duplicates first (union of mutated copies under offset ids) so the checks
 have known positives instead of vacuously-empty results.
 
 All outputs are deterministically ordered; every column is aliased to
-match the DuckDB oracle in ``__spark_entry__.oracle_sql()``.
+match its DuckDB oracle in ``ORACLES`` at the bottom of this module.
 """
 
 from __future__ import annotations
@@ -52,11 +52,11 @@ from ..operators.textstats import (
     token_stats,
 )
 from ..sources import load_table
+from . import llm_oracles as LO
 
-# Shared corpus builders live in plans/corpusbase.py since r10 (leaf
-# module — see its docstring for why). Re-exported here so external
-# callers keep working; sibling plan modules import corpusbase directly
-# to keep operators/similarity.py OUT of their rotation closure.
+# Shared corpus builders live in plans/corpusbase.py (a leaf module).
+# Re-exported here so external callers keep working; sibling plan
+# modules import corpusbase directly.
 from .corpusbase import (  # noqa: F401  (re-exports)
     ID_OFFSET,
     PLANT_EVERY_DOCS,
@@ -329,3 +329,70 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: payload bytes through an Arrow-batched
     mapInPandas featurizer (deterministic stand-in for a codec)."""
     return extract_features(media_table(_docs(spark, sf_dir))).orderBy("doc_id")
+
+
+QUERIES = {
+    "minhash_lsh_dupes": q_minhash_lsh_dupes,
+    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
+    "contaminated_docs": q_contaminated_docs,
+    "simhash_pairs": q_simhash_pairs,
+    "simhash_values": q_simhash_values,
+    "exact_dedup_docs": q_exact_dedup_docs,
+    "dedup_clusters": q_dedup_clusters,
+    "token_entropy": q_token_entropy,
+    "token_stats": q_token_stats,
+    "language_id": q_language_id,
+    "quality_score": q_quality_score,
+    "tfidf_top_terms": q_tfidf_top_terms,
+    "repetition_ratio": q_repetition_ratio,
+    "corpus_filter": q_corpus_filter,
+    "ann_sign_lsh": q_ann_sign_lsh,
+    "ann_multiprobe": q_ann_multiprobe,
+    "ann_multitable": q_ann_multitable,
+    "ann_ivf": q_ann_ivf,
+    "embedding_near_dup": q_embedding_near_dup,
+    "cosine_topk": q_cosine_topk,
+    "multimodal_features": q_multimodal_features,
+    "chunked_docs": q_chunked_docs,
+    "cleaned_docs": q_cleaned_docs,
+    "doc_fingerprints": q_doc_fingerprints,
+    "benford_profile": q_benford_profile,
+    "train_split_counts": q_train_split_counts,
+    "stratified_sample_docs": q_stratified_sample_docs,
+    "incremental_dedup_new_docs": q_incremental_dedup_new_docs,
+    "dedup_survivors": q_dedup_survivors,
+}
+
+#: DuckDB twins rendered by llm_oracles.py (md5/bit-arithmetic based,
+#: so even MinHash/SimHash/cosine are value-checked, not rows-only)
+ORACLES: dict[str, str] = {
+    "minhash_lsh_dupes": LO.minhash_lsh_dupes(),
+    "ngram_jaccard_pairs": LO.ngram_jaccard_pairs(),
+    "contaminated_docs": LO.contaminated_docs(),
+    "simhash_pairs": LO.simhash_pairs(),
+    "simhash_values": LO.simhash_values(),
+    "exact_dedup_docs": LO.exact_dedup_docs(),
+    "dedup_clusters": LO.dedup_clusters(),
+    "token_entropy": LO.token_entropy(),
+    "token_stats": LO.token_stats(),
+    "language_id": LO.language_id(),
+    "quality_score": LO.quality_score(),
+    "tfidf_top_terms": LO.tfidf_top_terms(),
+    "repetition_ratio": LO.repetition_ratio(),
+    "corpus_filter": LO.corpus_filter(),
+    "ann_sign_lsh": LO.ann_sign_lsh(),
+    "ann_multiprobe": LO.ann_multiprobe(),
+    "ann_multitable": LO.ann_multitable(),
+    "ann_ivf": LO.ann_ivf(),
+    "embedding_near_dup": LO.embedding_near_dup(),
+    "cosine_topk": LO.cosine_topk(),
+    "multimodal_features": LO.multimodal_features(),
+    "chunked_docs": LO.chunked_docs(),
+    "cleaned_docs": LO.cleaned_docs(),
+    "doc_fingerprints": LO.doc_fingerprints(),
+    "benford_profile": LO.benford_profile(),
+    "train_split_counts": LO.train_split_counts(),
+    "stratified_sample_docs": LO.stratified_sample_docs(),
+    "incremental_dedup_new_docs": LO.incremental_near_dups(split_at=10_000_000),
+    "dedup_survivors": LO.dedup_survivors(),
+}

@@ -626,11 +626,12 @@ def cosine_topk(k: int = 5, every: int = 100) -> str:
     """
 
 
-def _bucket_expr(n_bits: int = 8, offset: int = 0) -> str:
-    """Axis-sign LSH bucket over dimension block [offset, offset+n_bits) —
-    mirrors similarity.sign_lsh_bucket bit for bit."""
+def _bucket_expr(n_bits: int = 8, offset: int = 0, col: str = "embedding") -> str:
+    """Axis-sign LSH bucket of vector column ``col`` over dimension block
+    [offset, offset+n_bits) — mirrors similarity.sign_lsh_bucket bit for
+    bit."""
     return " + ".join(
-        f"CASE WHEN embedding[{offset + i + 1}] > 0 THEN CAST({1 << i} AS BIGINT) "
+        f"CASE WHEN {col}[{offset + i + 1}] > 0 THEN CAST({1 << i} AS BIGINT) "
         f"ELSE CAST(0 AS BIGINT) END"
         for i in range(n_bits)
     )
@@ -859,11 +860,8 @@ def multimodal_features() -> str:
     """
 
 
-#: Bigram-LM per-document perplexity oracle (operators/lm.py twin).
-#: Hosted here (leaf module) rather than in plans/training.py so that
-#: plans/ccnetq.py can reuse its scored-docs CTE without pulling
-#: training.py's operators/similarity.py edge into its rotation
-#: closure (r10 closure split).
+#: Bigram-LM per-document perplexity oracle (operators/lm.py twin),
+#: shared by plans/training.py and plans/ccnetq.py's scored-docs CTE.
 LM_PERPLEXITY_ORACLE = rf"""
         WITH t AS (SELECT doc_id, {TOKS} AS w FROM documents),
         bg AS (

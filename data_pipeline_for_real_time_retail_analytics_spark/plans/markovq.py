@@ -1,5 +1,5 @@
 """Event-transition matrix (first-order Markov chain over user
-journeys) — staged for a round-9 driver slot via plans/pending_r9.py.
+journeys).
 
 ``event_transitions``: for every ordered pair of event types, how many
 times a user's NEXT event was of the second type, plus the row-

@@ -1,5 +1,4 @@
-"""Robust outlier detection over event values — staged for a round-11
-driver slot via plans/pending_r11.py.
+"""Robust outlier detection over event values.
 
 ``robust_outlier_events``: per event type, the median / MAD (median
 absolute deviation) robust location-scale pair and the count of values

@@ -1,5 +1,4 @@
-"""Co-purchase PageRank query (operators/pagerank.py) — staged for a
-round-9 driver slot via plans/pending_r9.py.
+"""Co-purchase PageRank query (operators/pagerank.py).
 
 ``part_pagerank``: the 20 most central parts in the co-purchase graph
 (parts are linked when some order contains both), after 3 exact-integer

@@ -1,5 +1,4 @@
-"""Near-duplicate similarity histogram — staged for a round-11 driver
-slot via plans/pending_r11.py.
+"""Near-duplicate similarity histogram.
 
 ``pair_jaccard_histogram``: the verified MinHash near-dup pairs
 bucketed into 0.05-wide Jaccard bins — the similarity PROFILE of the

@@ -1,5 +1,4 @@
-"""Exact phrase search over the positional index — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""Exact phrase search over the positional index.
 
 ``phrase_search``: every document containing the exact adjacent token
 sequence PHRASE ("value table" — ~38 matching docs at sf0.01, some
@@ -7,7 +6,7 @@ with repeats, most of the corpus with none), ranked by hit count.
 Positional-index semantics: distinct start positions count as
 distinct hits. The ≥3-term join chain and overlapping-repeat
 semantics are pinned on a hand-built corpus in
-tests/test_pending_r11.py (the synthetic vocabulary makes longer
+the phrase tests under tests/ (the synthetic vocabulary makes longer
 phrases vanishingly rare, which would leave the driver row too thin).
 
 Exactness: token positions are integers on both engines (posexplode ↔

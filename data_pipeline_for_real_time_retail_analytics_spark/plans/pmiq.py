@@ -1,5 +1,4 @@
-"""PMI collocation extraction — staged for a round-10+ driver slot via
-plans/pending_r10.py.
+"""PMI collocation extraction.
 
 ``pmi_collocations``: top-20 adjacent-token collocations by pointwise
 mutual information (Church & Hanks 1990, "Word association norms,

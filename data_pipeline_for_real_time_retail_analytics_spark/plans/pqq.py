@@ -1,5 +1,4 @@
-"""Product-quantization queries (operators/pq.py) — staged for a
-round-8 driver slot via plans/pending_r8.py.
+"""Product-quantization queries (operators/pq.py).
 
 Two registered shapes:
 

@@ -1,5 +1,4 @@
-"""Weighted corpus sampling via priority sampling — staged for a
-round-11 driver slot via plans/pending_r11.py.
+"""Weighted corpus sampling via priority sampling.
 
 ``priority_sample_docs``: a deterministic Duffield–Lund–Thorup
 weighted sample of the corpus, k = 100, weighted by document length

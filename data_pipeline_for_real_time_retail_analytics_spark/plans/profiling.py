@@ -246,6 +246,15 @@ def q_events_hourly_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+QUERIES = {
+    "price_quantiles": q_price_quantiles,
+    "event_funnel": q_event_funnel,
+    "customer_running_spend": q_customer_running_spend,
+    "segment_year_pivot": q_segment_year_pivot,
+    "events_cube": q_events_cube,
+    "events_hourly_dense": q_events_hourly_dense,
+}
+
 ORACLES: dict[str, str] = {
     "events_hourly_dense": """
         WITH ev AS (

@@ -1,5 +1,4 @@
-"""Batch interval-join correlation — staged for a round-11 driver slot
-via plans/pending_r11.py.
+"""Batch interval-join correlation.
 
 ``click_error_interval``: every (click, error) event pair by the same
 user where the error follows the click within ``GAP_SECONDS`` — the

@@ -39,10 +39,8 @@ the executors.
 Reference parity: the reference has no time-series tooling at all; this
 is part of the mandated beyond-reference curation suite.
 
-NOT registered in ``__spark_entry__`` in round 7 — the front window is
-exactly consumed by the catch-up cohorts (ROTATION.json). Staged via
-plans/pending_r8.py; tests/test_resampleq.py runs the driver-identical
-parity comparison at sf0.01.
+tests/test_resampleq.py pins the semantics; driver-identical parity
+runs in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations

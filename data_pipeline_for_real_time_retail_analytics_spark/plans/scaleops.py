@@ -108,6 +108,11 @@ def q_compacted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
+QUERIES = {
+    "bloom_pruned_fetch": q_bloom_pruned_fetch,
+    "compacted_corpus": q_compacted_corpus,
+}
+
 ORACLES: dict[str, str] = {
     "bloom_pruned_fetch": f"""
         SELECT d.doc_id, d.source, d.lang, d.n_chars

@@ -1,18 +1,12 @@
-"""Semantic-dedup showcase queries (registry-ready for round 7).
+"""Semantic-dedup showcase queries.
 
 Wraps operators/semdedup.py over the embeddings table: the survivor
 set of the within-cluster SemDeDup prune and its per-cluster
 accounting. Both have exact DuckDB oracles (the codebook is the
 deterministic id-ordered seed set, same as ``embedding_clusters``).
 
-NOT registered in ``__spark_entry__`` this round: the r6 front window
-is exactly consumed by the 20 never-green + 30 guard-mandated queries
-(see the rotation ledger), and a new registry entry is never-green by
-definition — the rotation guard would (correctly) refuse it a tail
-slot. The local parity gate (tests/test_semdedup.py) runs the exact
-driver comparison in the meantime; flip the registry entries in r7
-when slots free. Oracle/int conventions match the driver contract:
-identical column names both sides, BIGINT counts, ROUND(x, 6) doubles.
+Oracle/int conventions match the driver contract: identical column
+names both sides, BIGINT counts, ROUND(x, 6) doubles.
 """
 
 from __future__ import annotations

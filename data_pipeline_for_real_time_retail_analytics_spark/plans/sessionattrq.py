@@ -1,5 +1,4 @@
-"""Session-grain first-touch attribution — staged for a round-10
-driver slot via plans/pending_r10.py.
+"""Session-grain first-touch attribution.
 
 ``session_first_touch``: gap-sessionize the event stream (10-minute
 inactivity, the plans/temporal.py convention), then attribute each

@@ -1,5 +1,4 @@
-"""Mergeable HLL sketch roll-up through the driver gate — staged for a
-round-10 driver slot via plans/pending_r10.py.
+"""Mergeable HLL sketch roll-up through the driver gate.
 
 ``sketch_rollup_events``: per-event-type approximate distinct users
 (Datasketches HLL via ``hll_sketch_agg``) PLUS a grand-total row whose

@@ -1,5 +1,4 @@
-"""Join-key skew diagnostic — staged for a round-9 driver slot via
-plans/pending_r9.py.
+"""Join-key skew diagnostic.
 
 ``join_key_skew``: the frequency profile a shuffle-join planner needs
 BEFORE the job runs: for the heaviest join keys of the fact table,

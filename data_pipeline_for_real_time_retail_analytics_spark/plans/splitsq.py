@@ -1,5 +1,4 @@
-"""Leakage-safe train/val/test splits (cluster-aware) — staged for a
-round-9 driver slot via plans/pending_r9.py.
+"""Leakage-safe train/val/test splits (cluster-aware).
 
 ``cluster_safe_splits``: the standard hash split
 (operators/sampling.py ``train_val_test_split``) keyed on the

@@ -1,5 +1,4 @@
-"""Scalar-quantization queries (operators/sq.py) — staged for a
-round-8/9 driver slot via plans/pending_r8.py.
+"""Scalar-quantization queries (operators/sq.py).
 
 Two registered shapes, completing the compression spectrum next to
 product quantization (plans/pqq.py — 16-64× lossy): SQ8 is the 4×

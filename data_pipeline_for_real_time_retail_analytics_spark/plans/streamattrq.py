@@ -1,5 +1,4 @@
-"""STREAMING session first-touch attribution — staged for a round-10
-driver slot via plans/pending_r10.py.
+"""STREAMING session first-touch attribution.
 
 ``stream_session_first_touch``: the plans/sessionattrq.py attribution
 computed by an ACTUAL Structured Streaming execution — a
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sessionattrq import GAP_MINUTES, PPM
-from .streamq import _drain, _stage_events
+from .streamq import _drain, stage_table
 from ..streaming.ingest import file_stream
 
 #: late-data allowance for the watermark (the streamq convention)
@@ -36,7 +35,7 @@ DELAY = "60 minutes"
 def q_stream_session_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(first_type, n_sessions, n_converted, conv_ppm, purchase_cents)
     — batch-equal, computed by a real streaming run."""
-    stream = file_stream(spark, _stage_events(spark, sf_dir)).select(
+    stream = file_stream(spark, stage_table(spark, sf_dir, "events")).select(
         "user_id",
         "ts",
         "event_id",

@@ -1,5 +1,4 @@
-"""STREAMING count-min sketch maintenance — staged for a round-10
-driver slot via plans/pending_r10.py.
+"""STREAMING count-min sketch maintenance.
 
 ``stream_cms_heavy_tokens``: the plans/cmsq.py heavy-hitter answer with
 the sketch maintained by an ACTUAL Structured Streaming execution: the
@@ -27,9 +26,6 @@ column from the established batch paths.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,11 +33,10 @@ from pyspark.sql import types as T
 from ..operators.cms import DEPTH, WIDTH, cms_col_hash, cms_estimate
 from ..operators.sampling import hash_bucket
 from ..operators.textstats import ws_tokens
-from ..sources import load_table
 from ..streaming.ingest import file_stream
 from .cmsq import SAMPLE_MOD, TOP_N, _ranked, _toks
 from .cmsq import ORACLES as _BATCH_ORACLES
-from .streamq import _drain_overlapped
+from .streamq import _drain_overlapped, stage_table
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -53,26 +48,13 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-#: staged streaming-readable corpus dirs, per (application, sf_dir) —
-#: the plans/streamq.py _STAGED convention
-_STAGED: dict[tuple[str, str], str] = {}
-
-
-def _stage_docs(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _STAGED.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    out = tempfile.mkdtemp(prefix="streamcms_docs_")
-    load_table(spark, sf_dir, "documents").write.mode("overwrite").parquet(out)
-    _STAGED[key] = out
-    return out
-
 
 def q_stream_cms_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 sample candidates by the STREAM-maintained CMS estimate —
     batch-equal by linearity, proven by the shared oracle."""
-    stream = file_stream(spark, _stage_docs(spark, sf_dir), schema=DOCS_SCHEMA)
+    stream = file_stream(
+        spark, stage_table(spark, sf_dir, "documents"), schema=DOCS_SCHEMA
+    )
     # The staged corpus is 1-2 parquet files read in a single micro-
     # batch, and each file maps to ONE input partition at stream read —
     # so the ws_tokens explode + depth-way cell fanout ran on 1-2 cores

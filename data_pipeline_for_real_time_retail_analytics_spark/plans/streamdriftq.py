@@ -1,5 +1,4 @@
-"""STREAMING drift monitoring — staged for a round-11 driver slot via
-plans/pending_r11.py.
+"""STREAMING drift monitoring.
 
 ``stream_events_value_drift``: the plans/driftq.py window-vs-window PSI
 with its (event_type, bin, ref/cur) count state maintained by an
@@ -29,14 +28,14 @@ from ..operators.drift import complete_bins, fixed_width_bin, psi_micro
 from .driftq import SPLIT_TS, VALUE_BIN_WIDTH
 from .driftq import ORACLES as _BATCH_ORACLES
 from ..streaming.ingest import file_stream
-from .streamq import _drain, _stage_events
+from .streamq import _drain, stage_table
 
 
 def q_stream_events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event-type PSI (micro-units) from STREAM-maintained bin
     counts — batch-equal by count linearity, proven by the shared
     oracle text."""
-    stream = file_stream(spark, _stage_events(spark, sf_dir))
+    stream = file_stream(spark, stage_table(spark, sf_dir, "events"))
     is_ref = F.col("ts") < F.lit(SPLIT_TS).cast("timestamp")
     cells = (
         stream.select(

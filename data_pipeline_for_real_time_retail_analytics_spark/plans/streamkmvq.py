@@ -1,5 +1,4 @@
-"""STREAMING KMV cardinality maintenance — staged for a round-11
-driver slot via plans/pending_r11.py.
+"""STREAMING KMV cardinality maintenance.
 
 ``stream_kmv_distinct_bigrams``: per-source distinct TOKEN-BIGRAM
 cardinality with the bottom-256 sketch maintained by an ACTUAL
@@ -36,59 +35,30 @@ exactly the sketch build the 100 TB monitor would run.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import word_shingles
 from ..operators.kmv import HASH_BITS, kmv_estimate, kmv_hash
-from ..sources import load_table
 from ..streaming.ingest import file_stream
 from ..streaming.kmvstate import kmv_sketch_stream
 from .corpusbase import _docs
 from .kmvq import K
 from .llm_oracles import TOKS
 from .streamcmsq import DOCS_SCHEMA
-from .streamq import _drain_overlapped
+from .streamq import _drain_overlapped, stage_table
 
-#: staged MULTI-FILE corpus dirs, per (application, sf_dir) — the
-#: streamcmsq._stage_docs convention, but repartitioned so the
-#: AvailableNow drive at maxFilesPerTrigger=1 runs SEVERAL micro-
-#: batches (streamcmsq's single-file staging would collapse the run to
-#: one batch and the cross-batch merge law would never fire; pinned in
-#: tests via the emitted monotone update counter). Bottom-k is
-#: order-insensitive, so the hash repartitioning cannot affect values.
-#: 3 files = 3 state updates per source (1 init + 2 genuine
-#: cross-batch merges) — the minimum that exercises the law more than
-#: once; measured at sf0.1, each micro-batch costs ~2.4 s of FIXED
-#: drive overhead (planning + 8 state-store commits + Python worker
-#: round-trip), so 6 files doubled the cell wall for no additional
-#: semantic coverage (steady-state drive 14.5 → 7.3 s). NOTE: this
-#: helper deliberately does NOT reuse streamcmsq._stage_docs (which
-#: lacks the repartition) — streamcmsq.py backs the REGISTERED
-#: stream_cms_heavy_tokens query, and editing it to add an n_files
-#: parameter would re-stale that query's rotation closure for one
-#: line of sharing (the round-6 dedup.py precedent).
+#: staged file count: the AvailableNow drive at maxFilesPerTrigger=1
+#: runs one micro-batch per file, so 3 files = 3 state updates per
+#: source (1 init + 2 genuine cross-batch merges) — the minimum that
+#: exercises the merge law more than once (pinned in tests via the
+#: emitted monotone update counter). Bottom-k is order-insensitive, so
+#: the staging repartition cannot affect values. Measured at sf0.1,
+#: each micro-batch costs ~2.4 s of FIXED drive overhead (planning + 8
+#: state-store commits + Python worker round-trip), so 6 files doubled
+#: the cell wall for no additional semantic coverage (steady-state
+#: drive 14.5 → 7.3 s).
 _N_STAGE_FILES = 3
-_STAGED_MULTI: dict[tuple[str, str], str] = {}
-
-
-def _stage_docs_multi(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _STAGED_MULTI.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    out = tempfile.mkdtemp(prefix="streamkmv_docs_")
-    (
-        load_table(spark, sf_dir, "documents")
-        .repartition(_N_STAGE_FILES)
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    _STAGED_MULTI[key] = out
-    return out
 
 
 def _bigram_hashes(docs: DataFrame) -> DataFrame:
@@ -103,7 +73,9 @@ def q_stream_kmv_distinct_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame
     """Per-source KMV bigram-vocabulary estimate from the STREAM-
     maintained sketch, next to the exact distinct."""
     stream = file_stream(
-        spark, _stage_docs_multi(spark, sf_dir), schema=DOCS_SCHEMA,
+        spark,
+        stage_table(spark, sf_dir, "documents", _N_STAGE_FILES),
+        schema=DOCS_SCHEMA,
         max_files_per_trigger=1,
     )
     # At maxFilesPerTrigger=1 each micro-batch is ONE parquet file =

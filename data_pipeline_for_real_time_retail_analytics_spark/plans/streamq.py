@@ -40,20 +40,30 @@ from data_pipeline_for_real_time_retail_analytics_spark.streaming.ingest import 
     windowed_aggregate,
 )
 
-# staged-events cache: one staging hop per (Spark application, sf_dir),
-# so a long driver session that re-drives these queries leaves /tmp flat
-# instead of accreting one copy of the events table per call
-_STAGED: dict[tuple[str, str], str] = {}
+# staged-table cache: one staging hop per (Spark application, sf_dir,
+# table, file count), so a long driver session that re-drives these
+# queries leaves /tmp flat instead of accreting one copy of the table
+# per call
+_STAGED: dict[tuple[str, str, str, int | None], str] = {}
 
 
-def _stage_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events table as a streaming-readable (µs ts) parquet dir."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+def stage_table(
+    spark: SparkSession, sf_dir: str, table: str, n_files: int | None = None
+) -> str:
+    """Write ``table`` as a streaming-readable (µs ts) parquet dir.
+
+    ``n_files`` repartitions the rows into that many files first, so a
+    ``maxFilesPerTrigger=1`` drive runs that many micro-batches; by
+    default the table keeps its own file layout."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), table, n_files)
     cached = _STAGED.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    out = tempfile.mkdtemp(prefix="streamq_events_")
-    load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(out)
+    out = tempfile.mkdtemp(prefix=f"streamq_{table}_")
+    df = load_table(spark, sf_dir, table)
+    if n_files is not None:
+        df = df.repartition(n_files)
+    df.write.mode("overwrite").parquet(out)
     _STAGED[key] = out
     return out
 
@@ -122,6 +132,7 @@ def _drain_overlapped(
     spark.catalog.dropTempView(name)
     ckpt = tempfile.mkdtemp(prefix="streamq_ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    q = None
     try:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
@@ -136,8 +147,11 @@ def _drain_overlapped(
         )
         batch = batch_df.localCheckpoint()  # overlaps the drive
         q.awaitTermination()
-        q.stop()
     finally:
+        # a failed batch action must not leave the stream running, nor
+        # delete the checkpoint dir under it
+        if q is not None:
+            q.stop()
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name), batch
@@ -147,7 +161,7 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windowed aggregation per event type, computed by an
     actual Structured Streaming execution. Epoch-aligned ``window()``
     buckets equal ``date_trunc('hour', ts)`` on the oracle side."""
-    stream = file_stream(spark, _stage_events(spark, sf_dir))
+    stream = file_stream(spark, stage_table(spark, sf_dir, "events"))
     agg = windowed_aggregate(stream, window="1 hour", group_extra=["event_type"])
     return _drain(spark, agg, "streamq_events_hourly").orderBy(
         "window_start", "event_type"
@@ -158,7 +172,7 @@ def q_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session windows per user (10-minute inactivity gap) from a
     real streaming run — same session semantics as the batch
     ``user_sessions`` oracle (session end = last event + gap)."""
-    stream = file_stream(spark, _stage_events(spark, sf_dir))
+    stream = file_stream(spark, stage_table(spark, sf_dir, "events"))
     sess = sessionize(stream, gap="10 minutes")
     return _drain(spark, sess, "streamq_user_sessions").select(
         "user_id", "session_start", "session_end", "n_events"
@@ -172,7 +186,7 @@ def q_stream_click_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     join state expires at watermark + lookback). Inner matches emit as
     found, so the AvailableNow drain in append mode yields the complete
     batch-equal answer."""
-    src = _stage_events(spark, sf_dir)
+    src = stage_table(spark, sf_dir, "events")
     clicks = (
         file_stream(spark, src)
         .where(F.col("event_type") == "click")
@@ -206,6 +220,12 @@ def q_stream_click_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, joined, "streamq_click_purchases", output_mode="append"
     ).orderBy("click_id", "purchase_id")
 
+
+QUERIES = {
+    "stream_events_hourly": q_stream_events_hourly,
+    "stream_user_sessions": q_stream_user_sessions,
+    "stream_click_purchases": q_stream_click_purchases,
+}
 
 ORACLES: dict[str, str] = {
     "stream_events_hourly": """

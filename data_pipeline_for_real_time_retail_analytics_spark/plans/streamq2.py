@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table
 from ..streaming.ingest import file_stream, windowed_aggregate
-from .streamq import _drain, _stage_events
+from .streamq import _drain, stage_table
 
 
 def q_stream_segment_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +38,7 @@ def q_stream_segment_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     join to the customer dim → tumbling windowed aggregate. Events
     whose user has no customer row drop out of the inner join —
     mirrored exactly by the oracle."""
-    stream = file_stream(spark, _stage_events(spark, sf_dir))
+    stream = file_stream(spark, stage_table(spark, sf_dir, "events"))
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"), "c_mktsegment"

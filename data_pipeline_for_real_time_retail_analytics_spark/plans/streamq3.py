@@ -27,7 +27,7 @@ sentinels, drain again over the same checkpoint — which paid a second
 full streaming-query lifecycle (planning, state-store reload, commits)
 and two extra single-row write jobs per cell. Staging the sentinels up
 front makes the engine's own no-data batch do the flush; probed
-per-batch (probe_streamq3_single.py): batch 0 processes all rows,
+per-batch (NOTES.md records the probe): batch 0 processes all rows,
 batch 1 (no-data) drops state 3989 → 2 sentinel rows and emits the
 completions — output row-for-row identical to the two-phase drive.
 The two-phase checkpoint-recovery semantics (inner matches do not
@@ -47,11 +47,8 @@ Reference parity: the reference has no streaming at all (its
 task_manager.py:171-210); the streaming suite is the mandated
 Spark-first re-expression.
 
-NOT registered in ``__spark_entry__`` in round 7 — the front window is
-exactly consumed by the catch-up cohorts (ROTATION.json), and
-never-green entries must land in the front 50. Staged via
-plans/pending_r8.py; tests/test_streamq3.py runs the driver-identical
-parity comparison at sf0.01.
+tests/test_streamq3.py pins the semantics; driver-identical parity
+runs in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ skew-salted aggregation — the time-series surface of the engine.
 The reference's only temporal machinery is polling intervals and a
 60-minute dedup window (SURVEY.md §2.10); these queries implement the
 windowed/sessionized/as-of semantics a real-time retail pipeline needs,
-Spark-first, each with a DuckDB oracle in __spark_entry__.oracle_sql().
+Spark-first, each with a DuckDB oracle in ``ORACLES``.
 """
 
 from __future__ import annotations
@@ -107,6 +107,13 @@ def q_salted_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.orderBy("event_type")
 
+
+QUERIES = {
+    "events_sliding": q_events_sliding,
+    "user_sessions": q_user_sessions,
+    "click_attribution": q_click_attribution,
+    "salted_event_rollup": q_salted_event_rollup,
+}
 
 ORACLES: dict[str, str] = {
     "events_sliding": """

@@ -64,6 +64,13 @@ def q_shuffled_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("shard", "pos")
 
 
+QUERIES = {
+    "lm_perplexity": q_lm_perplexity,
+    "packed_sequences": q_packed_sequences,
+    "embedding_clusters": q_embedding_clusters,
+    "shuffled_shards": q_shuffled_shards,
+}
+
 ORACLES: dict[str, str] = {
     "shuffled_shards": rf"""
         WITH keyed AS (

@@ -173,6 +173,12 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+QUERIES = {
+    "lang_temperature_sample": q_lang_temperature_sample,
+    "quality_quota_prune": q_quality_quota_prune,
+    "dup_rate_by_source": q_dup_rate_by_source,
+}
+
 ORACLES: dict[str, str] = {
     "lang_temperature_sample": f"""
         WITH counts AS (

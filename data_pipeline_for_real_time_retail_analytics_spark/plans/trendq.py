@@ -1,5 +1,4 @@
-"""Per-segment revenue trend (exact OLS slope) — staged for a round-11
-driver slot via plans/pending_r11.py.
+"""Per-segment revenue trend (exact OLS slope).
 
 ``revenue_trend_by_segment``: the least-squares slope of daily order
 revenue against the day index, per market segment — the trend tier of

@@ -1,5 +1,4 @@
-"""Strong-tie triangle counting over the co-purchase graph — staged
-for a round-10 driver slot via plans/pending_r10.py.
+"""Strong-tie triangle counting over the co-purchase graph.
 
 ``copurchase_triangles``: the 20 parts participating in the most
 triangles of the SUPPORT-THRESHOLDED co-purchase graph (edges = part

@@ -21,10 +21,8 @@ shuffle keyed by language; the UDF sees per-language series — bounded
 by corpus language count, each series a value column only. No global
 sort (the driver comparator row-sorts).
 
-NOT registered in ``__spark_entry__`` in round 7 — the front window is
-exactly consumed by the catch-up cohorts (ROTATION.json). Staged via
-plans/pending_r8.py; tests/test_udxq.py runs the driver-identical
-parity comparison at sf0.01.
+tests/test_udxq.py pins the semantics; driver-identical parity runs in
+tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations

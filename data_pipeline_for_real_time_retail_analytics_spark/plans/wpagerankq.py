@@ -1,5 +1,4 @@
-"""Quantity-weighted co-purchase PageRank — staged for a round-10
-driver slot via plans/pending_r10.py.
+"""Quantity-weighted co-purchase PageRank.
 
 ``part_pagerank_weighted``: the 20 most central parts when each
 co-purchase edge carries the combined ordered QUANTITY of the pair

@@ -1,5 +1,4 @@
-"""Zone-map data-skipping query (operators/zonemap.py) — staged for a
-round-9 driver slot via plans/pending_r9.py.
+"""Zone-map data-skipping query (operators/zonemap.py).
 
 ``zonemap_pruned_orders``: fetch one quarter's mid-value orders from a
 range-clustered layout, reading ONLY the files whose zone (per-file

@@ -25,7 +25,7 @@ bounded operationally by ``maxFilesPerTrigger`` on the source, the
 knob a production deployment sizes (the sketch state itself stays ≤ k
 rows regardless).
 
-Sharding (measured, bench_kmv_shards.py at 90×): state parallelism is
+Sharding (measured at 90×, recorded in NOTES.md): state parallelism is
 bounded by DISTINCT KEYS, not partitions — raising
 ``spark.sql.shuffle.partitions`` 8 → 32 over 20 source groups moved
 the drive only 484 → 465 s (group-bound). The production lever the

@@ -8,7 +8,7 @@ drains them one micro-batch per file) and incremental near-dup
 detection (``minhash_lsh_pairs_between``: the arriving batch meets
 ONLY its band collisions against the corpus — never a corpus×batch
 comparison, and at production scale the corpus band signatures persist
-as an index, bench_incremental_index.py). Each micro-batch:
+as an index, measured in NOTES.md). Each micro-batch:
 
 1. flag arrivals whose shingle Jaccard against the standing corpus
    clears the threshold;

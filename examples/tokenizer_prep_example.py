@@ -11,7 +11,7 @@ tokenizer build, end to end on the documents table.
    table, the driver-gated pair `bpe_merge_candidates`;
 3. the iterative trainer (bpe_learn) — N greedy merges, each one
    pair-count aggregate + a 1-row argmax (Sennrich et al. 2016;
-   pinned reference-exact in tests/test_pending_r11c.py);
+   pinned reference-exact by test_bpe_learn_matches_the_sennrich_reference);
 4. the audit: how the learned merges compress the corpus — weighted
    symbols per token before vs after, the number a tokenizer team
    watches while choosing vocabulary size;

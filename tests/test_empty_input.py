@@ -1,4 +1,4 @@
-"""Empty-input hardening: every registered and staged query must handle
+"""Empty-input hardening: every registered query must handle
 a schema-correct, zero-row dataset — the empty-ingest-window case a
 100 TB deployment hits on day one of a new source — by returning a
 well-formed (usually empty) frame, never crashing.
@@ -13,6 +13,8 @@ step never ran, and silently scanning nothing would mask that.
 import os
 
 import pytest
+
+import __spark_entry__ as entry
 
 SRC = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -38,25 +40,12 @@ def empty_dir(spark, tmp_path_factory):
     return out
 
 
-def _all_queries():
-    import __spark_entry__ as entry
-
-    from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r10 import (
-        PENDING_QUERIES,
-    )
-    from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r11 import (
-        PENDING_QUERIES as PENDING_QUERIES_R11,
-    )
-
-    qs = dict(entry.queries())
-    qs.update(PENDING_QUERIES)
-    qs.update(PENDING_QUERIES_R11)
-    return qs
+QUERIES = entry.queries()
 
 
-@pytest.mark.parametrize("name", sorted(_all_queries()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_handles_empty_dataset(spark, empty_dir, name):
-    fn = _all_queries()[name]
+    fn = QUERIES[name]
     if name in LOUD_GUARDS:
         with pytest.raises(ValueError):
             fn(spark, empty_dir).take(1)

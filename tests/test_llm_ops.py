@@ -88,7 +88,7 @@ def test_minhash_lsh_finds_planted_dups(spark, docs):
 def test_minhash_fetch_shingles_shape_identical_output(spark, docs):
     """The candidates-then-fetch shuffle shape (fetch_shingles=True,
     the production shape for high-band parameterizations — 620 MB vs
-    56 MB shuffle at num_perm=64/bands=16 per bench_minhash_shapes.py)
+    56 MB shuffle at num_perm=64/bands=16, recorded in NOTES.md)
     must produce exactly the carry shape's pair set and jaccards."""
     carry = sorted(map(tuple, minhash_lsh_pairs(docs, threshold=0.1).collect()))
     fetch = sorted(

@@ -1,5 +1,5 @@
 """NULL-injection hardening: the generated testdata carries no NULLs,
-so without this sweep none of the 152 registered + staged queries had
+so without this sweep none of the registered queries had
 ever seen one — while at 100 TB every nullable column WILL hold NULLs
 (failed fetches, partial extracts, schema-evolved readers). Inject
 NULLs into ~10% of the non-key columns of every table and require every
@@ -14,6 +14,8 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+
+import __spark_entry__ as entry
 
 SRC = "/root/testdata/sf0.001"
 TABLES = (
@@ -52,25 +54,12 @@ def nulls_dir(spark, tmp_path_factory):
     return out
 
 
-def _all_queries():
-    import __spark_entry__ as entry
-
-    from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r10 import (
-        PENDING_QUERIES,
-    )
-    from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r11 import (
-        PENDING_QUERIES as PENDING_QUERIES_R11,
-    )
-
-    qs = dict(entry.queries())
-    qs.update(PENDING_QUERIES)
-    qs.update(PENDING_QUERIES_R11)
-    return qs
+QUERIES = entry.queries()
 
 
-@pytest.mark.parametrize("name", sorted(_all_queries()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_handles_null_injected_dataset(spark, nulls_dir, name):
-    out = _all_queries()[name](spark, nulls_dir)
+    out = QUERIES[name](spark, nulls_dir)
     assert out.columns
     out.take(1)  # must execute without raising
 

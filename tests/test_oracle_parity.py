@@ -119,3 +119,22 @@ def test_every_query_has_entry_or_rows(spark):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_registry_has_every_pair_once():
+    """Both registries name the same 174 queries, so a query dropped
+    from both sides cannot pass unnoticed."""
+    assert set(QUERIES) == set(ORACLES)
+    assert len(QUERIES) == 174
+
+
+def test_registry_rejects_a_name_defined_twice():
+    """Two plan modules defining one name is an error, not a silent
+    shadowing of the earlier definition."""
+    from types import SimpleNamespace
+
+    a = SimpleNamespace(__name__="plans.a", QUERIES={"q": 1, "a_only": 2})
+    b = SimpleNamespace(__name__="plans.b", QUERIES={"q": 3})
+    with pytest.raises(ValueError, match="'q' is defined by both plans.a and plans.b"):
+        entrymod.merge_registry((a, b), "QUERIES")
+    assert entrymod.merge_registry((a,), "QUERIES") == {"q": 1, "a_only": 2}

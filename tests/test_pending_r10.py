@@ -1,65 +1,21 @@
-"""The r9-staged round-10 pairs (plans/pending_r10.py): driver-identical
-DuckDB parity for each, plus the semantic pins that make the families
-trustworthy beyond the hash match — the banded-sketch claims really can
-fail, weighted centrality really diverges from unweighted, and the
-attribution grain really is sessions."""
+"""Semantic pins for the sketch, drift, curve, centrality, attribution,
+chunk-dedup, IVF-PQ and triangle families — the checks that make them
+trustworthy beyond the oracle hash match in tests/test_oracle_parity.py:
+the banded-sketch claims really can fail, weighted centrality really
+diverges from unweighted, and the attribution grain really is sessions."""
 
 import os
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-import test_oracle_parity as par
 from data_pipeline_for_real_time_retail_analytics_spark.plans import (
     approxq,
     sessionattrq,
     wpagerankq,
 )
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r10 import (
-    PENDING_ORACLES,
-    PENDING_QUERIES,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
-@pytest.fixture(scope="module")
-def ddb():
-    con = par.make_views(
-        duckdb.connect(),
-        ["orders", "lineitem", "events", "documents", "embeddings"],
-        SF_DIR,
-    )
-    yield con
-    con.close()
-
-
-def test_pending_r10_aggregates_the_staged_pairs():
-    """State-aware from day one (the r8 lesson): green while staged,
-    green at the r10 flip, green after."""
-    from test_rotation_update import _assert_pending_module_consistent
-
-    assert set(PENDING_QUERIES) == {
-        "approx_profile_orders", "sketch_rollup_events",
-        "cms_heavy_tokens", "cms_merged_heavy_tokens",
-        "stream_cms_heavy_tokens",
-        "events_value_drift", "events_value_ks", "events_daily_drift",
-        "source_length_drift",
-        "hilbert_values", "curve_locality", "hard_negatives",
-        "ann_eval_metrics", "pmi_collocations",
-        "part_pagerank_weighted", "session_first_touch",
-        "stream_session_first_touch", "chunk_dedup_docs",
-        "ivfpq_topk", "dedup_eval_metrics", "copurchase_triangles",
-    }
-    _assert_pending_module_consistent(PENDING_QUERIES, PENDING_ORACLES)
-
-
-@pytest.mark.parametrize("name", sorted(PENDING_QUERIES))
-def test_parity(spark, ddb, name):
-    spark_pdf = PENDING_QUERIES[name](spark, SF_DIR).toPandas()
-    duck_pdf = ddb.execute(PENDING_ORACLES[name]).fetchdf()
-    par.assert_frames_match(spark_pdf, duck_pdf, name)
 
 
 # ---------- approx profile ----------
@@ -122,7 +78,7 @@ def test_weighted_contribution_identity(spark):
 # ---------- session attribution ----------
 
 
-def test_attribution_is_session_grain(spark, ddb):
+def test_attribution_is_session_grain(spark):
     """n_sessions summed over first-touch types == total session count
     from the established user_sessions derivation (same gap, same
     engine) — the attribution neither drops nor double-counts

@@ -1,17 +1,16 @@
-"""The r10-staged round-11 pairs (plans/pending_r11.py): driver-identical
-DuckDB parity for each, plus the semantic pins that make the families
-trustworthy beyond the hash match — the as-of tolerance really cuts at
-the boundary, the Bloom filter really has no false negatives (and its
-FP accounting survives a deliberately saturated filter), and the
-temperature quota really flattens the head language."""
+"""Semantic pins for the as-of, Bloom, quota, phrase, length-bucket,
+drift, funnel and centroid families — the checks that make them
+trustworthy beyond the oracle hash match in tests/test_oracle_parity.py:
+the as-of tolerance really cuts at the boundary, the Bloom filter really
+has no false negatives (and its FP accounting survives a deliberately
+saturated filter), and the temperature quota really flattens the head
+language."""
 
 import os
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-import test_oracle_parity as par
 from data_pipeline_for_real_time_retail_analytics_spark.operators.asof import (
     asof_join_backward,
 )
@@ -23,49 +22,8 @@ from data_pipeline_for_real_time_retail_analytics_spark.plans import (
     bloomdedupq,
     langquotaq,
 )
-from data_pipeline_for_real_time_retail_analytics_spark.plans.pending_r11 import (
-    PENDING_ORACLES,
-    PENDING_QUERIES,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
-@pytest.fixture(scope="module")
-def ddb():
-    con = par.make_views(
-        duckdb.connect(),
-        ["events", "documents", "embeddings", "orders", "customer"],
-        SF_DIR,
-    )
-    yield con
-    con.close()
-
-
-def test_pending_r11_aggregates_the_staged_pairs():
-    """State-aware from day one (the r8 lesson): green while staged,
-    green at the r11 flip, green after."""
-    from test_rotation_update import _assert_pending_module_consistent
-
-    assert set(PENDING_QUERIES) == {
-        "purchase_click_asof", "bloom_chunk_prefilter", "lang_quality_mix",
-        "phrase_search", "length_bucket_stats", "stream_events_value_drift",
-        "curation_funnel", "label_centroid_shift", "dup_cluster_sizes",
-        "robust_outlier_events", "pair_jaccard_histogram",
-        "priority_sample_docs", "incremental_ann_new_vecs",
-        "source_overlap_matrix", "stream_kmv_distinct_bigrams",
-        "click_error_interval", "bpe_merge_candidates",
-        "revenue_trend_by_segment", "daily_new_vs_returning",
-        "event_count_cusum",
-    }
-    _assert_pending_module_consistent(PENDING_QUERIES, PENDING_ORACLES)
-
-
-@pytest.mark.parametrize("name", sorted(PENDING_QUERIES))
-def test_parity(spark, ddb, name):
-    spark_pdf = PENDING_QUERIES[name](spark, SF_DIR).toPandas()
-    duck_pdf = ddb.execute(PENDING_ORACLES[name]).fetchdf()
-    par.assert_frames_match(spark_pdf, duck_pdf, name)
 
 
 # ---------- as-of tolerance ----------

@@ -1,12 +1,11 @@
-"""Semantic pins for the second r11 staging batch (robust outliers,
-Jaccard histogram, priority sampling, incremental ANN, source overlap)
-— driver-identical parity for all five lives in test_pending_r11.py's
-roster-wide sweep; these tests prove the semantics BEHIND the hash
-match: the MAD gate counts a hand-computed outlier, the histogram is
-the pair set re-binned, priority sampling obeys the top-k /
-weight-bias / DLT-estimator laws, the ANN ingest gate is exactly
-bimodal on the planted batch, and the overlap matrix counts a
-constructed shared gram exactly once."""
+"""Semantic pins for robust outliers, the Jaccard histogram, priority
+sampling, incremental ANN and source overlap — driver-identical parity
+for all five lives in tests/test_oracle_parity.py; these tests prove
+the semantics BEHIND the hash match: the MAD gate counts a
+hand-computed outlier, the histogram is the pair set re-binned,
+priority sampling obeys the top-k / weight-bias / DLT-estimator laws,
+the ANN ingest gate is exactly bimodal on the planted batch, and the
+overlap matrix counts a constructed shared gram exactly once."""
 
 import os
 

@@ -1,11 +1,11 @@
-"""Semantic pins for the third r11 staging batch (batch interval join,
-BPE merge mining, revenue trend) — driver-identical parity for all
-three lives in test_pending_r11.py's roster-wide sweep; these tests
-prove the semantics BEHIND the hash match: the interval join's bounds
-cut at exactly the microsecond, the binned plan equals a brute-force
-range join and never degenerates to a nested loop, BPE counts obey the
-multiplicity and linearity laws against an independent pure-Python
-recomputation, and the OLS slope reproduces hand-built closed forms.
+"""Semantic pins for the batch interval join, BPE merge mining and the
+revenue trend — driver-identical parity for all three lives in
+tests/test_oracle_parity.py; these tests prove the semantics BEHIND
+the hash match: the interval join's bounds cut at exactly the
+microsecond, the binned plan equals a brute-force range join and never
+degenerates to a nested loop, BPE counts obey the multiplicity and
+linearity laws against an independent pure-Python recomputation, and
+the OLS slope reproduces hand-built closed forms.
 """
 
 import os

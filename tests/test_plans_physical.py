@@ -165,8 +165,7 @@ def test_minhash_band_join_pinned_to_sort_merge(spark, sf_dir):
     simhash precedent): left to AQE, a broadcast choice serializes the
     banded build side through the driver AND defeats ReuseExchange on
     the identical self-join subtree (signatures computed twice) —
-    measured 2.7x wall at 10x input (bench_minhash_shapes.py
-    --no-broadcast). Both shuffle shapes must keep the pin."""
+    measured 2.7x wall at 10x input (NOTES.md). Both shuffle shapes must keep the pin."""
     from data_pipeline_for_real_time_retail_analytics_spark.operators.dedup import (
         minhash_lsh_pairs,
     )

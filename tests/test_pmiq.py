@@ -29,8 +29,8 @@ def test_parity(spark, ddb):
 
 def _run_on(spark, docs):
     import data_pipeline_for_real_time_retail_analytics_spark.plans.pmiq as P
-    # _docs moved to the corpusbase leaf module in the r10 closure
-    # split — patch the loader where it is actually resolved
+    # _docs lives in the corpusbase leaf module — patch the loader
+    # where it is actually resolved
     import data_pipeline_for_real_time_retail_analytics_spark.plans.corpusbase as CB
 
     orig = CB.load_table

@@ -174,3 +174,23 @@ def test_streamq_repeated_drive_leaves_tmp_flat(spark, sf_dir):
     assert second == first > 0
     assert set(glob.glob(tempfile.gettempdir() + "/streamq_events_*")) == staged
     assert set(glob.glob(tempfile.gettempdir() + "/streamq_ckpt_*")) == ckpts
+
+
+def test_drain_overlapped_stops_the_stream_when_the_batch_fails(spark, events_dir):
+    """A failing overlapped batch action must stop the stream it raced,
+    not leave it running over a deleted checkpoint dir."""
+    from pyspark.errors import PySparkException
+
+    from data_pipeline_for_real_time_retail_analytics_spark.plans.streamq import (
+        _drain_overlapped,
+    )
+
+    plan = (
+        file_stream(spark, events_dir, max_files_per_trigger=1)
+        .groupBy("event_type")
+        .count()
+    )
+    failing = spark.range(1).select(F.raise_error(F.lit("batch side failed")))
+    with pytest.raises(PySparkException, match="batch side failed"):
+        _drain_overlapped(spark, plan, "drain_overlapped_failure", failing)
+    assert spark.streams.active == []
