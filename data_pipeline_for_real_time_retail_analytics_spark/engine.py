@@ -22,11 +22,13 @@ One scan per step:
   of a separate ``count()``;
 * ``FileSource`` reuses the schema its first read inferred.
 
-A detector advances its stored watermark when it reports a change.
-``run_once`` calls each event's ``undo`` hook when the extract,
-validation or quality gate raises or the load reports failure, so the
-next cycle sees the same rows again. A process that dies between detect
-and load still leaves the watermark advanced.
+The load is the commit point. Detection leaves the stored watermark
+alone; ``run_once`` calls the events' ``commit`` hooks only after the
+load reports success. A failed extract, validation, gate or load, or a
+process that dies anywhere before the commit, leaves the watermark
+where it was, and the next cycle loads the same rows. Delivery is
+at-least-once: a process that dies between the load and the commit
+loads that batch again.
 
 Thin by design — each method delegates to the operator modules, which
 remain independently usable.
@@ -36,8 +38,7 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .operators.detection import ChangeEvent, MultiSourceChangeDetector
 from .plans.validation import (
@@ -92,11 +93,14 @@ class Engine:
             self._detector.register_source(sid, probe)
 
     # -- detect -----------------------------------------------------------
-    def detect(self) -> dict[str, list[ChangeEvent]]:
-        """Run every registered probe; per-source failures are recorded in
-        ``source_status()`` and yield [] (swallow-and-continue, matching
-        the reference's detector contract)."""
-        return self._detector.detect_all_changes()
+    def detect(self, source_id: str | None = None) -> dict[str, list[ChangeEvent]]:
+        """Run the registered probes — every one, or only ``source_id``'s;
+        per-source failures are recorded in ``source_status()`` and yield
+        [] (swallow-and-continue, matching the reference's detector
+        contract)."""
+        if source_id is None:
+            return self._detector.detect_all_changes()
+        return {source_id: self._detector.detect_changes(source_id)}
 
     def source_status(self) -> dict[str, dict[str, Any]]:
         return self._detector.get_source_status()
@@ -125,16 +129,8 @@ class Engine:
     def load(
         self, df: DataFrame, target_table: str, mode: str = "append"
     ) -> LoadResult:
-        """Write ``df``; ``rows_loaded`` is counted by an ``Observation``
-        riding the write, so the input is scanned once."""
-        obs = Observation()
-        result = self._sink.load(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
-            target_table, mode=mode, count_rows=False,
-        )
-        if result.success:
-            result.rows_loaded = obs.get["rows"]
-        return result
+        """Write ``df``; the sink counts ``rows_loaded`` on the write."""
+        return self._sink.load(df, target_table, mode=mode)
 
     # -- end-to-end -------------------------------------------------------
     def run_once(
@@ -146,38 +142,27 @@ class Engine:
         fail_on_gate: bool = False,
         **extract_kwargs: Any,
     ) -> tuple[ValidationReport, LoadResult | None]:
-        """One detect-gated ingestion pass for a single source: skip if the
+        """One detect-gated ingestion pass for a single source: skip if its
         probe reports no changes (reference skip-if-no-changes,
-        operators.py:74-80), else extract → validate → gate → load.
-
-        If a step raises or the load reports failure, the detected events'
-        watermark advances are undone before returning or re-raising."""
+        operators.py:74-80), else extract → validate → gate → load, and
+        commit the detected events once the load succeeded."""
         events: list[ChangeEvent] = []
-        if source_id in self._detector._sources:
-            events = self.detect().get(source_id, [])
+        if source_id in self._detector:
+            events = self.detect(source_id)[source_id]
             if not events:  # skip-if-no-changes: empty report, no load
                 return ValidationReport(table_name=table_name, data_quality_score=1.0), None
-        try:
-            df = self.extract(source_id, **extract_kwargs)
-            report = self.validate(df, table_name)
-            if not self.quality_gate(report):
-                if fail_on_gate:
-                    raise ValueError(
-                        f"quality gate failed for {table_name}: "
-                        f"score={report.data_quality_score}"
-                    )
-                df = self._validator.invalid_row_filter(df)
-            result = self.load(df, target_table or table_name, mode=mode)
-        except BaseException:
-            _undo(events)
-            raise
-        if not result.success:
-            _undo(events)
+        df = self.extract(source_id, **extract_kwargs)
+        report = self.validate(df, table_name)
+        if not self.quality_gate(report):
+            if fail_on_gate:
+                raise ValueError(
+                    f"quality gate failed for {table_name}: "
+                    f"score={report.data_quality_score}"
+                )
+            df = self._validator.invalid_row_filter(df)
+        result = self.load(df, target_table or table_name, mode=mode)
+        if result.success:
+            for e in events:
+                if e.commit is not None:
+                    e.commit()
         return report, result
-
-
-def _undo(events: list[ChangeEvent]) -> None:
-    """Revert the events' watermark advances, newest first."""
-    for e in reversed(events):
-        if e.undo is not None:
-            e.undo()

@@ -91,18 +91,6 @@ class WatermarkStore:
                 os.unlink(tmp)
                 raise
 
-    def reset(self, source_id: str, table: str, ts: datetime | None) -> None:
-        """Put back a watermark read earlier with ``get``: ``None`` removes
-        the file, so the store reads as never having had one."""
-        if ts is not None:
-            self.update(source_id, table, ts)
-            return
-        with self._lock:
-            try:
-                os.remove(self._path(source_id, table))
-            except FileNotFoundError:
-                pass
-
     def min_watermark(self, source_id: str, tables: list[str]) -> datetime | None:
         marks = [self.get(source_id, t) for t in tables]
         marks = [m for m in marks if m is not None]

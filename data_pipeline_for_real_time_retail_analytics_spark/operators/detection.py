@@ -30,10 +30,11 @@ from .cdc import ChangeType, WatermarkStore, log_cdc_probe, timestamp_cdc_probe
 class ChangeEvent:
     """One detected change (reference: src/interfaces/base.py:30-38).
 
-    ``undo`` (set by detectors that advance a stored watermark) puts that
-    watermark back. A consumer whose extract or load fails calls it, so
-    the next detection reports the same rows again instead of skipping
-    past a batch that never landed.
+    ``commit`` (set by detectors that keep a stored watermark) moves that
+    watermark to the newest change this detection saw. Detection itself
+    leaves the store alone: a consumer calls ``commit`` once the batch has
+    landed, so a failure or a crash anywhere before that reports the same
+    rows again. Committing the same event twice is harmless.
     """
 
     source_id: str
@@ -42,23 +43,14 @@ class ChangeEvent:
     timestamp: datetime
     affected_rows: int
     metadata: dict[str, Any] = field(default_factory=dict)
-    undo: Callable[[], None] | None = field(default=None, repr=False, compare=False)
-
-
-def _advance(store: WatermarkStore, source_id: str, table: str,
-             ts: datetime) -> Callable[[], None]:
-    """Advance the stored watermark to ``ts``; return the hook that
-    restores the one it replaced (none at all if there was none)."""
-    prev = store.get(source_id, table)
-    store.update(source_id, table, ts)
-    return lambda: store.reset(source_id, table, prev)
+    commit: Callable[[], None] | None = field(default=None, repr=False, compare=False)
 
 
 class TimestampChangeDetector:
-    """C6: rows with ts strictly after the stored watermark → one event;
-    watermark advances to max(ts) (reference:
-    change_detection.py:145-198). The advance happens at detection, as in
-    the reference; the event's ``undo`` reverts it."""
+    """C6: rows with ts strictly after the stored watermark → one event
+    (reference: change_detection.py:145-198). The reference advances the
+    watermark to max(ts) at detection; here the event's ``commit`` does,
+    once the consumer has loaded the rows."""
 
     def __init__(self, store: WatermarkStore, ts_col: str = "ts") -> None:
         self.store = store
@@ -72,7 +64,6 @@ class TimestampChangeDetector:
         if not row or not row["change_count"]:
             return []
         max_ts = row["max_ts"]
-        undo = _advance(self.store, source_id, table, max_ts)
         return [
             ChangeEvent(
                 source_id,
@@ -81,15 +72,15 @@ class TimestampChangeDetector:
                 max_ts,
                 row["change_count"],
                 {"detection_method": "timestamp"},
-                undo,
+                lambda: self.store.update(source_id, table, max_ts),
             )
         ]
 
 
 class LogChangeDetector:
     """C7: changelog probe grouped by op code → one event per operation
-    (reference: change_detection.py:238-268). The watermark advances to
-    the newest event at detection; every event carries the same ``undo``."""
+    (reference: change_detection.py:238-268). Every event carries the same
+    ``commit``, which moves the watermark to the newest event."""
 
     def __init__(self, store: WatermarkStore, op_col: str = "operation",
                  ts_col: str = "change_timestamp") -> None:
@@ -99,24 +90,25 @@ class LogChangeDetector:
 
     def detect(self, source_id: str, table: str, changelog: DataFrame) -> list[ChangeEvent]:
         rows = log_cdc_probe(changelog, self.op_col, self.ts_col).collect()
-        events = []
-        for r in rows:
-            events.append(
-                ChangeEvent(
-                    source_id,
-                    table,
-                    ChangeType(r["change_type"]),
-                    r["max_ts"],
-                    r["change_count"],
-                    {"detection_method": "log_based", "op_code": r["op_code"]},
-                )
+        if not rows:
+            return []
+        newest = max(r["max_ts"] for r in rows)
+
+        def commit() -> None:
+            self.store.update(source_id, table, newest)
+
+        return [
+            ChangeEvent(
+                source_id,
+                table,
+                ChangeType(r["change_type"]),
+                r["max_ts"],
+                r["change_count"],
+                {"detection_method": "log_based", "op_code": r["op_code"]},
+                commit,
             )
-        if events:
-            undo = _advance(self.store, source_id, table,
-                            max(e.timestamp for e in events))
-            for e in events:
-                e.undo = undo
-        return events
+            for r in rows
+        ]
 
 
 class PollingChangeDetector:
@@ -169,29 +161,35 @@ class MultiSourceChangeDetector:
     the per-source status map is bookkeeping."""
 
     def __init__(self) -> None:
-        self._sources: dict[str, tuple[Any, Callable[[], list[ChangeEvent]]]] = {}
+        self._sources: dict[str, Callable[[], list[ChangeEvent]]] = {}
         self._status: dict[str, dict[str, Any]] = {}
 
     def register_source(
         self, source_id: str, probe: Callable[[], list[ChangeEvent]]
     ) -> None:
-        self._sources[source_id] = (source_id, probe)
+        self._sources[source_id] = probe
         self._status[source_id] = {"healthy": True, "last_check": None, "last_error": None}
 
+    def __contains__(self, source_id: str) -> bool:
+        return source_id in self._sources
+
+    def detect_changes(self, source_id: str) -> list[ChangeEvent]:
+        """Run one source's probe and record its health; a failing probe
+        yields [] (log-and-continue like the reference)."""
+        st = self._status[source_id]
+        st["last_check"] = datetime.now().astimezone().isoformat()
+        try:
+            events = self._sources[source_id]()
+        except Exception as exc:
+            st["healthy"] = False
+            st["last_error"] = str(exc)
+            return []
+        st["healthy"] = True
+        st["last_error"] = None
+        return events
+
     def detect_all_changes(self) -> dict[str, list[ChangeEvent]]:
-        out: dict[str, list[ChangeEvent]] = {}
-        for sid, (_, probe) in self._sources.items():
-            st = self._status[sid]
-            st["last_check"] = datetime.now().astimezone().isoformat()
-            try:
-                out[sid] = probe()
-                st["healthy"] = True
-                st["last_error"] = None
-            except Exception as exc:  # log-and-continue like the reference
-                out[sid] = []
-                st["healthy"] = False
-                st["last_error"] = str(exc)
-        return out
+        return {sid: self.detect_changes(sid) for sid in self._sources}
 
     def get_source_status(self) -> dict[str, dict[str, Any]]:
         return {k: dict(v) for k, v in self._status.items()}

@@ -14,16 +14,19 @@ are the lakehouse layer (parquet here; Delta/Iceberg drop in via
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
 @dataclass
 class LoadResult:
-    """Mirror of the reference's LoadResult (base.py:60-69)."""
+    """Mirror of the reference's LoadResult (base.py:60-69).
+
+    ``rows_loaded`` is the exact number of rows the write took (0 when it
+    failed)."""
 
     success: bool
     target_table: str
@@ -33,7 +36,11 @@ class LoadResult:
 
 
 class WarehouseSink:
-    """Catalog-managed table sink."""
+    """Catalog-managed table sink.
+
+    Every load counts the rows it writes with an ``Observation`` on the
+    frame it hands to the writer, so ``rows_loaded`` is exact and the
+    input is read once."""
 
     def __init__(self, spark: SparkSession, database: str = "default",
                  fmt: str = "parquet") -> None:
@@ -84,29 +91,42 @@ class WarehouseSink:
         except Exception:  # pragma: no cover - cleanup is best-effort
             pass
 
+    def _load(
+        self,
+        target: str,
+        mode: str,
+        write: Callable[[Callable[[DataFrame], DataFrame]], None],
+    ) -> LoadResult:
+        """Run ``write(observe)`` and report it as a ``LoadResult``.
+
+        ``write`` passes the exact frame it hands to the writer through
+        ``observe``, which puts one ``count(1)`` ``Observation`` on it, so
+        ``rows_loaded`` is exact and the input plan runs once. The count
+        is read only after the write succeeded: after a failed write
+        ``Observation.get`` blocks. Errors are reported, not raised — the
+        reference contract."""
+        obs = Observation()
+        try:
+            write(lambda df: df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        except Exception as exc:
+            return LoadResult(False, target, 0, mode, error=str(exc))
+        return LoadResult(True, target, obs.get["rows"], mode)
+
     def load(
         self,
         df: DataFrame,
         target_table: str,
         mode: str = "append",
-        count_rows: bool = True,
     ) -> LoadResult:
-        """mode: append | overwrite (reference load modes, base.py:118).
-
-        ``count_rows=True`` (default — the reference's LoadResult reports
-        rows_loaded) runs a pre-write ``df.count()``, executing the input
-        plan twice. Pass ``count_rows=False`` on large loads to skip the
-        extra pass; ``rows_loaded`` is then -1 = unknown (same contract
-        as ``load_partitioned``/``load_clustered``)."""
+        """mode: append | overwrite (reference load modes, base.py:118)."""
         name = self._qualified(target_table)
-        try:
-            n = df.count() if count_rows else -1
+
+        def write(observe):
             if mode == "overwrite":
                 self._sweep_stale_location(name)
-            df.write.format(self.fmt).mode(mode).saveAsTable(name)
-            return LoadResult(True, name, n, mode)
-        except Exception as exc:  # report, don't raise — reference contract
-            return LoadResult(False, name, 0, mode, error=str(exc))
+            observe(df).write.format(self.fmt).mode(mode).saveAsTable(name)
+
+        return self._load(name, mode, write)
 
     def load_bucketed(
         self,
@@ -116,31 +136,24 @@ class WarehouseSink:
         n_buckets: int,
         sort_cols: list[str] | None = None,
         mode: str = "overwrite",
-        count_rows: bool = False,
     ) -> LoadResult:
         """Write a catalog table hash-bucketed (and optionally sorted) on
         the join/merge keys. Two tables bucketed the same way join with
         ZERO shuffle — at 100 TB this is how fact⋈fact joins and the
         incremental merge anti-join avoid re-shuffling the big table
         every batch (see tests/test_plans_physical.py for the
-        no-Exchange proof).
-
-        Row counting is opt-in (``count_rows=True`` runs the input plan
-        an extra time — real money on the bucketed fact-table writes
-        this API targets); otherwise ``rows_loaded`` is the documented
-        -1 = unknown sentinel."""
+        no-Exchange proof)."""
         name = self._qualified(target_table)
-        try:
-            n = df.count() if count_rows else -1
-            writer = df.write.format(self.fmt).mode(mode).bucketBy(
+
+        def write(observe):
+            writer = observe(df).write.format(self.fmt).mode(mode).bucketBy(
                 n_buckets, *bucket_cols
             )
             if sort_cols:
                 writer = writer.sortBy(*sort_cols)
             writer.saveAsTable(name)
-            return LoadResult(True, name, n, mode)
-        except Exception as exc:
-            return LoadResult(False, name, 0, mode, error=str(exc))
+
+        return self._load(name, mode, write)
 
     def load_partitioned(
         self,
@@ -149,7 +162,6 @@ class WarehouseSink:
         partition_cols: list[str],
         mode: str = "overwrite",
         dynamic: bool = True,
-        count_rows: bool = False,
     ) -> LoadResult:
         """Write a catalog table partitioned on ``partition_cols`` (the
         100 TB layout: date/tenant partitions prune scans to the slices a
@@ -157,26 +169,19 @@ class WarehouseSink:
         the partitions present in ``df`` — the incremental-batch reload
         pattern — instead of truncating the whole table (Spark's static
         default). The session's partitionOverwriteMode is restored after
-        the write so the setting never leaks to other writers.
-
-        Row counting is opt-in (``count_rows=True``): a pre-write
-        ``df.count()`` executes the full input plan a second time, which
-        is real money for the large incremental batches this API targets.
-        When off (the default), ``LoadResult.rows_loaded`` is -1
-        (unknown) — callers that audit on exact row counts must pass
-        ``count_rows=True``."""
+        the write so the setting never leaks to other writers."""
         name = self._qualified(target_table)
         conf = self.spark.conf
         key = "spark.sql.sources.partitionOverwriteMode"
         prev = conf.get(key, "STATIC")
-        try:
-            n = df.count() if count_rows else -1
+
+        def write(observe):
             conf.set(key, "dynamic" if dynamic else "static")
             if not self.table_exists(target_table):
                 # first load creates the partitioned table layout
                 self._sweep_stale_location(name)
                 (
-                    df.write.format(self.fmt)
+                    observe(df).write.format(self.fmt)
                     .mode("overwrite")
                     .partitionBy(*partition_cols)
                     .saveAsTable(name)
@@ -187,12 +192,12 @@ class WarehouseSink:
                 # partition replacement only happens through insertInto,
                 # which is positional: align to the catalog column order
                 cols = self.spark.table(name).columns
-                df.select(*cols).write.insertInto(
+                observe(df.select(*cols)).write.insertInto(
                     name, overwrite=(mode == "overwrite")
                 )
-            return LoadResult(True, name, n, mode)
-        except Exception as exc:
-            return LoadResult(False, name, 0, mode, error=str(exc))
+
+        try:
+            return self._load(name, mode, write)
         finally:
             conf.set(key, prev)
 
@@ -203,7 +208,6 @@ class WarehouseSink:
         cluster_cols: list[str],
         n_files: int = 8,
         mode: str = "overwrite",
-        count_rows: bool = False,
         drop_cols: list[str] | None = None,
     ) -> LoadResult:
         """Range-clustered parquet layout: ``repartitionByRange`` on the
@@ -220,21 +224,21 @@ class WarehouseSink:
         partition/sort and before the write (a Project preserves its
         child's ordering, so the layout survives): the Z-order path
         clusters on a computed Morton code the output schema must not
-        carry (operators/zorder.py). Row counting follows the
-        ``load_partitioned`` contract: opt-in (``count_rows=True`` runs
-        the input plan an extra time); otherwise ``rows_loaded`` is the
-        documented -1 = unknown sentinel."""
-        try:
-            n = df.count() if count_rows else -1
+        carry (operators/zorder.py).
+
+        ``rows_loaded`` is observed on the frame the writer gets, after
+        the range shuffle: observed before it, the count would also take
+        in the range-sampling job's read of the input."""
+
+        def write(observe):
             clustered = df.repartitionByRange(
                 n_files, *[F.col(c) for c in cluster_cols]
             ).sortWithinPartitions(*cluster_cols)
             if drop_cols:
                 clustered = clustered.drop(*drop_cols)
-            clustered.write.mode(mode).parquet(path)
-            return LoadResult(True, path, n, mode)
-        except Exception as exc:
-            return LoadResult(False, path, 0, mode, error=str(exc))
+            observe(clustered).write.mode(mode).parquet(path)
+
+        return self._load(path, mode, write)
 
     def analyze_table(
         self, table: str, columns: list[str] | None = None
@@ -274,7 +278,6 @@ class WarehouseSink:
         table: str,
         mode: str = "append",
         properties: dict[str, str] | None = None,
-        count_rows: bool = True,
         column_types: str | None = None,
     ) -> LoadResult:
         """JDBC warehouse load — the reference's DB-engine load leg
@@ -292,12 +295,10 @@ class WarehouseSink:
         props = dict(properties or {})
         if column_types:
             props["createTableColumnTypes"] = column_types
-        try:
-            n = df.count() if count_rows else -1
-            df.write.jdbc(url, table, mode=mode, properties=props)
-            return LoadResult(True, table, n, mode)
-        except Exception as exc:  # report, don't raise — reference contract
-            return LoadResult(False, table, 0, mode, error=str(exc))
+        return self._load(
+            table, mode,
+            lambda observe: observe(df).write.jdbc(url, table, mode=mode, properties=props),
+        )
 
     def execute_sql(self, sql: str, params: dict[str, Any] | None = None) -> list[Row]:
         """S8 passthrough with *parameterized* SQL — placeholders bind

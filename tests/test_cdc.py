@@ -61,23 +61,12 @@ def test_watermark_torn_write_keeps_previous(tmp_path, monkeypatch):
         fh.write('{"last_processed_timestamp": "2024-')
         raise OSError("disk full")
 
-    monkeypatch.setattr(cdc.json, "dump", torn)
-    with pytest.raises(OSError, match="disk full"):
-        store.update("s", "t", datetime(2024, 2, 1))
-    monkeypatch.undo()
+    with monkeypatch.context() as m:
+        m.setattr(cdc.json, "dump", torn)
+        with pytest.raises(OSError, match="disk full"):
+            store.update("s", "t", datetime(2024, 2, 1))
     assert store.get("s", "t") == before
     assert os.listdir(tmp_path) == ["s__t.json"]  # no temp file left behind
-
-
-def test_watermark_reset(tmp_path):
-    store = WatermarkStore(str(tmp_path))
-    store.update("s", "t", datetime(2024, 1, 2))
-    store.reset("s", "t", datetime(2024, 1, 1))
-    assert store.get("s", "t") == datetime(2024, 1, 1)
-    store.reset("s", "t", None)
-    assert store.get("s", "t") is None
-    assert os.listdir(tmp_path) == []
-    store.reset("s", "t", None)  # already absent: no error
 
 
 def test_incremental_read_strictly_greater(spark, sf_dir):

@@ -1,6 +1,7 @@
 """Tests for change-detection strategies and multi-source fan-out
 (SURVEY.md §2.2 C3/C6-C9; mirrors reference test_change_detection.py
-semantics: detect → watermark advance, polling gate, per-source health)."""
+semantics: detect → watermark advance, polling gate, per-source health;
+here the advance waits for the event's ``commit``)."""
 
 import datetime as dt
 
@@ -34,8 +35,11 @@ def test_timestamp_detector_advances_watermark(spark, tmp_path):
     assert len(events) == 1
     assert events[0].affected_rows == 2
     assert events[0].change_type is ChangeType.UPDATE
+    assert store.get("s1", "t1") is None  # detection alone stores nothing
+    assert [e.affected_rows for e in det.detect("s1", "t1", df)] == [2]
+    events[0].commit()
     assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 11, 0)
-    # second pass: nothing strictly after the new watermark
+    # after the commit: nothing strictly after the new watermark
     assert det.detect("s1", "t1", df) == []
 
 
@@ -54,30 +58,32 @@ def test_log_detector_groups_by_op(spark, tmp_path):
     by_type = {e.change_type: e for e in events}
     assert by_type[ChangeType.INSERT].affected_rows == 2
     assert by_type[ChangeType.DELETE].affected_rows == 1
+    assert store.get("s1", "t1") is None  # detection alone stores nothing
+    by_type[ChangeType.DELETE].commit()  # the newest event, not this one's
     assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 5)
 
 
-def test_timestamp_detector_undo_restores_watermark(spark, tmp_path):
+def test_timestamp_detector_commit_stores_detected_max(spark, tmp_path):
     store = WatermarkStore(str(tmp_path))
     det = TimestampChangeDetector(store, ts_col="ts")
     first = _events(spark, [(dt.datetime(2024, 1, 1, 10, 0), 1)])
     [event] = det.detect("s1", "t1", first)
-    event.undo()  # there was no watermark before: no file at all
-    assert store.get("s1", "t1") is None
-    assert list(tmp_path.iterdir()) == []
+    event.commit()
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 0)
 
-    det.detect("s1", "t1", first)
     more = _events(spark, [(dt.datetime(2024, 1, 1, 10, 0), 1),
                            (dt.datetime(2024, 1, 1, 12, 0), 2)])
     [event] = det.detect("s1", "t1", more)
-    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 12, 0)
-    event.undo()
-    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 0)
-    # the undone batch is reported again
+    assert event.affected_rows == 1
+    # an uncommitted event leaves the batch to be reported again
     assert [e.affected_rows for e in det.detect("s1", "t1", more)] == [1]
+    event.commit()
+    event.commit()  # committing twice is harmless
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 12, 0)
+    assert det.detect("s1", "t1", more) == []
 
 
-def test_log_detector_undo_shared_by_events(spark, tmp_path):
+def test_log_detector_commit_shared_by_events(spark, tmp_path):
     store = WatermarkStore(str(tmp_path))
     store.update("s1", "t1", dt.datetime(2024, 1, 1, 9, 0))
     changelog = spark.createDataFrame(
@@ -85,9 +91,12 @@ def test_log_detector_undo_shared_by_events(spark, tmp_path):
         "operation string, change_timestamp timestamp",
     )
     events = LogChangeDetector(store).detect("s1", "t1", changelog)
-    assert len(events) == 2 and events[0].undo is events[1].undo
-    events[0].undo()
+    assert len(events) == 2 and events[0].commit is events[1].commit
     assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 9, 0)
+    for e in events:  # one hook per event: the second call is a no-op
+        e.commit()
+    assert store.get("s1", "t1") == dt.datetime(2024, 1, 1, 10, 2)
+    assert [f.name for f in tmp_path.iterdir()] == ["s1__t1.json"]
 
 
 def test_polling_detector_respects_interval():

@@ -127,14 +127,21 @@ def cdc(spark, tmp_path):
     the way a CDC loop drives the engine."""
     landing = tmp_path / "landing"
     landing.mkdir()
-    store = WatermarkStore(str(tmp_path / "watermarks"))
-    source = FileSource(CDC_SOURCE, str(landing))
-    detector = TimestampChangeDetector(store, ts_col="change_ts")
+    watermarks = str(tmp_path / "watermarks")
+    database = f"eng_{uuid.uuid4().hex[:8]}"
     rules = [ValidationRule("status_known", "allowed_values", "status",
                             Severity.ERROR, {"values": ["open", "done"]})]
-    eng = Engine(spark, rules=rules, database=f"eng_{uuid.uuid4().hex[:8]}")
-    eng.register_source(
-        source, probe=lambda: detector.detect(CDC_SOURCE, CDC_TABLE, source.read(spark)))
+
+    def engine():
+        """Engine, source, detector and store over the directories: what a
+        restarted process builds."""
+        store = WatermarkStore(watermarks)
+        source = FileSource(CDC_SOURCE, str(landing))
+        detector = TimestampChangeDetector(store, ts_col="change_ts")
+        eng = Engine(spark, rules=rules, database=database)
+        eng.register_source(
+            source, probe=lambda: detector.detect(CDC_SOURCE, CDC_TABLE, source.read(spark)))
+        return eng
 
     def land(k, rows):
         staged = str(tmp_path / f"staged-{k}")
@@ -143,12 +150,16 @@ def cdc(spark, tmp_path):
         [part] = [f for f in os.listdir(staged) if f.endswith(".parquet")]
         os.rename(os.path.join(staged, part), str(landing / f"changes-{k}.parquet"))
 
-    def cycle(**kw):
-        return eng.run_once(CDC_SOURCE, CDC_TABLE, timestamp_column="change_ts",
-                            watermark=store.get(CDC_SOURCE, CDC_TABLE), **kw)
+    ns = SimpleNamespace(engine=engine(), store=WatermarkStore(watermarks), land=land,
+                         restart=engine, table=f"{database}.{CDC_TABLE}")
 
-    return SimpleNamespace(engine=eng, store=store, land=land, cycle=cycle,
-                           table=f"{eng._sink.database}.{CDC_TABLE}")
+    def cycle(eng=None, **kw):
+        return (eng or ns.engine).run_once(
+            CDC_SOURCE, CDC_TABLE, timestamp_column="change_ts",
+            watermark=ns.store.get(CDC_SOURCE, CDC_TABLE), **kw)
+
+    ns.cycle = cycle
+    return ns
 
 
 def _ts(minute):
@@ -187,3 +198,90 @@ def test_run_once_gate_failure_keeps_batch(spark, cdc):
     assert cdc.store.get(CDC_SOURCE, CDC_TABLE) == _ts(4)
     got = sorted(r.order_id for r in spark.table(cdc.table).collect())
     assert got == [1, 2, 3, 5]
+
+
+def test_run_once_runs_only_its_own_probe(spark, tmp_path):
+    """``run_once("a")`` must not run source b's probe: a detection whose
+    events are dropped must not cost b its batch."""
+    store = WatermarkStore(str(tmp_path))
+    detector = TimestampChangeDetector(store, ts_col="change_ts")
+    eng = Engine(spark, database=f"eng_{uuid.uuid4().hex[:8]}")
+    calls = {"a": 0, "b": 0}
+    batches = {"a": [(1, _ts(0))], "b": [(2, _ts(1)), (3, _ts(2))]}
+    for sid, rows in batches.items():
+        df = spark.createDataFrame(rows, "order_id long, change_ts timestamp")
+
+        def probe(sid=sid, df=df):
+            calls[sid] += 1
+            return detector.detect(sid, "t", df)
+
+        source = SimpleNamespace(source_id=sid, extract=lambda spark_, df=df, **kw: df)
+        eng.register_source(source, probe=probe)
+
+    assert eng.run_once("a", "t", target_table="a_out")[1].rows_loaded == 1
+    assert calls == {"a": 1, "b": 0}
+    result = eng.run_once("b", "t", target_table="b_out")[1]
+    assert result is not None and result.success and result.rows_loaded == 2
+    assert store.get("b", "t") == _ts(2)
+
+
+# -- crash windows: a process killed between two steps -----------------------
+
+
+class Killed(BaseException):
+    """Stands in for the process dying; carries the watermark on disk at
+    that moment, which is what a restarted process finds (a real kill
+    runs no handler that could put it back)."""
+
+
+def _dies_after(store, fn=None):
+    def call(*args, **kwargs):
+        if fn is not None:
+            fn(*args, **kwargs)
+        raise Killed(store.get(CDC_SOURCE, CDC_TABLE))
+
+    return call
+
+
+@pytest.mark.parametrize("step", ["extract", "load"])
+def test_kill_before_the_load_lands_keeps_watermark(spark, cdc, monkeypatch, step):
+    """Killed in the extract, or in the load before it wrote: the stored
+    watermark is unchanged, and a restarted engine loads the batch once."""
+    cdc.land(0, [(1, "open", _ts(0)), (2, "done", _ts(1))])
+    assert cdc.cycle()[1].rows_loaded == 2
+    cdc.land(1, [(3, "open", _ts(2)), (4, "done", _ts(3))])
+    target = cdc.engine if step == "extract" else cdc.engine._sink
+    monkeypatch.setattr(target, step, _dies_after(cdc.store))
+    with pytest.raises(Killed) as killed:
+        cdc.cycle()
+    assert killed.value.args[0] == _ts(1)
+    assert cdc.store.get(CDC_SOURCE, CDC_TABLE) == _ts(1)
+
+    restarted = cdc.restart()
+    result = cdc.cycle(restarted)[1]
+    assert result.success and result.rows_loaded == 2
+    assert cdc.store.get(CDC_SOURCE, CDC_TABLE) == _ts(3)
+    assert cdc.cycle(restarted)[1] is None  # nothing new: skipped
+    got = sorted(r.order_id for r in spark.table(cdc.table).collect())
+    assert got == [1, 2, 3, 4]  # every row exactly once
+
+
+def test_kill_between_load_and_commit_reloads_batch(spark, cdc, monkeypatch):
+    """At-least-once: killed after the load wrote but before the commit,
+    the watermark still sits before the batch, so the restarted engine
+    loads it again."""
+    cdc.land(0, [(1, "open", _ts(0)), (2, "done", _ts(1))])
+    monkeypatch.setattr(cdc.engine._sink, "load",
+                        _dies_after(cdc.store, cdc.engine._sink.load))
+    with pytest.raises(Killed) as killed:
+        cdc.cycle()
+    assert killed.value.args[0] is None  # not committed
+    assert cdc.store.get(CDC_SOURCE, CDC_TABLE) is None
+    assert spark.table(cdc.table).count() == 2  # but the batch landed
+
+    restarted = cdc.restart()
+    assert cdc.cycle(restarted)[1].rows_loaded == 2
+    assert cdc.store.get(CDC_SOURCE, CDC_TABLE) == _ts(1)
+    assert cdc.cycle(restarted)[1] is None
+    got = sorted(r.order_id for r in spark.table(cdc.table).collect())
+    assert got == [1, 1, 2, 2]  # reloaded, not lost

@@ -1,5 +1,6 @@
 """Warehouse sink tests (S7 DataLoader / S8 SQL passthrough semantics)."""
 
+import threading
 import uuid
 
 import pytest
@@ -152,49 +153,76 @@ def test_load_clustered_disjoint_sorted_files(spark, sink, tmp_path):
     assert spark.read.parquet(out).count() == 10_000
 
 
-def test_load_paths_execute_input_plan_once_when_not_counting(spark, sink):
-    """count_rows=False must mean ONE execution of the input plan per
-    load (no unconditional pre-write count) on every load path. Proven
-    with an accumulator bumped once per row flowing through the plan:
-    one pass = n, a hidden pre-write count would make it 2n."""
-    import pandas as pd
+def _load_partitioned_into_existing(sink, df, tmp_path):
+    """Second load of a partitioned table: the ``insertInto`` branch."""
+    first = df.sparkSession.range(4).selectExpr(
+        "id + 100 AS id", "CAST(id AS STRING) AS v", "id % 2 AS k")
+    assert sink.load_partitioned(first, "tbl_part_existing", ["k"]).success
+    return sink.load_partitioned(df, "tbl_part_existing", ["k"], mode="append")
 
+
+#: every load path, as (sink, df, tmp_path) -> LoadResult
+LOADS = {
+    "load": lambda sink, df, tmp_path: sink.load(df, "tbl_plain", mode="overwrite"),
+    "load_bucketed": lambda sink, df, tmp_path: sink.load_bucketed(df, "tbl_bkt", ["k"], 2),
+    "load_partitioned_create": lambda sink, df, tmp_path: sink.load_partitioned(
+        df, "tbl_part", ["k"]),
+    "load_partitioned_insert_into": _load_partitioned_into_existing,
+    "load_clustered": lambda sink, df, tmp_path: sink.load_clustered(
+        df, str(tmp_path / "clustered"), ["k"], n_files=2),
+}
+
+
+@pytest.mark.parametrize("path", sorted(LOADS))
+def test_load_path_counts_rows_exactly_in_one_pass(spark, sink, tmp_path, path):
+    """Every load path reports the exact ``rows_loaded`` from an
+    Observation on the write, and (except ``load_clustered``, whose
+    range shuffle samples its input first) runs the input plan once.
+    Proven with an accumulator bumped once per row flowing through the
+    plan: one pass = n, a pre-write count would make it 2n."""
     n = 10
+    acc = spark.sparkContext.accumulator(0)
 
-    def make_counted_df():
-        acc = spark.sparkContext.accumulator(0)
+    def tick(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
 
-        def tick(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
+    df = (
+        spark.range(n)
+        .selectExpr("id", "CAST(id AS STRING) AS v", "id % 2 AS k")
+        .mapInPandas(tick, schema="id long, v string, k long")
+    )
+    res = LOADS[path](sink, df, tmp_path)
+    assert res.success, res.error
+    assert res.rows_loaded == n
+    if path != "load_clustered":
+        assert acc.value == n, f"{path} ran the input plan {acc.value / n:.1f}x"
 
-        df = (
-            spark.range(n)
-            .selectExpr("id", "CAST(id AS STRING) AS v", "id % 2 AS k")
-            .mapInPandas(tick, schema="id long, v string, k long")
-        )
-        return df, acc
 
-    df, acc = make_counted_df()
-    res = sink.load(df, "tbl_once_plain", mode="overwrite", count_rows=False)
-    assert res.success and res.rows_loaded == -1
-    assert acc.value == n, f"load ran the input plan {acc.value / n:.1f}x"
+@pytest.mark.parametrize("when", ["before_it_runs", "while_it_runs"])
+def test_failed_load_reports_failure_without_hanging(spark, sink, when):
+    """A failed write returns ``success=False`` without waiting for its
+    count: the Observation of a write that failed before it ran (here,
+    at analysis) never completes, so reading it would block."""
+    from pyspark.sql import functions as F
 
-    df, acc = make_counted_df()
-    res = sink.load_bucketed(df, "tbl_once_bkt", ["k"], 2, count_rows=False)
-    assert res.success and res.rows_loaded == -1
-    assert acc.value == n, f"load_bucketed ran the plan {acc.value / n:.1f}x"
-
-    df, acc = make_counted_df()
-    res = sink.load_partitioned(df, "tbl_once_part", ["k"], count_rows=False)
-    assert res.success and res.rows_loaded == -1
-    assert acc.value == n, f"load_partitioned ran the plan {acc.value / n:.1f}x"
-
-    # and the opt-in still reports exact rows (reference LoadResult)
-    df, acc = make_counted_df()
-    res = sink.load(df, "tbl_twice_plain", mode="overwrite", count_rows=True)
-    assert res.success and res.rows_loaded == n
+    if when == "before_it_runs":
+        assert sink.load(spark.range(3), "tbl_taken").success
+        df, mode = spark.range(10), "error_if_exists"
+    else:
+        df = spark.range(10).select(
+            F.when(F.col("id") == 5, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("id")).alias("id"))
+        mode = "overwrite"
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(res=sink.load(df, "tbl_taken", mode=mode)), daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "load hung after a failed write"
+    assert out["res"].success is False and out["res"].error
+    assert out["res"].rows_loaded == 0
 
 
 def test_load_jdbc_roundtrip_embedded_derby(spark, tmp_path):
@@ -221,11 +249,8 @@ def test_load_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     assert res.success and res.rows_loaded == 3
     assert spark.read.jdbc(url, "events_out", properties=props).count() == 3
 
-    res2 = sink.load_jdbc(
-        df, url, "events_out", mode="append", properties=props,
-        count_rows=False,
-    )
-    assert res2.success and res2.rows_loaded == -1
+    res2 = sink.load_jdbc(df, url, "events_out", mode="append", properties=props)
+    assert res2.success and res2.rows_loaded == 3
     assert spark.read.jdbc(url, "events_out", properties=props).count() == 6
 
     # report-don't-raise: a bad URL comes back as a failed LoadResult
