@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import ws_tokens
+from .textstats import word_ngrams, ws_tokens
 
 __all__ = ["positional_ngrams", "flagged_grams", "remove_boilerplate_spans"]
 
@@ -42,13 +42,11 @@ def positional_ngrams(tokd: DataFrame, n: int) -> DataFrame:
     """(doc_id, p, gram): every word n-gram occurrence with its 1-based
     start position. ``tokd`` must expose (doc_id, w) with w the token
     array; docs shorter than n contribute no rows."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("w") - (n - 1)),
-        lambda i: F.array_join(F.slice("w", i, n), " "),
-    )
     return (
         tokd.where(F.size("w") >= n)
-        .select("doc_id", F.posexplode(grams).alias("p0", "gram"))
+        .select(
+            "doc_id", F.posexplode(word_ngrams(F.col("w"), n)).alias("p0", "gram")
+        )
         .select("doc_id", (F.col("p0") + 1).alias("p"), "gram")
     )
 

@@ -25,12 +25,12 @@ are oracle-checkable against DuckDB (rare for MinHash implementations).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 import logging
 
-from .textstats import ws_tokens
+from .textstats import word_ngrams, ws_tokens
 
 logger = logging.getLogger(__name__)
 
@@ -65,17 +65,14 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str = "doc_id") 
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the text as an array column.
-    Guarded: Spark's ``sequence(1, 0)`` counts *down*, so texts with
-    fewer than n tokens must short-circuit to an empty array."""
-    toks = ws_tokens(text)
-    joined = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(joined)).otherwise(
-        F.array().cast("array<string>")
-    )
+    """Distinct word n-gram shingles of the text as an array column, in
+    first-occurrence order; the empty array for a null text or one with
+    fewer than n tokens. The n-grams come from ``word_ngrams``, whose
+    lambda refers to nothing computed outside it: the text is trimmed
+    and split a fixed number of times per document (for the guard and
+    for each of the n slices), where a lambda that sliced the token
+    expression itself split it once per shingle (NOTES.md)."""
+    return F.array_distinct(word_ngrams(ws_tokens(text), n))
 
 
 def with_shingles(
@@ -89,7 +86,9 @@ def with_shingles(
     after it made Catalyst push the predicate through the projection by
     substitution, re-evaluating the whole interpreted shingle HOF tree
     once per row in the Filter on top of the Project's own evaluation —
-    measured 6.5x the projection-only wall at sf0.1 (r13)."""
+    measured 6.5x the projection-only wall at sf0.1 (r13). No lambda of
+    the projection tokenizes (``word_shingles``), so the projection
+    splits each document a fixed number of times whatever its length."""
     return (
         df.where(F.size(ws_tokens(F.col(text_col))) >= n)
         .select(F.col(id_col), word_shingles(F.col(text_col), n).alias("shingles"))
@@ -316,33 +315,40 @@ def ngram_jaccard_pairs(
 _MH_MOD = 1 << 32
 
 
-def _h32(s: Column, offset: int) -> Column:
-    """One 32-bit half of md5(s) as a long (hex chars offset..offset+7)."""
-    return F.conv(F.substring(F.md5(s), offset, 8), 16, 10).cast("long")
-
-
 def minhash_signature(shingles: Column, num_perm: int = 12) -> Column:
     """Array of ``num_perm`` minhashes via Kirsch-Mitzenmacher double
     hashing: md5(shingle) once yields two 32-bit halves (h1, h2); the
     i-th permutation hash is (h1 + i·h2) mod 2^32 and the signature entry
-    is its min over shingles. One md5 per shingle instead of num_perm —
-    an order of magnitude cheaper at equal LSH candidate recall — and
-    still pure builtins, so the DuckDB oracle reproduces it exactly.
+    is its min over shingles (null for an empty array). One md5 per
+    shingle instead of num_perm, and still pure builtins, so the DuckDB
+    oracle reproduces it exactly.
 
-    NOTE: as a single column expression the md5 may be re-evaluated per
-    seed by nested-lambda execution; the hot path (minhash_lsh_pairs)
-    uses the explode + groupBy formulation, which guarantees one md5 per
-    shingle *and* gets map-side partial aggregation."""
-    pairs = F.transform(
-        shingles, lambda s: F.struct(_h32(s, 1).alias("h1"), _h32(s, 9).alias("h2"))
+    One left fold over the (h1, h2) array carries all num_perm running
+    minima at once (``zip_with`` against the seed sequence): a single
+    traversal instead of num_perm ``array_min`` passes. The md5 and
+    (h1, h2) arrays are ``transform`` results passed as the fold's
+    ARGUMENT, which is evaluated once per row; inside a lambda they
+    would be re-evaluated per seed. min is associative and commutative
+    and ``least`` skips the null start value, so the values equal the
+    per-seed formulation the oracle mirrors."""
+    seeds = F.sequence(F.lit(0), F.lit(num_perm - 1))
+    hashes = F.transform(shingles, F.md5)
+    halves = F.transform(
+        hashes,
+        lambda h: F.struct(
+            F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("h1"),
+            F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("h2"),
+        ),
     )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                pairs,
-                lambda p: F.pmod(p["h1"] + i.cast("long") * p["h2"], F.lit(_MH_MOD)),
-            )
+    return F.aggregate(
+        halves,
+        F.array_repeat(F.lit(None).cast("long"), num_perm),
+        lambda acc, p: F.zip_with(
+            acc,
+            seeds,
+            lambda a, i: F.least(
+                a, F.pmod(p["h1"] + i.cast("long") * p["h2"], F.lit(_MH_MOD))
+            ),
         ),
     )
 
@@ -375,41 +381,8 @@ def _banded_signatures(
     incremental new-vs-corpus join (``minhash_lsh_pairs_between``)
     produce band keys from the identical expression tree."""
     rows = num_perm // bands
-    sh = with_shingles(df, n, text_col, id_col)
-    # Two-step signature: the md5-derived (h1, h2) pair array stays a
-    # SEPARATE projection (Catalyst's CollapseProject won't inline a
-    # non-cheap alias referenced num_perm times), so md5 runs exactly
-    # once per shingle; each seed's hash is then cheap arithmetic.
-    hp = sh.withColumn(
-        "hp",
-        F.transform(
-            "shingles",
-            lambda s: F.struct(_h32(s, 1).alias("h1"), _h32(s, 9).alias("h2")),
-        ),
-    )
-    # Single left-fold over the shingle hashes carrying all num_perm
-    # running minima at once (zip_with against the seed sequence) — one
-    # traversal of the hp array instead of num_perm array_min passes.
-    # min is associative/commutative, so the signature VALUES are
-    # bit-identical to the per-seed formulation the DuckDB oracle mirrors
-    # (measured: 0 mismatching rows at sf0.1, ~20% off the signature
-    # stage).
-    seeds = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    sig = hp.select(
-        id_col,
-        "shingles",
-        "n_shingles",
-        F.aggregate(
-            F.col("hp"),
-            F.array_repeat(F.lit(_MH_MOD).cast("long"), num_perm),
-            lambda acc, p: F.zip_with(
-                acc,
-                seeds,
-                lambda a, i: F.least(
-                    a, F.pmod(p["h1"] + i.cast("long") * p["h2"], F.lit(_MH_MOD))
-                ),
-            ),
-        ).alias("sig"),
+    sig = with_shingles(df, n, text_col, id_col).withColumn(
+        "sig", minhash_signature(F.col("shingles"), num_perm)
     )
     # Carry the shingle arrays through the band join: in the self-join
     # both sides are the IDENTICAL subtree hash-partitioned on
@@ -807,6 +780,19 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _checkpoint_with_label_sum(labels: DataFrame) -> tuple[DataFrame, object]:
+    """(localCheckpoint of ``labels``, exact decimal sum of its labels).
+    The sum is an ``Observation`` on the frame the checkpoint
+    materializes, so it costs no job of its own. ``localCheckpoint``
+    runs its job as a named action, which completes the observation
+    (also on an empty frame, where the sum is null)."""
+    obs = Observation()
+    out = labels.observe(
+        obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    ).localCheckpoint()
+    return out, obs.get["s"]
+
+
 def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -830,11 +816,10 @@ def dedup_clusters(
     from one extra node-keyed join per round. `localCheckpoint`
     truncates lineage so round N doesn't replay rounds 1..N-1.
 
-    Correctness at the fixpoint (no label changed; one scalar action per
-    round): labels only decrease and always name a node of the same
-    component, and stability under neighbor-min over symmetric edges
-    forces l(u) = l(v) across every edge, so the constant label is the
-    component minimum.
+    Correctness at the fixpoint (no label changed): labels only
+    decrease and always name a node of the same component, and stability
+    under neighbor-min over symmetric edges forces l(u) = l(v) across
+    every edge, so the constant label is the component minimum.
 
     Round shape (r13 optimization, values identical): the edge set is
     augmented with one SELF-LOOP per node, so the neighbor-min
@@ -846,9 +831,10 @@ def dedup_clusters(
     partitioning, so no round re-shuffles the edges. Convergence is
     detected by the exact decimal sum of labels: labels are
     non-increasing, so the sum is strictly decreasing until the
-    fixpoint and constant at it — one tiny scalar aggregate per round
-    against the checkpointed labels, replacing the label!=prev count
-    (which needed prev carried through the round).
+    fixpoint and constant at it. Each sum (the initial labels' and every
+    round's) is an ``Observation`` on the frame that round's
+    ``localCheckpoint`` materializes, so testing convergence adds no
+    job to the round.
     """
     base = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -868,10 +854,9 @@ def dedup_clusters(
         .repartition("dst")
         .localCheckpoint()
     )
-    labels = nodes.withColumn("label", F.col("id")).localCheckpoint()
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
+    labels, prev_sum = _checkpoint_with_label_sum(
+        nodes.withColumn("label", F.col("id"))
+    )
     converged = False
     for _ in range(max_iterations):
         mid = (
@@ -884,21 +869,15 @@ def dedup_clusters(
         # own grouping column, so it adds no exchange of its own.
         m = mid.alias("m")
         p = mid.alias("p")
-        jumped = (
-            m.join(p, F.col("m.mid") == F.col("p.src"), "left")
-            .select(
+        labels, new_sum = _checkpoint_with_label_sum(
+            m.join(p, F.col("m.mid") == F.col("p.src"), "left").select(
                 F.col("m.src").alias("id"),
                 F.least(
                     F.col("m.mid"),
                     F.coalesce(F.col("p.mid"), F.col("m.mid")),
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
-        new_sum = jumped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        labels = jumped
         if new_sum == prev_sum:
             converged = True
             break

@@ -36,6 +36,28 @@ def ws_tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Overlapping word ``n``-grams of a token array, space-joined, in
+    token order; the empty array when it has fewer than ``n`` tokens.
+
+    Built as the ``n`` shifted slices of ``toks`` zipped together, so the
+    lambda only joins the fields of one zipped element and refers to
+    nothing computed outside it. Catalyst does not eliminate common
+    subexpressions inside a higher-order-function lambda: a lambda that
+    sliced ``toks`` itself re-evaluated the whole token expression (trim
+    and regex split, when ``toks`` is ``ws_tokens(text)``) once per
+    n-gram. The CASE guard is evaluated first, so the slice length is
+    never negative."""
+    k = F.size(toks) - (n - 1)
+    zipped = F.arrays_zip(*[F.slice(toks, i + 1, k) for i in range(n)])
+    grams = F.transform(
+        zipped, lambda z: F.concat_ws(" ", *[z[str(i)] for i in range(n)])
+    )
+    return F.when(F.size(toks) >= n, grams).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document token statistics: whitespace token count, a BPE-ish
     regex token count, char count, and mean token length."""
@@ -310,19 +332,6 @@ def tfidf_top_terms(
 # ---------------------------------------------------------------------------
 
 
-def _word_ngrams(toks_col: str, n: int) -> Column:
-    """Overlapping word n-grams of an array column as space-joined strings
-    (empty array when the document has fewer than ``n`` tokens — guarded
-    with CASE because Spark's ``sequence(1, 0)`` counts *down* and
-    ``slice`` rejects start 0)."""
-    return F.expr(
-        f"CASE WHEN size({toks_col}) >= {n} THEN "
-        f"transform(sequence(1, size({toks_col}) - {n - 1}), "
-        f"i -> concat_ws(' ', slice({toks_col}, i, {n}))) "
-        f"ELSE array() END"
-    )
-
-
 def repetition_ratio(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -347,8 +356,8 @@ def repetition_ratio(
     ).select(
         F.col(id_col),
         F.size(F.col("__toks")).alias("n_tokens"),
-        _word_ngrams("__toks", 2).alias("__bi"),
-        _word_ngrams("__toks", 3).alias("__tri"),
+        word_ngrams(F.col("__toks"), 2).alias("__bi"),
+        word_ngrams(F.col("__toks"), 3).alias("__tri"),
     )
     return with_grams.select(
         F.col(id_col),
@@ -397,7 +406,7 @@ def corpus_filter(
     ).select(
         F.col(id_col),
         F.col("__toks"),
-        _word_ngrams("__toks", 3).alias("__tri"),
+        word_ngrams(F.col("__toks"), 3).alias("__tri"),
     )
     n_tokens = F.size(F.col("__toks"))
     mean_tok = F.aggregate(

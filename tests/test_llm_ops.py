@@ -6,7 +6,9 @@ tests/test_oracle_parity.py (the llm queries are in oracle_sql()); here
 we pin the *semantics* on inputs where the right answer is obvious.
 """
 
+import hashlib
 import math
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,12 +25,14 @@ from data_pipeline_for_real_time_retail_analytics_spark.operators import (
     extract_features,
     media_table,
     minhash_lsh_pairs,
+    minhash_signature,
     ngram_jaccard_pairs,
     plant_near_dups,
     sample_frames,
     simhash_pairs,
     simhash_table,
     token_stats,
+    with_shingles,
     word_shingles,
 )
 from data_pipeline_for_real_time_retail_analytics_spark.operators.textstats import (
@@ -69,6 +73,93 @@ def test_word_shingles_short_text_empty(spark, docs):
     by_id = {r["doc_id"]: r["sh"] for r in out}
     assert by_id[5] == []  # 2 tokens < n=3 → empty, not a descending-sequence crash
     assert "the quick brown" in by_id[0]
+
+
+_AB14 = " ".join(["a", "b"] * 7)
+
+#: text -> {n: word_shingles(text, n)}; edge texts a tokenizer can get
+#: wrong (null, empty, whitespace-only, fewer than n tokens, runs of
+#: mixed whitespace, repeated tokens)
+_SHINGLE_CASES = [
+    (None, {1: [], 2: [], 3: [], 5: [], 13: []}),
+    ("", {1: [""], 2: [], 3: [], 5: [], 13: []}),
+    ("   ", {1: [""], 2: [], 3: [], 5: [], 13: []}),
+    ("a b", {1: ["a", "b"], 2: ["a b"], 3: [], 5: [], 13: []}),
+    (
+        "  x \t y\n\nz  ",
+        {1: ["x", "y", "z"], 2: ["x y", "y z"], 3: ["x y z"], 5: [], 13: []},
+    ),
+    ("a a a a a a", {1: ["a"], 2: ["a a"], 3: ["a a a"], 5: ["a a a a a"], 13: []}),
+    (
+        _AB14,
+        {
+            1: ["a", "b"],
+            2: ["a b", "b a"],
+            3: ["a b a", "b a b"],
+            5: ["a b a b a", "b a b a b"],
+            13: ["a b a b a b a b a b a b a", "b a b a b a b a b a b a b"],
+        },
+    ),
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5, 13])
+def test_word_shingles_literal_arrays(spark, n):
+    texts = spark.createDataFrame(
+        [(i, t) for i, (t, _) in enumerate(_SHINGLE_CASES)], "doc_id long, text string"
+    )
+    out = texts.select("doc_id", word_shingles(F.col("text"), n).alias("sh"))
+    got = {r["doc_id"]: r["sh"] for r in out.collect()}
+    assert got == {i: want[n] for i, (_, want) in enumerate(_SHINGLE_CASES)}
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` call in a plan string, parentheses
+    balanced."""
+    bodies, i = [], plan.find("lambdafunction(")
+    while i >= 0:
+        depth = 0
+        for j in range(i + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[i : j + 1])
+        i = plan.find("lambdafunction(", i + 1)
+    return bodies
+
+
+def test_with_shingles_lambdas_do_not_tokenize(spark, docs):
+    """No higher-order-function lambda of the optimized shingle plan
+    splits text: Catalyst does not share subexpressions inside a lambda,
+    so a split there runs once per shingle instead of once per slice."""
+    plan = with_shingles(docs)._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies and "split(" in plan
+    assert [b for b in bodies if "split(" in b] == []
+
+
+def _minhash_reference(shingles: list[str], num_perm: int) -> list:
+    halves = [
+        (int(h[:8], 16), int(h[8:16], 16))
+        for h in (hashlib.md5(s.encode()).hexdigest() for s in shingles)
+    ]
+    return [
+        min(((h1 + i * h2) % (1 << 32) for h1, h2 in halves), default=None)
+        for i in range(num_perm)
+    ]
+
+
+def test_minhash_signature_values_and_one_md5_per_shingle(spark):
+    """Per-seed minima equal a Python reference (null for no shingles),
+    and md5 appears once in the optimized plan: the hash array is the
+    fold's argument, evaluated once per row, not a lambda subexpression
+    re-evaluated per seed."""
+    rows = [(0, ["a b c", "b c d", "c d e"]), (1, ["x"]), (2, [])]
+    df = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
+    out = df.select("doc_id", minhash_signature(F.col("shingles"), 8).alias("sig"))
+    got = {r["doc_id"]: r["sig"] for r in out.collect()}
+    assert got == {i: _minhash_reference(sh, 8) for i, sh in rows}
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("md5(") == 1
 
 
 def test_ngram_jaccard_finds_near_dup_only(spark, docs):
@@ -379,6 +470,38 @@ def test_dedup_clusters_warns_when_unconverged(spark, caplog):
                          logger="data_pipeline_for_real_time_retail_analytics_spark.operators.dedup"):
         dedup_clusters(pairs, max_iterations=1).collect()
     assert any("without a proven fixpoint" in r.message for r in caplog.records)
+
+
+def test_dedup_clusters_empty_pairs_do_not_block(spark):
+    """An empty pair set yields an empty frame; the convergence sums are
+    Observations, which must complete on an empty frame too."""
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(rows=dedup_clusters(pairs).collect()), daemon=True
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "dedup_clusters blocked on an empty pair set"
+    assert out["rows"] == []
+
+
+def test_dedup_clusters_job_count(spark):
+    """Convergence is read from Observations on the label checkpoints,
+    not from a separate sum job after each: 25 jobs on this graph, 33
+    with the standalone sum jobs."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (3, 4), (7, 8)], "doc_a long, doc_b long"
+    )
+    group = "dedup-clusters-job-count"
+    sc.setJobGroup(group, "dedup_clusters")
+    try:
+        out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 7}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 25
 
 
 def test_dedup_keep_canonical(spark):
