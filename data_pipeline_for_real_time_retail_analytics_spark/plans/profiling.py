@@ -56,42 +56,44 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     view, the first click strictly after it, the first purchase strictly
     after that; then one global rollup of stage survivors.
 
-    Shape: three aggregates all keyed on user_id, each shuffling only
-    its event-type-filtered slice (the filters push into the scan), and
-    each stage carries ONE row per user, so the follow-up joins are
-    per-user-bounded — AQE broadcasts the small stage frames at test SF
-    and falls back to co-partitioned sort-merge at scale. The final
-    one-row rollup chain is partial-aggregated counts crossed together;
-    no windows over the raw event stream, no self-join explosion, no
-    driver-side count action.
+    Shape: one shuffle on user_id. The three stage minimums are stacked
+    whole-partition windows over ``partitionBy("user_id")`` (each stage
+    is bounded by the one before), so they share that exchange and its
+    sort; the per-user aggregate reuses the partitioning, and the global
+    count is one partial-aggregated row. No joins, no driver-side count
+    action.
+
+    A null user_id keeps the oracle's meaning: its group counts toward
+    ``n_view`` (GROUP BY keeps it) but never toward a later stage (the
+    oracle's JOIN on user_id drops it), and ``n_users`` is
+    COUNT(DISTINCT user_id).
     """
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    first_view = (
-        ev.where(F.col("event_type") == "view")
+    by_user = W.partitionBy("user_id")
+
+    def first(event_type: str, after: str | None = None):
+        hit = F.col("event_type") == event_type
+        if after is not None:
+            hit = hit & F.col("user_id").isNotNull() & (F.col("ts") > F.col(after))
+        return F.min(F.when(hit, F.col("ts"))).over(by_user)
+
+    per_user = (
+        ev.withColumn("view_ts", first("view"))
+        .withColumn("click_ts", first("click", after="view_ts"))
+        .withColumn("purchase_ts", first("purchase", after="click_ts"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("view_ts"))
-    )
-    first_click = (
-        ev.where(F.col("event_type") == "click")
-        .join(first_view, "user_id")
-        .where(F.col("ts") > F.col("view_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ts"))
-    )
-    first_purchase = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(first_click, "user_id")
-        .where(F.col("ts") > F.col("click_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ts"))
-    )
-    stages = (
-        ev.agg(F.count_distinct("user_id").alias("n_users"))
-        .crossJoin(first_view.agg(F.count(F.lit(1)).alias("n_view")))
-        .crossJoin(first_click.agg(F.count(F.lit(1)).alias("n_view_click")))
-        .crossJoin(
-            first_purchase.agg(F.count(F.lit(1)).alias("n_view_click_purchase"))
+        .agg(
+            # a view with a null ts still makes its user a viewer
+            F.bool_or(F.col("event_type") == "view").alias("viewed"),
+            F.max("click_ts").isNotNull().alias("clicked"),
+            F.max("purchase_ts").isNotNull().alias("purchased"),
         )
+    )
+    stages = per_user.agg(
+        F.count("user_id").alias("n_users"),
+        F.count_if("viewed").alias("n_view"),
+        F.count_if("clicked").alias("n_view_click"),
+        F.count_if("purchased").alias("n_view_click_purchase"),
     )
     return stages.select(
         "n_users",

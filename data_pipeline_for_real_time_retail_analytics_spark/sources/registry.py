@@ -17,7 +17,8 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,6 +27,43 @@ from ..schemas import TABLE_SCHEMAS
 
 class DataSourceError(Exception):
     """Raised when a source cannot connect or extract."""
+
+
+# ---------------------------------------------------------------------------
+# The one schema rule for file reads: declared, else inferred once.
+# ---------------------------------------------------------------------------
+
+#: path -> (version, schema) kept by ``read_reusing_schema``
+SchemaStore = dict[str, tuple[Any, T.StructType]]
+
+
+def read_reusing_schema(
+    reader: DataFrameReader,
+    path: str,
+    declared: T.StructType | None = None,
+    store: SchemaStore | None = None,
+    version: Any = None,
+) -> DataFrame:
+    """Load ``path`` with ``declared`` when there is one. Otherwise load
+    it with the schema ``store`` holds for ``path`` at ``version``; when
+    it holds none (or one for another version), infer — for parquet one
+    Spark job reading a footer — and store the result under ``version``.
+    With ``store=None`` every call infers.
+
+    A stored schema is what inference would find again as long as the
+    files behind ``path`` are the ones it was inferred from; ``version``
+    names those files for a caller that cannot promise they stay put.
+    """
+    if declared is None and store is not None:
+        held = store.get(path)
+        if held is not None and held[0] == version:
+            declared = held[1]
+    if declared is not None:
+        return reader.schema(declared).load(path)
+    df = reader.load(path)
+    if store is not None:
+        store[path] = (version, df.schema)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -46,9 +84,10 @@ class FileSource:
     (data_sources.py:227) is deliberately dropped: a global sort is a
     needless shuffle at scale; ordering belongs at the sink if anywhere.
 
-    Without an explicit ``schema``, a parquet source stores the schema
-    its first ``read`` infers and hands it to every later read, so a
-    repeated probe/extract starts no schema-inference job. Without
+    Schema rule (``read_reusing_schema``): an explicit ``schema`` is
+    used as given. Without one, a parquet source infers on its first
+    ``read`` and reuses that schema for as long as the source lives, so
+    a repeated probe/extract starts no schema-inference job. Without
     ``mergeSchema`` Spark infers from a single footer anyway, so the
     stored schema is the one each read would have found; files that later
     add columns are read with the stored columns, as they would be by
@@ -61,7 +100,9 @@ class FileSource:
     fmt: str = "parquet"
     options: dict[str, str] = field(default_factory=dict)
     schema: Any = None  # StructType; None = parquet self-describing
-    _inferred: Any = field(default=None, init=False, repr=False, compare=False)
+    _schemas: SchemaStore = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def _keeps_inferred(self, spark: SparkSession) -> bool:
         if self.fmt != "parquet":
@@ -74,13 +115,8 @@ class FileSource:
 
     def read(self, spark: SparkSession) -> DataFrame:
         reader = spark.read.format(self.fmt).options(**self.options)
-        schema = self.schema if self.schema is not None else self._inferred
-        if schema is not None:
-            return reader.schema(schema).load(self.path)
-        df = reader.load(self.path)
-        if self._keeps_inferred(spark):
-            self._inferred = df.schema
-        return df
+        store = self._schemas if self._keeps_inferred(spark) else None
+        return read_reusing_schema(reader, self.path, self.schema, store)
 
     def extract(
         self,
@@ -364,25 +400,76 @@ class SourceRegistry:
 # ---------------------------------------------------------------------------
 
 
+#: schemas ``load_table`` inferred, keyed by qualified path and
+#: versioned by the file listing, so a table rewritten in place is
+#: inferred again. Process-wide because plan functions take only
+#: (spark, sf_dir); one entry per path, and a schema holds no session.
+_TABLE_SCHEMAS: SchemaStore = {}
+
+
+def _listing(spark: SparkSession, path: str) -> tuple[str, tuple] | None:
+    """(qualified path, sorted (file, length, mtime) under it), from the
+    Hadoop FileSystem on the driver, so no Spark job runs. None when the
+    path cannot be listed; the read then reports the error itself."""
+    jvm = spark.sparkContext._jvm
+    try:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        qualified = fs.makeQualified(p)
+        files = fs.listFiles(qualified, True)
+        entries = []
+        while files.hasNext():
+            st = files.next()
+            entries.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    except Py4JJavaError:
+        return None
+    return qualified.toString(), tuple(sorted(entries))
+
+
+def _pin_conf(spark: SparkSession, key: str, value: str) -> None:
+    if spark.conf.get(key) != value:
+        spark.conf.set(key, value)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table as parquet (self-describing schema).
+
+    Schema rule (``read_reusing_schema``): the first read of a path
+    infers its schema (one Spark job); later reads of the same qualified
+    path reuse it while the Hadoop listing of its files (names, lengths,
+    mtimes) is unchanged, so building a plan over tables already seen
+    starts no job. A table rewritten at the same path lists differently
+    and is inferred again.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
     vectorized reader rejects; read it as long nanoseconds and floor-divide
     to microsecond timestamps (integer DIV — float division would lose
     precision above 2^53 ns).
+
+    ``session.get_spark`` sets both confs this read needs (session
+    timezone UTC, so timestamp rendering and truncation match the
+    oracles; ``nanosAsLong`` for ``events``). A caller may bring its own
+    session with other values, so each call checks them and sets only
+    one that differs.
     """
     path = f"{sf_dir}/{name}.parquet"
-    # pin UTC so timestamp rendering/truncation is independent of whatever
-    # session timezone the caller's SparkSession carries (oracle parity)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_conf(spark, "spark.sql.session.timeZone", "UTC")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        return df
-    return spark.read.parquet(path)
+        _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read.format("parquet")
+    listed = _listing(spark, path)
+    if listed is None:
+        df = reader.load(path)
+    else:
+        qualified, files = listed
+        df = read_reusing_schema(
+            reader, qualified, store=_TABLE_SCHEMAS, version=files
+        )
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

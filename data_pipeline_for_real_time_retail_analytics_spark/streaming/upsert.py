@@ -33,8 +33,10 @@ import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.transform import apply_changelog
+from ..sources.registry import read_reusing_schema
 
 
 def _swap_siblings(target_path: str) -> tuple[list[str], list[str]]:
@@ -87,9 +89,17 @@ def streaming_merge_sink(
     tiebreak_col: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: merge each micro-batch into the state table at
-    ``target_path``."""
+    ``target_path``.
+
+    The body reads the state with the schema of the frame it last
+    swapped in, so only its first batch in a process infers one. A
+    crash between the renames leaves that swap undone, and the schema
+    is recorded only once it completes, so the state ``recover_swap``
+    restores is the one the recorded schema describes."""
+    written: StructType | None = None  # schema of the last state swapped in
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal written
         if not batch_df.head(1):
             return  # skip-if-no-changes (reference: operators.py:74-80)
         recover_swap(target_path)
@@ -99,7 +109,9 @@ def streaming_merge_sink(
             and (tiebreak_col is None or c != tiebreak_col)
         ]
         if os.path.exists(target_path):
-            base = spark.read.parquet(target_path)
+            base = read_reusing_schema(
+                spark.read.format("parquet"), target_path, declared=written
+            )
         else:
             base = batch_df.select(*keys, *value_cols).limit(0)
         merged = apply_changelog(
@@ -111,6 +123,7 @@ def streaming_merge_sink(
         if os.path.exists(target_path):
             os.rename(target_path, old)
         os.rename(tmp, target_path)
+        written = merged.schema
         shutil.rmtree(old, ignore_errors=True)
 
     return _merge

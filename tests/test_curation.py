@@ -318,6 +318,64 @@ def test_event_funnel_strict_ordering(spark, tmp_path, monkeypatch):
     assert row["n_view_click_purchase"] == 1  # only user 1
 
 
+def test_event_funnel_matches_oracle_with_null_users_and_ties(spark, tmp_path):
+    """Value parity with the DuckDB oracle on the cases the one-shuffle
+    plan must get right: the null user_id group counts as a viewer only
+    (the oracle's JOIN drops it from later stages, and COUNT(DISTINCT)
+    from n_users), a click tied in time with the view is not after it,
+    a view with a null ts still makes a viewer but bounds no click, and
+    a click with a null ts is never after anything."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_for_real_time_retail_analytics_spark.plans.profiling import (
+        ORACLES,
+        q_event_funnel,
+    )
+
+    rows = [
+        # (user_id, event_type, minute); None minute = null ts
+        (1, "view", 0), (1, "click", 0), (1, "click", 5), (1, "purchase", 10),
+        (2, "view", 0), (2, "click", 0), (2, "purchase", 1),
+        (None, "view", 0), (None, "click", 5), (None, "purchase", 10),
+        (None, "view", 20),
+        (3, "click", 0), (3, "purchase", 5),
+        (4, "view", None), (4, "click", 5),
+        (5, "view", 0), (5, "click", None), (5, "purchase", 5),
+        (6, None, 0), (6, "purchase", 3),
+    ]
+    base = 1_704_067_200 * 10**9  # 2024-01-01 UTC, in ns
+    table = pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array(
+            [None if m is None else base + m * 60 * 10**9 for _, _, m in rows],
+            pa.timestamp("ns"),
+        ),
+        "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
+        "event_type": pa.array([e for _, e, _ in rows], pa.string()),
+        "value": pa.array([0.0] * len(rows), pa.float64()),
+        "props": pa.array(["{}"] * len(rows), pa.string()),
+    })
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+
+    (got,) = q_event_funnel(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet')"
+        )
+        cur = con.execute(ORACLES["event_funnel"])
+        names = [d[0] for d in cur.description]
+        (want,) = cur.fetchall()
+    finally:
+        con.close()
+    assert got.asDict() == dict(zip(names, want))
+    assert (got["n_users"], got["n_view"], got["n_view_click"],
+            got["n_view_click_purchase"]) == (6, 5, 1, 1)
+
+
 # ---------------------------------------------------------------------------
 # sketch-based approx profiles (bounded-state twins of the exact ops)
 # ---------------------------------------------------------------------------

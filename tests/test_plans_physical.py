@@ -314,3 +314,48 @@ def test_embedding_near_dup_reuses_bucket_subtree(spark, sf_dir):
     )
     logical = df._jdf.queryExecution().analyzed().toString()
     assert "merge" in logical.lower(), "merge hint dropped"
+
+
+def _query_mix():
+    """``perfbench/query_mix.MIX``: the six queries the benchmark's
+    analytics round runs."""
+    import importlib
+    import os
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench = os.path.join(root, "perfbench")
+    sys.path.insert(0, bench)
+    try:
+        return importlib.import_module("query_mix").MIX
+    finally:
+        sys.path.remove(bench)
+
+
+def test_query_mix_builds_start_no_jobs(spark, sf_dir):
+    """Once its tables have been read, building a mix query reuses their
+    schemas and starts no Spark job; only collecting runs jobs."""
+    import __spark_entry__
+    from test_sources import _jobs_started
+
+    queries = __spark_entry__.queries()
+    mix = _query_mix()
+    for name in mix:
+        queries[name](spark, sf_dir)
+    for name in mix:
+        assert _jobs_started(spark, lambda: queries[name](spark, sf_dir)) == 0, name
+
+
+def test_event_funnel_is_one_shuffle_on_user_id(spark, sf_dir):
+    """The three funnel stages are stacked windows on one user_id
+    exchange: no join, and besides that exchange only the one-row
+    gather of the global count."""
+    from data_pipeline_for_real_time_retail_analytics_spark.plans.profiling import (
+        q_event_funnel,
+    )
+
+    plan = _plan(q_event_funnel(spark, sf_dir))
+    assert "Join" not in plan
+    assert plan.count("Exchange hashpartitioning(user_id") == 1
+    assert plan.count("Exchange ") == 2  # + Exchange SinglePartition
+    assert plan.count("Window [") == 3

@@ -16,6 +16,7 @@ from data_pipeline_for_real_time_retail_analytics_spark.sources.registry import 
     JDBCSource,
     SourceRegistry,
     is_retryable_error,
+    load_table,
     retry_with_backoff,
 )
 from data_pipeline_for_real_time_retail_analytics_spark.sources.serializer import (
@@ -259,13 +260,13 @@ def test_file_source_incremental_pushdown(spark, sf_dir):
     assert df.count() == full
 
 
-def _jobs_started(spark, read):
-    """Spark jobs started while ``read()`` builds its DataFrame."""
+def _jobs_started(spark, fn):
+    """Spark jobs started while ``fn()`` runs (counted by job group)."""
     sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "FileSource.read")
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
     try:
-        read()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -276,10 +277,8 @@ def test_file_source_reuses_inferred_schema(spark, tmp_path):
     spark.range(10).selectExpr("id", "id * 2 AS v").write.parquet(path)
     src = FileSource(source_id="t", path=path)
     assert _jobs_started(spark, lambda: src.read(spark)) >= 1  # inference
-    stored = src._inferred
-    assert stored is not None and stored.fieldNames() == ["id", "v"]
     assert _jobs_started(spark, lambda: src.read(spark)) == 0
-    assert src._inferred is stored
+    assert src.read(spark).columns == ["id", "v"]
     assert src.extract(spark, timestamp_column="v", watermark=10).count() == 4
 
 
@@ -288,10 +287,68 @@ def test_file_source_merge_schema_infers_every_read(spark, tmp_path):
     spark.range(3).write.parquet(f"{path}/part=1")
     src = FileSource(source_id="t", path=path, options={"mergeSchema": "true"})
     src.read(spark)
-    assert src._inferred is None
     spark.range(3).selectExpr("id", "'x' AS extra").write.parquet(f"{path}/part=2")
     assert "extra" in src.read(spark).columns  # the union widened
-    assert src._inferred is None
+    assert _jobs_started(spark, lambda: src.read(spark)) >= 1  # inferred again
+
+
+def test_load_table_reuses_schema_of_an_unchanged_path(spark, tmp_path):
+    spark.range(5).selectExpr("id", "id * 2 AS v").write.parquet(
+        str(tmp_path / "t.parquet")
+    )
+    assert _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "t")) >= 1
+    assert _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "v"]
+    assert load_table(spark, str(tmp_path), "t").where("v > 4").count() == 2
+
+
+@pytest.mark.parametrize("writer", ["spark", "pyarrow"])
+def test_load_table_infers_again_after_a_rewrite(spark, tmp_path, writer):
+    """A table rewritten at the same path is read with its new columns,
+    whether the rewrite adds a column or drops one. A pyarrow rewrite
+    keeps the one file name, so only its length and mtime change."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+
+    def write(**cols):
+        if writer == "spark":
+            rows = list(zip(*cols.values()))
+            schema = ", ".join(f"{c} long" for c in cols)
+            spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(path)
+        else:
+            pq.write_table(pa.table({c: pa.array(v, pa.int64()) for c, v in cols.items()}), path)
+
+    write(id=[1, 2], v=[10, 20])
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "v"]
+    write(id=[1, 2, 3], v=[10, 20, 30], w=[7, 8, 9])
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "v", "w"]
+    assert sorted(r["w"] for r in df.collect()) == [7, 8, 9]
+    write(id=[4])
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id"]
+    assert [r["id"] for r in df.collect()] == [4]
+
+
+def test_load_table_events_reuses_schema_and_converts_nanos(spark, tmp_path):
+    """``events.ts`` written as TIMESTAMP(NANOS) still reads as
+    microsecond timestamps when the (long) schema is reused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = 1_704_067_200 * 10**9 + 123_456_789  # 2024-01-01 00:00:00.123456789 UTC
+    pq.write_table(
+        pa.table({"event_id": pa.array([1], pa.int64()),
+                  "ts": pa.array([ns], pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    load_table(spark, str(tmp_path), "events")
+    assert _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "events")) == 0
+    ev = load_table(spark, str(tmp_path), "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert ev.select(F.unix_micros("ts")).first()[0] == ns // 1000
 
 
 def test_jdbc_reader_options_watermark_and_partitioning():
