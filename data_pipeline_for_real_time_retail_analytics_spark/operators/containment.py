@@ -57,16 +57,12 @@ def containment_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Ordered pairs (contained_id, container_id, n_shared,
     n_contained_rare) where ≥ ``threshold_pct``% of the contained
     document's rare shingles occur in the container. Both directions
     of a mutually-containing pair emit (each direction is its own
     claim). Documents with no rare shingle cannot be contained.
-
-    ``materialize=False`` skips the localCheckpoint for callers that
-    persist the rare-shingle posting frame themselves.
     """
     sh = df.select(
         F.col(id_col).alias("doc"),
@@ -88,9 +84,8 @@ def containment_pairs(
         sh.join(dfreq.where(F.col("df") <= df_cap), "s")
         .groupBy("s")
         .agg(F.collect_list("doc").alias("docs"))
+        .localCheckpoint()
     )
-    if materialize:
-        posts = posts.localCheckpoint()
     n_rare = (
         posts.select(F.explode("docs").alias("doc"))
         .groupBy("doc")

@@ -96,6 +96,17 @@ def with_shingles(
     )
 
 
+def _shingle_keys() -> Column:
+    """One row per entry of the ``shingles`` array: the first 16 hex
+    chars (64 bits) of the shingle's md5. Joins on this key instead of
+    the raw n-word string, so the shuffle carries 16 fixed chars. Parity
+    with the oracle is exact by construction: both engines hash with
+    md5, so any (negligible, ~n²/2^64) collision affects both alike."""
+    return F.explode(
+        F.transform("shingles", lambda s: F.substring(F.md5(s), 1, 16))
+    )
+
+
 # ---------------------------------------------------------------------------
 # benchmark decontamination (corpus vs eval-set n-gram collision)
 # ---------------------------------------------------------------------------
@@ -130,20 +141,12 @@ def contamination_pairs(
     |corpus| × |benchmark|.
     """
     c = with_shingles(corpus, n, text_col, id_col).select(
-        F.col(id_col),
-        F.explode(
-            F.transform("shingles", lambda s: F.substring(F.md5(s), 1, 16))
-        ).alias("__g"),
+        F.col(id_col), _shingle_keys().alias("__g")
     )
-    b = (
-        with_shingles(benchmark, n, text_col, id_col)
-        .select(
-            F.col(id_col).alias(bench_id_col),
-            F.col("n_shingles").alias("__bench_n"),
-            F.explode(
-                F.transform("shingles", lambda s: F.substring(F.md5(s), 1, 16))
-            ).alias("__g"),
-        )
+    b = with_shingles(benchmark, n, text_col, id_col).select(
+        F.col(id_col).alias(bench_id_col),
+        F.col("n_shingles").alias("__bench_n"),
+        _shingle_keys().alias("__g"),
     )
     hits = (
         c.join(b, "__g")
@@ -263,32 +266,21 @@ def ngram_jaccard_pairs(
             text_col=text_col,
             id_col=id_col,
         )
-    extra = [block_col]
     # cheap-predicate filter BEFORE the shingle projection — see
     # with_shingles (avoids re-evaluating the shingle HOF in the Filter)
     sh = (
         df.where(F.size(ws_tokens(F.col(text_col))) >= n)
-        .select(id_col, *extra, word_shingles(F.col(text_col), n).alias("shingles"))
+        .select(id_col, block_col, word_shingles(F.col(text_col), n).alias("shingles"))
         .withColumn("n_shingles", F.size("shingles"))
     )
-    # join on a 64-bit md5 prefix of each shingle, not the raw string:
-    # the shuffle then carries 16 fixed chars instead of n-word text.
-    # Parity with the oracle is exact by construction — both engines hash
-    # with md5, so any (negligible, ~n²/2^64) collision affects both
-    # identically.
-    ex = sh.select(
-        id_col,
-        *extra,
-        "n_shingles",
-        F.explode(
-            F.transform("shingles", lambda s: F.substring(F.md5(s), 1, 16))
-        ).alias("s"),
-    )
+    ex = sh.select(id_col, block_col, "n_shingles", _shingle_keys().alias("s"))
     a = ex.alias("a")
     b = ex.alias("b")
-    cond = (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
+    cond = (
+        (F.col("a.s") == F.col("b.s"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
+    )
     common = (
         a.join(b, cond)
         .groupBy(
@@ -399,20 +391,15 @@ def _banded_signatures(
     )
 
 
-def _exact_jaccard_verify(cand: DataFrame, threshold: float) -> DataFrame:
-    """(doc_a, doc_b, jaccard) from candidate rows carrying both shingle
-    arrays — the shared verify half of every MinHash-LSH shape."""
-    n_common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    jac = n_common / (F.col("n_a") + F.col("n_b") - n_common)
-    return (
-        cand.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .where(F.round(jac, 4) >= threshold)
-    )
+def _verify_then_dedup(
+    cand: DataFrame, threshold: float, pair: tuple[str, str] = ("doc_a", "doc_b")
+) -> DataFrame:
+    """(pair[0], pair[1], jaccard) from band-collision rows that carry
+    both shingle arrays (``sh_a``/``sh_b``) and sizes (``n_a``/``n_b``):
+    the shared verify half of the self-join and the new-vs-corpus join.
 
-
-def _verify_then_dedup(cand: DataFrame, threshold: float) -> DataFrame:
-    """Verify exact Jaccard BEFORE the cross-band pair dedup, so the
-    dedup shuffle carries (doc_a, doc_b, jaccard) — ~20 bytes/row —
+    Verifies exact Jaccard BEFORE the cross-band pair dedup, so the
+    dedup shuffle carries (id_a, id_b, jaccard) — ~20 bytes/row —
     instead of both shingle arrays (guide: project before the
     exchange). Three pieces, all value-preserving:
 
@@ -450,7 +437,7 @@ def _verify_then_dedup(cand: DataFrame, threshold: float) -> DataFrame:
             )
             >= threshold
         )
-        .groupBy("doc_a", "doc_b")
+        .groupBy(*pair)
         .agg(F.first(F.round(jac, 4)).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
@@ -464,7 +451,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fetch_shingles: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH candidates + exact-Jaccard
     verification. ``bands`` must divide ``num_perm``; candidate recall is
@@ -478,65 +464,13 @@ def minhash_lsh_pairs(
     input (NOTES.md, MinHash shuffle shapes). SMJ is also the only
     shape that survives a corpus-scale build side.
 
-    Two shuffle shapes, identical output (asserted in tests):
-
-    * ``fetch_shingles=False`` (default) — every banded row carries its
-      shingle array through the join, so verification needs no second
-      join and the self-join sides stay the identical subtree
-      (ReuseExchange computes signatures once). Shuffle volume is
-      ~bands x corpus shingle bytes: right at registry parameterization
-      (12/3, measured 56 MB vs fetch's two extra joins).
-    * ``fetch_shingles=True`` — band-join on (id, band_id, band_key)
-      only, dedup candidate pairs, then LEFT-SEMI the raw docs down to
-      surviving candidates and re-shingle ONLY those for the verify.
-      Shuffles are id-sized; the price is a second (candidate-bounded)
-      shingling pass plus two fetch joins. The production shape for
-      high-band parameterizations: at num_perm=64/bands=16 the carry
-      shape shuffles 620 MB vs 56 MB here (NOTES.md).
+    Every banded row carries its shingle array through the join, so
+    verification needs no second join and the self-join sides stay the
+    identical subtree (ReuseExchange computes signatures once). Shuffle
+    volume is ~bands x corpus shingle bytes: 146 MB at 12/3 on a 10x
+    corpus (NOTES.md, MinHash shapes under forced SMJ).
     """
     banded = _banded_signatures(df, num_perm, bands, n, text_col, id_col)
-    if fetch_shingles:
-        slim = banded.select(id_col, "band_id", "band_key")
-        a = slim.alias("a")
-        b = slim.hint("merge").alias("b")
-        cand_ids = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        # Survivor fetch: semi-join the RAW docs down to candidate
-        # members on the cheap id column, then shingle only those rows.
-        surv_ids = (
-            cand_ids.select(F.col("doc_a").alias(id_col))
-            .union(cand_ids.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        sh = with_shingles(
-            df.join(surv_ids, id_col, "leftsemi"), n, text_col, id_col
-        ).select(id_col, "shingles", "n_shingles")
-        sa = sh.alias("sa")
-        sb = sh.alias("sb")
-        cand = (
-            cand_ids.join(sa, F.col("doc_a") == F.col(f"sa.{id_col}"))
-            .join(sb, F.col("doc_b") == F.col(f"sb.{id_col}"))
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("sa.shingles").alias("sh_a"),
-                F.col("sa.n_shingles").alias("n_a"),
-                F.col("sb.shingles").alias("sh_b"),
-                F.col("sb.n_shingles").alias("n_b"),
-            )
-        )
-        return _exact_jaccard_verify(cand, threshold)
     a = banded.alias("a")
     b = banded.hint("merge").alias("b")
     cand = a.join(
@@ -595,28 +529,7 @@ def minhash_lsh_pairs_between(
         F.col("b.shingles").alias("sh_b"),
         F.col("b.n_shingles").alias("n_b"),
     )
-    # verify-before-dedup, as in minhash_lsh_pairs (_verify_then_dedup):
-    # size-ratio prefilter ROUNDED like the final filter (round is
-    # monotone, so the prefilter can never drop a pair the final filter
-    # keeps — see _verify_then_dedup), jaccard computed once inside the
-    # pair aggregation, threshold filter above the aggregate — the
-    # cross-band dedup shuffle carries slim (corpus_id, new_id, jaccard)
-    # rows
-    n_common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    jac = n_common / (F.col("n_a") + F.col("n_b") - n_common)
-    return (
-        cand.where(
-            F.round(
-                F.least(F.col("n_a"), F.col("n_b"))
-                / F.greatest(F.col("n_a"), F.col("n_b")),
-                4,
-            )
-            >= threshold
-        )
-        .groupBy("corpus_id", "new_id")
-        .agg(F.first(F.round(jac, 4)).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_then_dedup(cand, threshold, ("corpus_id", "new_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -626,53 +539,49 @@ def minhash_lsh_pairs_between(
 #: fingerprint width. 64 since round 3 (was 32): at corpus scale the band
 #: width is bits/(max_hamming+1), and 32-bit fingerprints left only 4-5
 #: bits of selectivity per band at max_hamming=6 — random collisions then
-#: dominate candidate generation. 64 bits keep every band ≥ 9 bits, the
-#: production shape. BEHAVIOR CHANGE: simhash values/pairs computed after
-#: this change differ from 32-bit fingerprints persisted before it; pass
-#: bits=32 explicitly to reproduce the old fingerprints.
+#: dominate candidate generation. 64 bits keep every band ≥ 9 bits.
 SIMHASH_BITS = 64
 
 
 def simhash_table(
     df: DataFrame,
-    bits: int = SIMHASH_BITS,
     text_col: str = "text",
     id_col: str = "doc_id",
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
-    """(id, simhash) — ``bits``-bit (≤64) SimHash over whitespace tokens.
+    """(id, simhash) — 64-bit SimHash over whitespace tokens.
     Token hash = md5 hex chars as integers (engine-portable): bits 0-31
     vote from the first 8 hex chars, bits 32-63 from the next 8; result
-    bit i is the sign of the ±1 vote sum across tokens at bit i. Bit 63,
-    when used, lands on the sign bit of the long — the fingerprint is the
+    bit i is the sign of the ±1 vote sum across tokens at bit i. Bit 63
+    lands on the sign bit of the long — the fingerprint is the
     two's-complement 64-bit value (negative when bit 63 is set), which
     xor/bit_count handle identically in Spark and ANSI engines.
 
-    Shape: explode → single groupBy with ``bits`` sum aggregates. The
+    Shape: explode → single groupBy with 64 sum aggregates. The
     partial (map-side) aggregation means the shuffle carries one row of
-    ``bits`` longs per document, not one row per token — the scalable form.
+    64 longs per document, not one row per token — the scalable form.
     """
     extra = extra_cols or []
     # md5 lands in its OWN projection alias so both 32-bit halves slice
     # the same digest — CollapseProject keeps non-cheap aliases
     # referenced twice un-inlined (the _banded_signatures precedent), so
     # md5 runs once per token instead of once per half (r13, guide §1.2)
-    tok = df.select(
-        F.col(id_col), *extra, F.explode(ws_tokens(F.col(text_col))).alias("t")
-    ).withColumn("m", F.md5("t")).withColumn(
-        "h1", F.conv(F.substring("m", 1, 8), 16, 10).cast("long")
-    )
-    if bits > 32:
-        tok = tok.withColumn(
-            "h2", F.conv(F.substring("m", 9, 8), 16, 10).cast("long")
+    tok = (
+        df.select(
+            F.col(id_col), *extra, F.explode(ws_tokens(F.col(text_col))).alias("t")
         )
+        .withColumn("m", F.md5("t"))
+        .withColumn("h1", F.conv(F.substring("m", 1, 8), 16, 10).cast("long"))
+        .withColumn("h2", F.conv(F.substring("m", 9, 8), 16, 10).cast("long"))
+    )
 
     def _bit(i: int) -> Column:
         src, off = ("h1", i) if i < 32 else ("h2", i - 32)
         return F.shiftright(F.col(src), off).bitwiseAND(F.lit(1))
 
     votes = [
-        F.sum(F.when(_bit(i) == 1, 1).otherwise(-1)).alias(f"v{i}") for i in range(bits)
+        F.sum(F.when(_bit(i) == 1, 1).otherwise(-1)).alias(f"v{i}")
+        for i in range(SIMHASH_BITS)
     ]
     voted = tok.groupBy(id_col, *extra).agg(*votes)
     # bit 63 is the long's sign bit: adding -(2^63) for it (instead of an
@@ -683,29 +592,29 @@ def simhash_table(
                 F.col(f"v{i}") > 0,
                 F.lit(-(1 << 63) if i == 63 else (1 << i)).cast("long"),
             ).otherwise(F.lit(0).cast("long"))
-            for i in range(bits)
+            for i in range(SIMHASH_BITS)
         ],
         start=F.lit(0).cast("long"),
     )
     return voted.select(id_col, *extra, sh.alias("sh"))
 
 
-def simhash_band_values(sh: Column, bits: int = SIMHASH_BITS, bands: int = 4) -> Column:
+def simhash_band_values(sh: Column, bands: int = 4) -> Column:
     """Array of ``bands`` disjoint bit-range values of the simhash.
 
-    Pigeonhole banding for exact Hamming search: split the ``bits``-bit
+    Pigeonhole banding for exact Hamming search: split the 64-bit
     fingerprint into ``bands`` disjoint ranges (widths as equal as
     possible). If hamming(a, b) ≤ bands-1 then at least one band holds
     zero differing bits, i.e. the pair collides on some (band_id,
     band_value) — candidate recall is exactly 1.0, unlike MinHash bands.
     """
-    base, rem = divmod(bits, bands)
+    base, rem = divmod(SIMHASH_BITS, bands)
     out, start = [], 0
     for j in range(bands):
         width = base + (1 if j < rem else 0)
         shifted = F.shiftright(sh, start)
         if width >= 64:
-            # full-width band (bands=1, bits=64): the mask 2^64-1 is not a
+            # full-width band (bands=1): the mask 2^64-1 is not a
             # representable long literal, and no masking is needed
             out.append(shifted.cast("long"))
         else:
@@ -721,7 +630,6 @@ def simhash_pairs(
     block_col: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -733,19 +641,16 @@ def simhash_pairs(
     verified with ``bit_count(xor)`` and deduped across bands.
 
     An optional ``block_col`` further restricts candidates (conjunctive).
-    Scale note: the 64-bit default keeps every band ≥ 9 bits of
-    selectivity at max_hamming=6 — the 100 TB shape. 32-bit fingerprints
-    (bits=32, the pre-round-3 default) leave only 4-5 bits per band, so
-    random collisions dominate candidate generation at corpus scale; pass
-    bits=32 only to reproduce previously persisted fingerprints."""
+    Scale note: 64-bit fingerprints keep every band ≥ 9 bits of
+    selectivity at max_hamming=6 — the 100 TB shape."""
     bands = max_hamming + 1
     extra = [block_col] if block_col else []
-    sh = simhash_table(df, bits=bits, text_col=text_col, id_col=id_col, extra_cols=extra)
+    sh = simhash_table(df, text_col=text_col, id_col=id_col, extra_cols=extra)
     banded = sh.select(
         id_col,
         *extra,
         "sh",
-        F.posexplode(simhash_band_values(F.col("sh"), bits, bands)).alias(
+        F.posexplode(simhash_band_values(F.col("sh"), bands)).alias(
             "band_id", "band_value"
         ),
     )

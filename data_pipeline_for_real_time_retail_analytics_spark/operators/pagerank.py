@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["symmetric_edges", "pagerank_fixed", "pagerank_weighted_fixed"]
@@ -85,54 +85,49 @@ def symmetric_edges(
     return out if canonical else out.distinct()
 
 
-def pagerank_fixed(
-    edges: DataFrame,
-    iterations: int = 3,
-    materialize: bool = True,
-    broadcast_contrib: bool = False,
+def _pagerank(
+    edges: DataFrame, iterations: int, out_mass: Column, contrib: Column
 ) -> DataFrame:
-    """(node, rank_units) after ``iterations`` exact-integer PageRank
-    steps over ``edges`` (src, dst). Nodes = every id appearing as src
-    or dst; initial rank SCALE units each.
+    """The iteration body both PageRank forms share: (node, rank_units)
+    after ``iterations`` exact-integer steps over ``edges`` (src, dst,
+    ...). ``out_mass`` is the per-src aggregate (aliased) each node's
+    mass splits by; ``contrib`` is the per-edge contribution, over
+    ``rank_units``, the edge columns and that alias. Nodes = every id
+    appearing as src or dst; initial rank SCALE units each.
 
-    p'(u) = (15·SCALE) DIV 100  +  (85 · Σ_{v→u} (p(v) DIV outdeg(v))) DIV 100
+    The edges are checkpointed FIRST — hash-partitioned on src, the key
+    of every iteration's join, so no iteration re-shuffles the edge
+    table (localCheckpoint preserves the repartition's output
+    partitioning) — and nodes/out-mass are derived from the checkpointed
+    frame: deriving them from the raw lineage first made each of the
+    three materializations re-execute the whole upstream mining subtree
+    (3× the pair-mining cost per cell — measured on
+    part_pagerank_weighted, whose edges come straight from lineitem).
 
-    ``broadcast_contrib=True`` broadcasts each iteration's aggregated
-    contribution frame into the rank-update left join (guide §3.1):
-    contrib is node-grain — strictly no larger than the node set — so
-    the join needs no exchange or sort on EITHER side (nodes is
-    checkpointed once and reread), killing the one SortMergeJoin + two
-    Exchanges per iteration the plan otherwise keeps. Right whenever
-    the node set fits an executor: the registered co-purchase graphs
-    are part-CATALOG-grain, dimension-sized next to lineitem. Leave
-    False for web-scale graphs whose node set outgrows memory — the
-    shuffle join is the only shape that survives there.
+    Each iteration's aggregated contribution frame is broadcast into the
+    rank-update left join (guide §3.1): it is node-grain — strictly no
+    larger than the node set — so the join needs no exchange or sort on
+    either side (nodes is checkpointed once and reread). The registered
+    graphs are part-CATALOG-grain, dimension-sized next to lineitem. At
+    4 cores the shuffle join ran one or two more jobs per query and no
+    faster (NOTES.md). A web-scale node set that outgrows executor
+    memory needs the shuffle join back.
     """
-    # checkpoint the EDGES first — hash-partitioned on src, the key of
-    # every iteration's join, so no iteration re-shuffles the edge
-    # table (localCheckpoint preserves the repartition's output
-    # partitioning) — then derive nodes/outdeg from the checkpointed
-    # frame: deriving them from the raw lineage first made each of the
-    # three materializations re-execute the whole upstream mining
-    # subtree (3× the pair-mining cost per cell — measured on
-    # part_pagerank_weighted, whose edges come straight from lineitem)
-    if materialize:
-        edges = edges.repartition("src").localCheckpoint()
+    edges = edges.repartition("src").localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    if materialize:
-        # nodes and outdeg both read the checkpointed edges and are
-        # independent of each other — overlap the two eager jobs (§2.6)
-        nodes, outdeg = _materialize_pair(nodes, outdeg)
+    out = edges.groupBy("src").agg(out_mass)
+    # nodes and out-mass both read the checkpointed edges and are
+    # independent of each other — overlap the two eager jobs (§2.6)
+    nodes, out = _materialize_pair(nodes, out)
 
     # the restart term is a compile-time integer: (15·SCALE) DIV 100
     base_units = (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN
     rank = nodes.select("node", F.lit(SCALE).cast("long").alias("rank_units"))
-    # NO per-iteration checkpoint (r13): with edges/nodes/outdeg
+    # NO per-iteration checkpoint (r13): with edges/nodes/out-mass
     # materialized, the unrolled chain is LINEAR — each rank_i is
     # referenced exactly once, by rank_{i+1} — so the single final
     # action executes every iteration exactly once and a per-iteration
@@ -143,19 +138,14 @@ def pagerank_fixed(
     # bound plan depth; at the registry's 3 iterations the chain is
     # shallow.
     for _ in range(iterations):
-        contrib = (
+        inbound = (
             edges.join(rank.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_units DIV outdeg").alias("c"),
-            )
+            .join(out, "src")
+            .select(F.col("dst").alias("node"), contrib.alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("inbound"))
         )
-        if broadcast_contrib:
-            contrib = F.broadcast(contrib)
-        rank = nodes.join(contrib, "node", "left").select(
+        rank = nodes.join(F.broadcast(inbound), "node", "left").select(
             "node",
             (
                 F.lit(base_units).cast("long")
@@ -169,12 +159,23 @@ def pagerank_fixed(
     return rank
 
 
+def pagerank_fixed(edges: DataFrame, iterations: int = 3) -> DataFrame:
+    """(node, rank_units) after ``iterations`` exact-integer PageRank
+    steps over ``edges`` (src, dst). Nodes = every id appearing as src
+    or dst; initial rank SCALE units each.
+
+    p'(u) = (15·SCALE) DIV 100  +  (85 · Σ_{v→u} (p(v) DIV outdeg(v))) DIV 100
+    """
+    return _pagerank(
+        edges,
+        iterations,
+        F.count(F.lit(1)).alias("outdeg"),
+        F.expr("rank_units DIV outdeg"),
+    )
+
+
 def pagerank_weighted_fixed(
-    edges: DataFrame,
-    iterations: int = 3,
-    weight_col: str = "w",
-    materialize: bool = True,
-    broadcast_contrib: bool = False,
+    edges: DataFrame, iterations: int = 3, weight_col: str = "w"
 ) -> DataFrame:
     """Weighted PageRank: like ``pagerank_fixed`` but each edge carries
     an integer weight and a node's mass splits PROPORTIONALLY to its
@@ -195,59 +196,14 @@ def pagerank_weighted_fixed(
     whose intermediates are bounded by ``w·W`` — edge-local magnitudes,
     never rank-mass-sized. DuckDB verifies the identity from the other
     side by computing the plain product in HUGEINT.
-
-    Same per-iteration shape and lineage discipline as the unweighted
-    form: one edge-join shuffle, partial-aggregated on dst, inputs
-    materialized once, no per-iteration barrier.
     """
-    w = F.col(weight_col)
-    # same ordering discipline as pagerank_fixed: edges checkpoint
-    # FIRST (src-partitioned — every iteration joins on src) so the
-    # nodes/out-weight materializations read it instead of re-executing
-    # the mining lineage
-    if materialize:
-        edges = edges.repartition("src").localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    return _pagerank(
+        edges,
+        iterations,
+        F.sum(F.col(weight_col)).cast("long").alias("outw"),
+        # floor(p·w / W) via the bounded-intermediate identity
+        F.expr(
+            f"(rank_units DIV outw) * {weight_col}"
+            f" + ((rank_units % outw) * {weight_col}) DIV outw"
+        ),
     )
-    outw = edges.groupBy("src").agg(F.sum(w).cast("long").alias("outw"))
-    if materialize:
-        # independent frames over the checkpointed edges — overlap (§2.6)
-        nodes, outw = _materialize_pair(nodes, outw)
-
-    base_units = (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN
-    rank = nodes.select("node", F.lit(SCALE).cast("long").alias("rank_units"))
-    for _ in range(iterations):
-        contrib = (
-            edges.join(rank.withColumnRenamed("node", "src"), "src")
-            .join(outw, "src")
-            .select(
-                F.col("dst").alias("node"),
-                # floor(p·w / W) via the bounded-intermediate identity
-                F.expr(
-                    f"(rank_units DIV outw) * {weight_col}"
-                    f" + ((rank_units % outw) * {weight_col}) DIV outw"
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inbound"))
-        )
-        if broadcast_contrib:
-            # node-grain contrib broadcast — see pagerank_fixed
-            contrib = F.broadcast(contrib)
-        rank = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(base_units).cast("long")
-                + F.expr(
-                    f"({DAMP_NUM} * coalesce(inbound, 0L)) DIV {DAMP_DEN}"
-                )
-            )
-            .cast("long")
-            .alias("rank_units"),
-        )
-        # no per-iteration checkpoint — see pagerank_fixed (linear
-        # chain, one action, 3 shallow iterations)
-    return rank

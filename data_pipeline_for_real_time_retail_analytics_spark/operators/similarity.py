@@ -62,6 +62,25 @@ def _norm_of(vec_col: str, norm_col: str | None) -> Column:
     return F.col(norm_col) if norm_col else l2_norm(F.col(vec_col))
 
 
+def _topk(sim: DataFrame, k: int, *carry: str) -> DataFrame:
+    """The ``k`` best matches per ``query_id`` from (query_id, match_id,
+    *carry, sim) rows: ranked by sim descending, ties to the lower
+    match_id, with the sim rounded to 6 places as ``cosine_sim`` — the
+    shared tail of every top-k search here."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
+    return (
+        sim.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "match_id",
+            *carry,
+            F.round("sim", 6).alias("cosine_sim"),
+            "rank",
+        )
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -99,12 +118,7 @@ def cosine_topk(
             (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _topk(sim, k)
 
 
 def sign_lsh_bucket(vec: Column, n_bits: int = 8, offset: int = 0) -> Column:
@@ -159,12 +173,7 @@ def ann_topk_sign_lsh(
             (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", "bucket", F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _topk(sim, k, "bucket")
 
 
 def ann_topk_sign_lsh_multiprobe(
@@ -208,12 +217,7 @@ def ann_topk_sign_lsh_multiprobe(
             (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _topk(sim, k)
 
 
 def ann_topk_sign_lsh_multitable(
@@ -300,12 +304,7 @@ def ann_topk_sign_lsh_multitable(
         .groupBy("query_id", "match_id")
         .agg(F.first("sim").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _topk(sim, k)
 
 
 def ivf_centroids(
@@ -462,12 +461,7 @@ def ann_topk_ivf(
         # a vector probed via 2 cells can pair with the same match twice
         .dropDuplicates(["query_id", "match_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _topk(sim, k)
 
 
 def embedding_near_dup_pairs(

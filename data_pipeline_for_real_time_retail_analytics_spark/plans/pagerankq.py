@@ -38,13 +38,11 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 parts by 3-iteration integer PageRank. The contribution
-    frame is broadcast into each rank update (r14, guide §3.1): the
-    node set is the part CATALOG — dimension-grain next to lineitem —
-    so the per-iteration SortMergeJoin + its two exchanges vanish."""
-    ranks = pagerank_fixed(
-        copurchase_edges(spark, sf_dir), ITERATIONS, broadcast_contrib=True
-    )
+    """Top-20 parts by 3-iteration integer PageRank. The operator
+    broadcasts each iteration's contribution frame into the rank update:
+    the node set is the part CATALOG — dimension-grain next to lineitem
+    — so the rank update needs no SortMergeJoin or exchange."""
+    ranks = pagerank_fixed(copurchase_edges(spark, sf_dir), ITERATIONS)
     w = Window.orderBy(F.desc("rank_units"), F.col("node"))
     return (
         ranks.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -119,11 +119,7 @@ def weighted_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_part_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 parts by 3-iteration quantity-weighted integer PageRank."""
     ranks = pagerank_weighted_fixed(
-        weighted_copurchase_edges(spark, sf_dir),
-        ITERATIONS,
-        # part-catalog-grain node set: broadcast the per-iteration
-        # contribution frame (r14, guide §3.1 — see pagerankq)
-        broadcast_contrib=True,
+        weighted_copurchase_edges(spark, sf_dir), ITERATIONS
     )
     w = Window.orderBy(F.desc("rank_units"), F.col("node"))
     return (

@@ -201,49 +201,36 @@ def interval_join(
 def validated_foreach_batch(
     validate_fn: Callable[[DataFrame], DataFrame],
     out_path: str,
-    min_rows_to_process: int = 0,
     stats: list[dict] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: per micro-batch, apply a validation filter and
     append surviving rows to the staging sink — the streaming version of
     the reference's detect → validate → fail-or-filter → load operator
-    (src/orchestration/operators.py:36-136). Batches below the threshold
-    are skipped (reference's skip-if-no-changes, operators.py:74-80).
-    Parquet appends keyed by batch epoch give idempotent-at-least-once.
+    (src/orchestration/operators.py:36-136). Delivery is at-least-once:
+    the append is not keyed by the batch epoch, so a batch replayed
+    after a crash before its checkpoint commit is appended again.
 
     Pass a list as ``stats`` to collect per-batch extraction statistics
     (the reference's E4 surface): ``{"epoch", "rows_in", "rows_valid"}``
     appended per processed batch. The counts ride the WRITE pass via
-    ``Observation`` — zero extra jobs, unlike a count() per metric —
-    except when ``min_rows_to_process`` forces a pre-write count for the
-    skip gate (that count is then reused as rows_in)."""
+    ``Observation`` — zero extra jobs, unlike a count() per metric."""
 
     def _body(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Observation
 
-        pre_count: int | None = None
-        if min_rows_to_process:
-            pre_count = batch_df.count()
-            if pre_count < min_rows_to_process:
-                return
         if stats is None:
             validate_fn(batch_df).write.mode("append").parquet(out_path)
             return
-        obs_in = None
-        observed = batch_df
-        if pre_count is None:
-            obs_in = Observation(f"ingest_in_{epoch_id}")
-            observed = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows"))
+        obs_in = Observation(f"ingest_in_{epoch_id}")
         obs_out = Observation(f"ingest_out_{epoch_id}")
-        good = validate_fn(observed).observe(
-            obs_out, F.count(F.lit(1)).alias("rows")
-        )
+        good = validate_fn(
+            batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows"))
+        ).observe(obs_out, F.count(F.lit(1)).alias("rows"))
         good.write.mode("append").parquet(out_path)
         stats.append(
             {
                 "epoch": epoch_id,
-                "rows_in": pre_count if pre_count is not None
-                else obs_in.get["rows"],
+                "rows_in": obs_in.get["rows"],
                 "rows_valid": obs_out.get["rows"],
             }
         )

@@ -131,101 +131,3 @@ def running_totals_stream(
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-
-def lifetime_totals_tws(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str = "value",
-    state_ttl_minutes: float | None = None,
-) -> DataFrame:
-    """Per-key lifetime (count, sum) via ``transformWithStateInPandas`` —
-    the Spark-4 successor to ``applyInPandasWithState`` with NAMED,
-    individually-TTL'd state variables instead of one opaque tuple.
-    Functionally the twin of ``running_totals_stream``; kept alongside
-    it so both stateful APIs stay exercised. Differences that matter at
-    scale: state variables are typed and queryable by name (the state
-    data source can read them offline), per-variable TTL replaces
-    hand-rolled timeout bookkeeping, and the operator REQUIRES the
-    RocksDB state-store provider (the scale-grade store; the default
-    HDFS-backed provider keeps every key on-heap).
-
-    ``state_ttl_minutes`` drops a key's totals after that long without
-    updates (processing-time TTL) — bounded state for unbounded key
-    spaces.
-
-    ENVIRONMENT GATE: the transformWithState Python worker speaks a
-    protobuf protocol to the JVM state server; without the
-    ``protobuf`` package the worker crashes opaquely at query start
-    ("driver worker exited unexpectedly"), so this raises an
-    actionable error up front. This build container has no protobuf
-    and forbids installation — the operator is plumbing-complete and
-    the test suite skips it with that reason
-    (tests/test_stateful.py::test_lifetime_totals_transformwithstate);
-    ``running_totals_stream`` is the executable twin.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise EnvironmentError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(its Python worker speaks protobuf to the JVM state "
-            "server); install protobuf or use running_totals_stream, "
-            "the applyInPandasWithState twin"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            *[df.schema[c] for c in key_cols],
-            T.StructField("lifetime_events", T.LongType()),
-            T.StructField("lifetime_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-    if state_ttl_minutes is not None and state_ttl_minutes <= 0:
-        raise ValueError("state_ttl_minutes must be positive when given")
-    ttl_ms = (
-        int(state_ttl_minutes * 60_000) if state_ttl_minutes is not None else None
-    )
-
-    class _TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema, ttl_ms)
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._totals.get()
-            n, total = prev if prev is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                [[*key, n, round(total, 2)]],
-                columns=[*key_cols, "lifetime_events", "lifetime_value"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    # state TTL is only legal under processing-time semantics — Spark
-    # raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL if a
-    # TTL'd state variable is created in TimeMode.None
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_TotalsProcessor(),
-        outputStructType=out_schema,
-        outputMode="update",
-        timeMode="processingTime" if ttl_ms is not None else "None",
-    )

@@ -176,22 +176,6 @@ def test_minhash_lsh_finds_planted_dups(spark, docs):
     assert got[(0, 4)] == 1.0  # identical docs always collide in every band
 
 
-def test_minhash_fetch_shingles_shape_identical_output(spark, docs):
-    """The candidates-then-fetch shuffle shape (fetch_shingles=True,
-    the production shape for high-band parameterizations — 620 MB vs
-    56 MB shuffle at num_perm=64/bands=16, recorded in NOTES.md)
-    must produce exactly the carry shape's pair set and jaccards."""
-    carry = sorted(map(tuple, minhash_lsh_pairs(docs, threshold=0.1).collect()))
-    fetch = sorted(
-        map(
-            tuple,
-            minhash_lsh_pairs(docs, threshold=0.1, fetch_shingles=True).collect(),
-        )
-    )
-    assert carry == fetch
-    assert carry  # non-vacuous: the fixture plants dup pairs
-
-
 def test_verify_then_dedup_rounding_boundary(spark):
     """The size-ratio prefilter must be conservative w.r.t. the
     HALF_UP-rounded final filter (r14 fix): a pair with true jaccard
@@ -266,13 +250,6 @@ def test_simhash_identical_docs_distance_zero(spark, docs):
     assert -(2**63) <= sh[0] < 2**63
     pairs = simhash_pairs(docs, max_hamming=0, block_col=None)
     assert (0, 4) in {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-
-
-def test_simhash_32bit_compat_path(spark, docs):
-    """bits=32 reproduces pre-round-3 fingerprints: non-negative, < 2^32."""
-    sh = {r["doc_id"]: r["sh"] for r in simhash_table(docs, bits=32).collect()}
-    assert sh[0] == sh[4]
-    assert all(0 <= v < 2**32 for v in sh.values())
 
 
 def test_plant_near_dups_is_deterministic(spark, docs):

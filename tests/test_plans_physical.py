@@ -165,19 +165,18 @@ def test_minhash_band_join_pinned_to_sort_merge(spark, sf_dir):
     simhash precedent): left to AQE, a broadcast choice serializes the
     banded build side through the driver AND defeats ReuseExchange on
     the identical self-join subtree (signatures computed twice) —
-    measured 2.7x wall at 10x input (NOTES.md). Both shuffle shapes must keep the pin."""
+    measured 2.7x wall at 10x input (NOTES.md)."""
     from data_pipeline_for_real_time_retail_analytics_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    for kwargs in ({}, {"fetch_shingles": True}):
-        df = minhash_lsh_pairs(docs, **kwargs)
-        plan = _final_plan(df)
-        assert "SortMergeJoin" in plan, f"band join lost its SMJ pin {kwargs}"
-        assert "CartesianProduct" not in plan
-        logical = df._jdf.queryExecution().analyzed().toString()
-        assert "merge" in logical.lower(), f"merge hint dropped {kwargs}"
+    df = minhash_lsh_pairs(docs)
+    plan = _final_plan(df)
+    assert "SortMergeJoin" in plan, "band join lost its SMJ pin"
+    assert "CartesianProduct" not in plan
+    logical = df._jdf.queryExecution().analyzed().toString()
+    assert "merge" in logical.lower(), "merge hint dropped"
 
 
 def test_text_filters_are_shuffle_free(spark, sf_dir):
@@ -359,3 +358,38 @@ def test_event_funnel_is_one_shuffle_on_user_id(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning(user_id") == 1
     assert plan.count("Exchange ") == 2  # + Exchange SinglePartition
     assert plan.count("Window [") == 3
+
+
+def test_pagerank_rank_updates_are_broadcast_joins(spark, sf_dir):
+    """Each PageRank iteration broadcasts its node-grain contribution
+    frame into the rank update (the node set is the part catalog), so
+    every join on ``node`` is a BroadcastHashJoin and none sort-merges.
+    Automatic broadcasting is off while the plans are built, so only the
+    operator's own hint can produce those broadcasts."""
+    import re
+
+    from data_pipeline_for_real_time_retail_analytics_spark.plans import (
+        pagerankq,
+        wpagerankq,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plans = {
+            q.__name__: _plan(q(spark, sf_dir))
+            for q in (
+                pagerankq.q_part_pagerank,
+                wpagerankq.q_part_pagerank_weighted,
+            )
+        }
+    finally:
+        spark.conf.set(key, prev)
+    for name, plan in plans.items():
+        node_joins = re.findall(r"(\w+Join) \[node#\d+L?\], \[node#", plan)
+        assert node_joins == ["BroadcastHashJoin"] * pagerankq.ITERATIONS, (
+            name,
+            node_joins,
+        )
+        assert "SortMergeJoin [node#" not in plan, name

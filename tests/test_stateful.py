@@ -213,51 +213,3 @@ def test_merge_sink_recovers_from_crash_between_renames(spark, tmp_path_factory)
     recover_swap(target)
     assert not os.path.exists(f"{target}__old_9")
     assert {r["k"] for r in spark.read.parquet(target).collect()} == {1, 2, 3}
-
-
-def test_lifetime_totals_transformwithstate(spark, stateful_src, tmp_path_factory):
-    """transformWithStateInPandas twin (Spark-4 arbitrary-state API,
-    named state variables, RocksDB provider required): same lifetime
-    totals as the applyInPandasWithState operator. Skips with the
-    documented reason where the protobuf package is absent (this
-    container): the operator's environment gate must raise the
-    actionable error rather than the opaque worker crash."""
-    from data_pipeline_for_real_time_retail_analytics_spark.streaming.stateful import (
-        lifetime_totals_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        stream = file_stream(spark, stateful_src, schema=EVENTS_SCHEMA)
-        with pytest.raises(EnvironmentError, match="protobuf"):
-            lifetime_totals_tws(stream, ["user_id"])
-        pytest.skip("protobuf absent: transformWithState worker cannot run "
-                    "in this container (gate verified)")
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = file_stream(spark, stateful_src, schema=EVENTS_SCHEMA)
-        totals = lifetime_totals_tws(stream, ["user_id"])
-        q = run_available_now(
-            totals, _ckpt(tmp_path_factory), queryName="tws_totals_out",
-            output_mode="update",
-        )
-        got = {
-            r["user_id"]: (r["lifetime_events"], r["lifetime_value"])
-            for r in spark.sql("SELECT * FROM tws_totals_out").collect()
-        }
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    assert got[1] == (6, 85.0)
-    assert got[2] == (1, 1.0)

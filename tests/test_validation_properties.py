@@ -111,8 +111,9 @@ def test_split_assignment_is_pure_function_of_id(spark, ids):
 
 @st.composite
 def fingerprint_sets(draw):
-    """(bits, unsigned fingerprints) at 32 or 64 bits — 64 covers the
-    sign-bit regime where the long is negative (two's complement)."""
+    """(bits, unsigned fingerprints) drawn below 2^32 or 2^64 — 64
+    covers the sign-bit regime where the long is negative (two's
+    complement), 32 leaves the upper bands all zero."""
     bits = draw(st.sampled_from([32, 64]))
     fps = draw(st.lists(
         st.integers(min_value=0, max_value=2**bits - 1),
@@ -125,7 +126,7 @@ def fingerprint_sets(draw):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_simhash_banding_equals_all_pairs(spark, bf, max_hamming):
-    """For arbitrary 32/64-bit fingerprints, the banded equi-join candidate
+    """For arbitrary 64-bit fingerprints, the banded equi-join candidate
     path must return EXACTLY the all-pairs Hamming-<=k answer (pigeonhole
     guarantee) — the property that makes the operator correct at scale."""
     from pyspark.sql import functions as F
@@ -134,7 +135,7 @@ def test_simhash_banding_equals_all_pairs(spark, bf, max_hamming):
         simhash_band_values,
     )
 
-    bits, fps = bf
+    _, fps = bf
     signed = [u - (1 << 64) if u >= (1 << 63) else u for u in fps]
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(signed)], "doc_id long, sh long"
@@ -142,7 +143,7 @@ def test_simhash_banding_equals_all_pairs(spark, bf, max_hamming):
     bands = max_hamming + 1
     banded = df.select(
         "doc_id", "sh",
-        F.posexplode(simhash_band_values(F.col("sh"), bits, bands)).alias(
+        F.posexplode(simhash_band_values(F.col("sh"), bands)).alias(
             "band_id", "band_value"),
     )
     a, b = banded.alias("a"), banded.alias("b")
