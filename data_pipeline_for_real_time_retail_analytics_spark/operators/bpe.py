@@ -286,8 +286,7 @@ def bpe_segment_vocab(
     re-evaluated). Long-lived drivers segmenting in a loop should
     build ONE segmented frame per vocabulary and reuse it rather than
     re-calling this per batch; `spark.cleaner.periodicGC.interval`
-    (bench.py sets 45s) reclaims broadcasts whose Python handle has
-    been garbage-collected.
+    reclaims broadcasts whose Python handle has been garbage-collected.
 
     Tokenization matches ``ws_tokens`` EXACTLY, including on non-ASCII
     whitespace: the UDF splits with Java's ``\\s`` class

@@ -278,7 +278,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document (smoothed idf:
     ``ln((N+1)/(df+1)) + 1``; score = raw term count × idf; ties broken
@@ -289,9 +288,8 @@ def tfidf_top_terms(
     one window shuffle on doc id; the doc-frequency side is a distinct
     per-term aggregate (bounded by vocabulary, not corpus size), so the
     join is skew-safe and AQE broadcast-eligible at any corpus scale.
-    ``N`` comes from ``n_docs`` when the caller already knows it (a
-    pipeline's corpus-stats pass — see plans/llm.py); otherwise a single
-    scalar count action, O(1) result, no collect of data rows.
+    ``N`` is a scalar subquery over ``df``, so the count runs inside the
+    plan's execution and building the plan starts no job.
     """
     tok = df.select(
         F.col(id_col), F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("term")
@@ -302,9 +300,8 @@ def tfidf_top_terms(
     # corpus and no distinct shuffle (both existed here before r5; the
     # values are identical by construction)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if n_docs is None:
-        n_docs = df.count()
-    idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + F.lit(1.0))) + F.lit(1.0)
+    n_docs = df.select(F.count(F.lit(1))).scalar()
+    idf = F.log((n_docs + 1).cast("double") / (F.col("df") + F.lit(1.0))) + F.lit(1.0)
     scored = tf.join(dfreq, "term").select(
         F.col(id_col),
         "term",

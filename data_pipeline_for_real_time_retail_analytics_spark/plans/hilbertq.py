@@ -33,23 +33,12 @@ from pyspark.sql import functions as F
 
 from ..operators.hilbert import hilbert_steps, with_hilbert_value
 from ..operators.zorder import _interleave
-from ..sources import load_table
+from .zorderq import _interleave_sql, _orders_grid
 
 #: per-dimension resolution — matches the registered z-order family
 H_BITS = 8
 #: locality walk: partition each curve into 2^BLOCK_BITS contiguous blocks
 BLOCK_BITS = 4
-
-
-def _orders_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(o_orderkey, o_custkey, o_day) — the zorderq grid convention."""
-    return load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("o_day"),
-    )
 
 
 def q_hilbert_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,15 +167,6 @@ def _hilbert_ctes(bits: int, first: str) -> str:
         )
         prev = f"it{i}"
     return ",\n        ".join(ctes)
-
-
-def _interleave_sql(scaled: list[str], bits: int) -> str:
-    ncols = len(scaled)
-    return " + ".join(
-        f"((({name} >> {i}) & 1) << {i * ncols + (ncols - 1 - j)})"
-        for i in range(bits)
-        for j, name in enumerate(scaled)
-    )
 
 
 _SCALED_SQL = f"""base AS (

@@ -63,8 +63,6 @@ from .corpusbase import (  # noqa: F401  (re-exports)
     PLANT_EVERY_VECS,
     _docs,
     _embs,
-    clear_caches,
-    corpus_n_docs,
     planted_minhash_pairs,
 )
 
@@ -221,11 +219,8 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smoothed idf, corpus-level doc
-    frequencies; N from the shared corpus-stats pass — no per-call count
-    job)."""
-    return tfidf_top_terms(
-        _docs(spark, sf_dir), n_docs=corpus_n_docs(spark, sf_dir)
-    ).orderBy("doc_id", "rank")
+    frequencies; N is a scalar subquery of the plan)."""
+    return tfidf_top_terms(_docs(spark, sf_dir)).orderBy("doc_id", "rank")
 
 
 def q_chunked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,46 +15,18 @@ small-file directory on disk to rewrite.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.maintenance import compact_parquet, runtime_bloom_filters
 from ..sources import load_table
+from .shared import work_dir
 
 #: the selective fetch predicate for the Bloom demo
 BLOOM_LABEL = 3
 #: compaction demo: scatter width (small-file problem) → target files
 SCATTER_FILES = 32
 COMPACT_FILES = 4
-
-#: staging dirs created by this process (each registered for atexit rm)
-_WORK_DIRS: set[str] = set()
-
-
-def _work_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Deterministic staging path per (application, sf_dir): re-drives of
-    the same query overwrite instead of stacking a fresh mkdtemp per call
-    (the r4 streamq /tmp-leak lesson — bench + correctness runs invoke
-    each query repeatedly in one process). The applicationId in the key
-    isolates concurrent driver processes from racing on one directory;
-    the atexit hook below removes this process's dirs so repeated runs
-    on a long-lived host don't accumulate per-application staging."""
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}|{sf_dir}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{key}")
-    os.makedirs(path, exist_ok=True)
-    if path not in _WORK_DIRS:
-        _WORK_DIRS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
 
 def q_bloom_pruned_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fetch the document rows whose embedding carries BLOOM_LABEL —
@@ -74,7 +46,7 @@ def q_bloom_pruned_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ordering, so sorting here would only add a wasted global sort
     # (range-partition sampling + extra shuffle) to the materialization
     fetch = docs.join(ids, "doc_id").select("doc_id", "source", "lang", "n_chars")
-    out = _work_dir(spark, sf_dir, "bloom_fetch")
+    out = work_dir(spark, sf_dir, "bloom_fetch")
     with runtime_bloom_filters(spark):
         fetch.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).orderBy("doc_id")
@@ -91,8 +63,8 @@ def q_compacted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "n_chars"
     )
-    scattered = _work_dir(spark, sf_dir, "compact_src")
-    compacted = _work_dir(spark, sf_dir, "compact_dest")
+    scattered = work_dir(spark, sf_dir, "compact_src")
+    compacted = work_dir(spark, sf_dir, "compact_dest")
     # hash-scatter (NOT range) — deliberately the worst layout: every
     # file holds rows from every source, nothing prunes
     docs.repartition(SCATTER_FILES, "doc_id").write.mode("overwrite").parquet(

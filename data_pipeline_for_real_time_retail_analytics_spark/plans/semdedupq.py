@@ -11,8 +11,6 @@ names both sides, BIGINT counts, ROUND(x, 6) doubles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.hierassign import assign_two_level, two_level_codebook
@@ -25,6 +23,7 @@ from ..operators.semdedup import (
 from ..operators.similarity import ivf_centroids
 from .corpusbase import _embs
 from .llm_oracles import _cosine
+from .shared import shared
 
 #: codebook size — same as the proven embedding_clusters query
 N_CLUSTERS = 16
@@ -37,52 +36,29 @@ N_CLUSTERS = 16
 #: algorithm, dependent.
 THRESHOLD = 0.35
 
-#: (applicationId, abspath(sf_dir), flavor) -> localCheckpoint'd member
-#: relation ("flat" = broadcast-argmax assignment, "2level" = the
-#: coarse→fine router). The assignment subtree feeds three consumers
-#: per query (self-join sides + survivor output) and Catalyst
-#: duplicates self-join subtrees, so one materialization per flavor
-#: shared across the family is the right shape — same pattern as the
-#: MinHash pair cache in plans/llm.py.
-_MEMBER: dict[tuple[str, str, str], DataFrame] = {}
 
+def _member(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """localCheckpoint'd member relation of the flat (broadcast-argmax)
+    assignment, once per (application, sf_dir). The assignment subtree
+    feeds three consumers per query (self-join sides + survivor output)
+    and Catalyst duplicates self-join subtrees, so one materialization
+    shared across the family is the right shape."""
 
-def clear_caches() -> None:
-    """Drop the per-application member-assignment cache (r14, VERDICT
-    r13 defect #1): bench.py clears this OUTSIDE every timed window so
-    the 2nd+ semdedup-family cells pay their own assignment
-    materialization instead of timing a cache hit — the same
-    per-cell-full-cost contract as plans/corpusbase.clear_caches."""
-    _MEMBER.clear()
-
-
-def _member(spark: SparkSession, sf_dir: str, flavor: str = "flat") -> DataFrame:
-    # abspath key: a relative and an absolute spelling of the same dir
-    # must share one materialization (same convention as plans/llm.py)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), flavor)
-    m = _MEMBER.get(key)
-    if m is None:
+    def build() -> DataFrame:
         embs = _embs(spark, sf_dir)
         cents = ivf_centroids(embs, n_cells=N_CLUSTERS)
-        if flavor == "flat":
-            m = semdedup_member(embs, cents)
-        else:
-            cb = two_level_codebook(cents, n_coarse=N_COARSE)
-            m = semdedup_member_from_assignment(
-                assign_two_level(embs, cb), embs
-            )
-        m = m.localCheckpoint()
-        _MEMBER[key] = m
-    return m
+        return semdedup_member(embs, cents).localCheckpoint()
+
+    return shared(spark, sf_dir, "semdedup_member", build)
 
 
 def _n_salts(spark: SparkSession) -> int:
     """Salt count for the prune's cluster self-join (r13, guide §2.5):
     the demo codebook is a FIXED 16 clusters, so on a P-core cluster
     the join fills at most 16 tasks; ceil(P / k) salts restore full
-    parallelism. Derived from the session, not hard-coded, so the
-    bench's lower-core drives and a production cluster each get the
-    right value (S=1 whenever k >= P — no replication cost)."""
+    parallelism. Derived from the session, not hard-coded, so a
+    4-core session and a production cluster each get the right value
+    (S=1 whenever k >= P — no replication cost)."""
     par = spark.sparkContext.defaultParallelism
     return max(1, -(-par // N_CLUSTERS))
 
@@ -127,9 +103,19 @@ def q_semantic_dedup_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment's member relation — cluster routing at n·(k₁+k/k₁) cost
     feeding the same bounded within-cluster prune. Proves the two
     operators' shared member contract end to end under the oracle."""
+
+    def build() -> DataFrame:
+        embs = _embs(spark, sf_dir)
+        cb = two_level_codebook(
+            ivf_centroids(embs, n_cells=N_CLUSTERS), n_coarse=N_COARSE
+        )
+        return semdedup_member_from_assignment(
+            assign_two_level(embs, cb), embs
+        ).localCheckpoint()
+
     return semdedup_prune(
         threshold=THRESHOLD,
-        member=_member(spark, sf_dir, flavor="2level"),
+        member=shared(spark, sf_dir, "semdedup_member_2level", build),
         n_salts=_n_salts(spark),
     ).orderBy("vec_id")
 

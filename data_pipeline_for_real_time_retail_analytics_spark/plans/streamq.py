@@ -6,12 +6,12 @@ of the events table) and surface the *streaming* result through the
 driver's DuckDB oracle gate — proving stream/batch equivalence under the
 same rows+schema+hash check the batch queries face, not just in pytest.
 
-Mechanics: the events table is staged once per call to a temp directory
-as microsecond-timestamp parquet (the raw testdata is TIMESTAMP(NANOS),
-which the streaming file source cannot ingest directly), a file-source
-stream reads it, the windowed/session aggregation runs to completion
-with ``outputMode('complete')`` into a memory sink, and the drained
-result is returned as a normal DataFrame.
+Mechanics: the events table is staged once per application to a
+staging directory as microsecond-timestamp parquet (the raw testdata is
+TIMESTAMP(NANOS), which the streaming file source cannot ingest
+directly), a file-source stream reads it, the windowed/session
+aggregation runs to completion with ``outputMode('complete')`` into a
+memory sink, and the drained result is returned as a normal DataFrame.
 
 Scale: the staging hop is a test-harness artifact only — production
 input is already µs parquet / Delta and streams directly. The streaming
@@ -24,9 +24,10 @@ src/ingestion/change_detection.py:93-134 (windowed processing loop).
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,32 +41,30 @@ from data_pipeline_for_real_time_retail_analytics_spark.streaming.ingest import 
     windowed_aggregate,
 )
 
-# staged-table cache: one staging hop per (Spark application, sf_dir,
-# table, file count), so a long driver session that re-drives these
-# queries leaves /tmp flat instead of accreting one copy of the table
-# per call
-_STAGED: dict[tuple[str, str, str, int | None], str] = {}
+from .shared import shared, work_dir
 
 
 def stage_table(
     spark: SparkSession, sf_dir: str, table: str, n_files: int | None = None
 ) -> str:
-    """Write ``table`` as a streaming-readable (µs ts) parquet dir.
+    """Write ``table`` as a streaming-readable (µs ts) parquet dir, once
+    per (application, sf_dir, table, n_files), into a ``work_dir`` that
+    is removed when the process exits.
 
     ``n_files`` repartitions the rows into that many files first, so a
     ``maxFilesPerTrigger=1`` drive runs that many micro-batches; by
     default the table keeps its own file layout."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), table, n_files)
-    cached = _STAGED.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    out = tempfile.mkdtemp(prefix=f"streamq_{table}_")
-    df = load_table(spark, sf_dir, table)
-    if n_files is not None:
-        df = df.repartition(n_files)
-    df.write.mode("overwrite").parquet(out)
-    _STAGED[key] = out
-    return out
+    tag = f"stage_{table}" if n_files is None else f"stage_{table}_{n_files}"
+
+    def build() -> str:
+        out = work_dir(spark, sf_dir, tag)
+        df = load_table(spark, sf_dir, table)
+        if n_files is not None:
+            df = df.repartition(n_files)
+        df.write.mode("overwrite").parquet(out)
+        return out
+
+    return shared(spark, sf_dir, tag, build)
 
 
 #: state-store partition count for the streaming correctness queries.
@@ -81,6 +80,25 @@ def stage_table(
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
+@contextmanager
+def _stream_scope(spark: SparkSession) -> Iterator[str]:
+    """Scratch scope of one stream drive: yields a fresh directory for
+    its checkpoint (and any staging), with the session's shuffle
+    partitions at ``STREAM_SHUFFLE_PARTITIONS`` — the setting binds a
+    stream only at its start. On exit, failed or not, the previous
+    setting is restored and the directory deleted."""
+    scratch = tempfile.mkdtemp(prefix="streamq_")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+        )
+        yield scratch
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 def _drain(
     spark: SparkSession, plan: DataFrame, name: str, output_mode: str = "complete"
 ) -> DataFrame:
@@ -88,25 +106,14 @@ def _drain(
 
     The sink name is deterministic per query so a repeated drive replaces
     the previous run's memory table instead of stacking a new one, and
-    the checkpoint dir — useless once an AvailableNow run has drained
-    into a memory sink — is deleted before returning. Aggregations drain
-    in ``complete`` mode; stream-stream joins require ``append`` (their
-    inner matches emit exactly once as found). The session's shuffle
-    partitions are dialed to ``STREAM_SHUFFLE_PARTITIONS`` around the
-    stream start (the only moment the setting binds a stream) and always
-    restored."""
+    the checkpoint — useless once an AvailableNow run has drained into a
+    memory sink — lives in a ``_stream_scope``. Aggregations drain in
+    ``complete`` mode; stream-stream joins require ``append`` (their
+    inner matches emit exactly once as found)."""
     spark.catalog.dropTempView(name)
-    ckpt = tempfile.mkdtemp(prefix="streamq_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
-        )
+    with _stream_scope(spark) as ckpt:
         q = run_available_now(plan, ckpt, queryName=name, output_mode=output_mode)
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -130,13 +137,7 @@ def _drain_overlapped(
     never changes aggregation/join VALUES, only task granularity, and
     the checkpoint pins the rows before the conf is restored."""
     spark.catalog.dropTempView(name)
-    ckpt = tempfile.mkdtemp(prefix="streamq_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    q = None
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
-        )
+    with _stream_scope(spark) as ckpt:
         q = (
             plan.writeStream.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -145,15 +146,13 @@ def _drain_overlapped(
             .outputMode(output_mode)
             .start()
         )
-        batch = batch_df.localCheckpoint()  # overlaps the drive
-        q.awaitTermination()
-    finally:
-        # a failed batch action must not leave the stream running, nor
-        # delete the checkpoint dir under it
-        if q is not None:
+        try:
+            batch = batch_df.localCheckpoint()  # overlaps the drive
+            q.awaitTermination()
+        finally:
+            # a failed batch action must not leave the stream running
+            # while the scope deletes its checkpoint
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name), batch
 
 

@@ -19,8 +19,17 @@ production sequence deterministically in ONE AvailableNow execution:
    (``spark.sql.streaming.noDataMicroBatches.enabled``, default true,
    honored under AvailableNow) then evicts the expired join state and
    flushes every NULL-row completion before the query terminates;
-3. read the sink, drop sentinel traffic, localCheckpoint so the temp
-   dirs can be deleted before returning.
+3. read the sink, drop sentinel traffic, localCheckpoint so the
+   scratch directory can be deleted before returning.
+
+The drive is exact only if ONE micro-batch reads every staged file. If
+the file source split them over several batches (a
+``maxFilesPerTrigger``, say) and a sentinel landed in an earlier batch,
+the watermark would pass real rows not yet read, and the join would
+drop them as late data. The staged files are read with no per-trigger
+limit, and after every drive ``_check_one_data_batch`` checks the
+query's progress: exactly one batch with input, holding every staged
+row (each staging write counts its rows with an ``Observation``).
 
 r14 (guide §1/§2.4): this was a TWO-phase drive — drain, append
 sentinels, drain again over the same checkpoint — which paid a second
@@ -53,18 +62,16 @@ runs in tests/test_oracle_parity.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import os
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
 from ..sources import load_table
 from ..streaming.ingest import interval_join
-from .streamq import STREAM_SHUFFLE_PARTITIONS
+from .streamq import _stream_scope
 
 #: event-time watermarks require TIMESTAMP (ltz) columns — the staged
 #: parquet round-trips load_table's NTZ timestamps, so the stream
@@ -113,6 +120,19 @@ def _click_purchase_frames(
     return clicks, purchases
 
 
+def _check_one_data_batch(progress: list, staged_rows: int) -> None:
+    """Raise unless exactly one micro-batch read input, and it read all
+    ``staged_rows`` (both sides, sentinels included): the condition under
+    which the single drive is exact (module docstring)."""
+    data = [p["numInputRows"] for p in progress if p["numInputRows"] > 0]
+    if data != [staged_rows]:
+        raise RuntimeError(
+            f"outer-join drive read its {staged_rows} staged rows in "
+            f"micro-batches of {data}; the single-drive emission needs "
+            "exactly one data batch"
+        )
+
+
 def q_stream_click_purchases_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -136,35 +156,34 @@ def q_stream_click_purchases_outer(
         sent_ts.alias("purchase_ts"),
         F.lit(0.0).alias("purchase_value"),
     )
-    ldir = tempfile.mkdtemp(prefix="streamq3_clicks_")
-    rdir = tempfile.mkdtemp(prefix="streamq3_purch_")
-    ckpt = tempfile.mkdtemp(prefix="streamq3_ckpt_")
-    outdir = tempfile.mkdtemp(prefix="streamq3_out_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    obs_clicks, obs_purch = Observation(), Observation()
+    with _stream_scope(spark) as scratch:
+        ldir, rdir, ckpt, outdir = (
+            os.path.join(scratch, d) for d in ("clicks", "purch", "ckpt", "out")
+        )
         # the two staging writes are independent jobs — submit both and
         # let the scheduler back-fill (guide §2.6 overlap-independent-
         # jobs); actions are only sequential when the driver calls them
-        # sequentially
+        # sequentially. Each counts its rows with an Observation for the
+        # single-batch check below (no extra job).
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [
                 pool.submit(
                     clicks.unionByName(sent_click)
+                    .observe(obs_clicks, F.count(F.lit(1)).alias("rows"))
                     .write.mode("overwrite")
                     .parquet,
                     ldir,
                 ),
                 pool.submit(
                     purchases.unionByName(sent_purch)
+                    .observe(obs_purch, F.count(F.lit(1)).alias("rows"))
                     .write.mode("overwrite")
                     .parquet,
                     rdir,
                 ),
             ]:
                 f.result()
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
-        )
         ls = spark.readStream.schema(_CLICKS_SCHEMA).parquet(ldir)
         rs = spark.readStream.schema(_PURCHASES_SCHEMA).parquet(rdir)
         joined = interval_join(
@@ -186,7 +205,11 @@ def q_stream_click_purchases_outer(
         )
         q.awaitTermination()
         q.stop()
-        out = (
+        _check_one_data_batch(
+            q.recentProgress,
+            obs_clicks.get["rows"] + obs_purch.get["rows"],
+        )
+        return (
             spark.read.parquet(outdir)
             .where(F.col("user_id") >= 0)
             .select(
@@ -200,14 +223,9 @@ def q_stream_click_purchases_outer(
             .orderBy(
                 "click_id", F.col("purchase_id").asc_nulls_first()
             )
-            # materialize off the temp dirs so they can be deleted
+            # materialize off the scratch dir so it can be deleted
             .localCheckpoint()
         )
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        for d in (ldir, rdir, ckpt, outdir):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 QUERIES = {

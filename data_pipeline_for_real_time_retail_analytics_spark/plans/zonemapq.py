@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..operators.zonemap import build_file_zonemaps, zonemap_scan
 from ..sources import load_table
 from ..sources.sink import WarehouseSink
-from .scaleops import _work_dir
+from .shared import work_dir
 
 #: range-clustered layout width (files); at sf0.01 each file owns
 #: ~1/16th of the o_orderdate range
@@ -38,7 +38,7 @@ PRICE_LO, PRICE_HI = 100_000.0, 200_000.0
 
 
 def _clustered_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    out = _work_dir(spark, sf_dir, "zonemap_orders")
+    out = work_dir(spark, sf_dir, "zonemap_orders")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )

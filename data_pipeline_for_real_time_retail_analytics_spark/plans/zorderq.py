@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.zorder import with_z_value, zorder_compact
 from ..sources import load_table
-from .scaleops import _work_dir
+from .shared import work_dir
 
 #: per-column resolution of the Morton code (2 cols × 8 bits = 16-bit z)
 Z_BITS = 8
@@ -65,8 +65,8 @@ def q_zordered_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scatter → OPTIMIZE ZORDER → read back; content must be exactly
     the input projection (pure layout, like q_compacted_corpus)."""
     grid = _orders_grid(spark, sf_dir)
-    scattered = _work_dir(spark, sf_dir, "zorder_src")
-    clustered = _work_dir(spark, sf_dir, "zorder_dest")
+    scattered = work_dir(spark, sf_dir, "zorder_src")
+    clustered = work_dir(spark, sf_dir, "zorder_dest")
     # hash-scatter on the non-cluster key: every file holds every
     # customer and every day — nothing prunes before the rewrite
     grid.repartition(SCATTER_FILES, "o_orderkey").write.mode(

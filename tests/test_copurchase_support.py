@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_for_real_time_retail_analytics_spark.plans import (
     copurchase,
+    shared,
 )
 from data_pipeline_for_real_time_retail_analytics_spark.sources import (
     load_table,
@@ -13,7 +14,7 @@ from data_pipeline_for_real_time_retail_analytics_spark.sources import (
 
 
 def test_pair_support_equals_self_join_reference(spark, sf_dir):
-    copurchase.clear_caches()
+    shared.clear()
     got = sorted(
         tuple(r)
         for r in copurchase.pair_support(spark, sf_dir).collect()
@@ -35,4 +36,4 @@ def test_pair_support_equals_self_join_reference(spark, sf_dir):
     )
     assert got == ref
     assert len(got) > 0
-    copurchase.clear_caches()
+    shared.clear()

@@ -252,17 +252,18 @@ def test_triangles_on_known_graph(spark):
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
     import data_pipeline_for_real_time_retail_analytics_spark.plans.trianglesq as T
     # pair mining moved to the shared plans/copurchase materialization
-    # (r10): patch the load there and drop its per-application cache so
-    # neither this fake table nor a previous test's frame leaks through
+    # (r10): patch the load there and drop the shared memo so neither
+    # this fake table nor a previous test's frame leaks through
     import data_pipeline_for_real_time_retail_analytics_spark.plans.copurchase as CP
+    from data_pipeline_for_real_time_retail_analytics_spark.plans import shared
 
     orig = CP.load_table
-    CP.clear_caches()
+    shared.clear()
     try:
         CP.load_table = lambda spark, sf_dir, name: li
         got = {r.part: r.n_triangles
                for r in T.q_copurchase_triangles(spark, "ignored").collect()}
     finally:
         CP.load_table = orig
-        CP.clear_caches()
+        shared.clear()
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}

@@ -254,7 +254,7 @@ def test_term_skewed_corpus_partial_aggregates(spark):
         ).alias("text"),
     ).repartition(16)
 
-    tfidf = tfidf_top_terms(docs, n_docs=n)
+    tfidf = tfidf_top_terms(docs)
     plan = tfidf._jdf.queryExecution().executedPlan().toString()
     assert "partial_count" in plan, "doc-frequency aggregate lost map-side combine"
     # correctness under skew: the hot term's document frequency is exact
@@ -393,3 +393,40 @@ def test_pagerank_rank_updates_are_broadcast_joins(spark, sf_dir):
             node_joins,
         )
         assert "SortMergeJoin [node#" not in plan, name
+
+
+def test_pagerank_top_k_takes_before_the_window(spark, sf_dir):
+    """The unpartitioned ``row_number() <= TOP_K`` over the ranked nodes
+    is planned as a per-partition TakeOrderedAndProject below the
+    Window, so only TOP_K rows reach the Window's single partition (the
+    "No Partition Defined" log line is all that is left of the one
+    partition)."""
+    from data_pipeline_for_real_time_retail_analytics_spark.plans import (
+        pagerankq,
+        wpagerankq,
+    )
+
+    for mod, q in (
+        (pagerankq, pagerankq.q_part_pagerank),
+        (wpagerankq, wpagerankq.q_part_pagerank_weighted),
+    ):
+        lines = _plan(q(spark, sf_dir)).splitlines()
+        at = [i for i, line in enumerate(lines) if "Window [row_number()" in line]
+        assert len(at) == 1, q.__name__
+        assert f"TakeOrderedAndProject(limit={mod.TOP_K}," in lines[at[0] + 1], (
+            q.__name__,
+            lines[at[0] + 1],
+        )
+
+
+def test_tfidf_build_starts_no_job(spark, sf_dir):
+    """TF-IDF's N is a scalar subquery of the plan, so once the corpus
+    schema is known, building the query starts no Spark job."""
+    from test_sources import _jobs_started
+
+    from data_pipeline_for_real_time_retail_analytics_spark.plans.llm import (
+        q_tfidf_top_terms,
+    )
+
+    load_table(spark, sf_dir, "documents")
+    assert _jobs_started(spark, lambda: q_tfidf_top_terms(spark, sf_dir)) == 0

@@ -48,3 +48,24 @@ def test_outer_semantics_non_vacuous(result):
     assert not set(unmatched["click_id"]) & set(matched["click_id"])
     # no sentinel traffic leaks into the result
     assert (result["user_id"] >= 0).all()
+
+
+@pytest.mark.parametrize(
+    "rows, ok",
+    [
+        ([10, 0], True),  # one data batch, then the no-data flush
+        ([10], True),
+        ([6, 4, 0], False),  # the staged files split over two batches
+        ([9, 0], False),  # a staged row never read
+        ([0], False),
+    ],
+)
+def test_single_data_batch_check(rows, ok):
+    """The drive's progress must show exactly one batch with input, and
+    it must hold every staged row (here 10, sentinels included)."""
+    progress = [{"batchId": i, "numInputRows": n} for i, n in enumerate(rows)]
+    if ok:
+        streamq3._check_one_data_batch(progress, 10)
+    else:
+        with pytest.raises(RuntimeError, match="exactly one data batch"):
+            streamq3._check_one_data_batch(progress, 10)

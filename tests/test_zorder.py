@@ -206,6 +206,6 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
 
 def test_zordered_orders_hits_target_files(spark):
     zorderq.q_zordered_orders(spark, SF_DIR)  # materializes the layout
-    dest = zorderq._work_dir(spark, SF_DIR, "zorder_dest")
+    dest = zorderq.work_dir(spark, SF_DIR, "zorder_dest")
     files = glob.glob(dest + "/part-*.parquet")
     assert len(files) == zorderq.ZORDER_FILES
